@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Plan-drift tripwire set (consumed by PlanShapes/PlanDriftSpec):
     * one representative per operator family. Since round 10 the
@@ -74,60 +73,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.runCpus
     // Committed by default (repo cwd): the stdout line is truncated to
     // the harness's tail capture (~72 visible queries), which made the
     // r8→r9 noise diagnosis needlessly slow — the full per-query map in
     // a line-per-query committed artifact makes every round-over-round
     // timing diff a one-line `git diff bench_results.json` read.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_results.json")
-    GraftSession.quietStartup()
-    // Scale-aware shuffle sizing (round 15): cores at bench SF — the
-    // round-14 blanket 4×-cores default cost a measured +15% bench
-    // total / up to 2.2× per query at sf0.1 — growing with input
-    // bytes toward the spill-safe sf100 value. Rationale and both
-    // measurements: GraftSession.shufflePartitions.
-    val shuffleParts =
-      GraftSession.shufflePartitions(cpus.toInt, GraftSession.dirBytes(sfDir))
-    val advisoryMb = 128
-    // Whole-stage-codegen class-cache capacity (round 18, measured via
-    // BenchFocus/CodegenMetrics): the default is 100 entries while
-    // several registered pipelines alone compile ~100+ units
-    // (dedup_semantic_coarse 126 pre-rewrite, sim_pq_train 153 before
-    // its r18 fusing) — a query bigger than the cache EVICTS ITS OWN
-    // generated classes mid-run and re-pays Janino on every execution
-    // ("warm" structurally impossible; dedup_clusters re-compiled 66
-    // units per warm run, dedup_semantic_coarse 87). 2000 entries holds
-    // the working set of adjacent queries in the 313-query session for
-    // tens of MB of driver memory. NOT a local-mode tune: the compile
-    // cache lives on the driver at any cluster size and the workload
-    // (number of distinct plan shapes) is scale-independent.
-    // Measured (BenchFocus, warm-min, 100 → 2000 entries):
-    // dedup_clusters 2.72 → 2.22 s (+66 → 0 recompiles/run),
-    // dedup_semantic_coarse 4.23 → 2.46, dedup_apply 3.53 → 2.16,
-    // stats_mad_outliers 2.08 → 1.81.
-    val codegenCache = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000")
-    // AQE coalescing posture knob (round 19, r18 VERDICT task 5).
-    // MEASURED AND REJECTED as a blanket flip: parallelismFirst=false
-    // (honor the 128 MB advisory) collapses small-byte CPU-HEAVY
-    // post-shuffle stages to 1 reducer — dedup_ngram_jaccard lost
-    // 2.7×, text_repetition 1.9× at sf0.1 (OPTIMIZATION_r19.md
-    // task 5) — so the Spark default stays. The small-input fix that
-    // DID measure well lives in GraftSession.shufflePartitions (the
-    // input-derived ~2 MB/task small-end floor). Knob kept for A/Bs.
-    val pFirst = sys.env.getOrElse("SPARK_GRAFT_AQE_PFIRST", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts.toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        (advisoryMb * 1024L * 1024).toString)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", pFirst)
-      .config("spark.sql.codegen.cache.maxEntries", codegenCache)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBenignLogs()
+    val spark = GraftSession.forRun(cpus, sfDir)
+    // The session's sizing, recorded as provenance in the result.
+    val shuffleParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val advisoryMb = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes").toLong >> 20
+    val codegenCache = GraftSession.CodegenCacheEntries
     // noop sink: forces full computation of every output column —
     // count() would let Catalyst prune the very work being measured.
     // Failed queries are recorded with a NEGATIVE elapsed time and
@@ -187,7 +144,7 @@ object Bench {
     // ratio to annotate flags that late-session drift covers.
     def canaryOnce(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
+      spark.range(0L, 200000000L, 1L, cpus)
         .selectExpr("xxhash64(id) % 1000000 as k")
         .groupBy("k").count()
         .write.format("noop").mode("overwrite").save()

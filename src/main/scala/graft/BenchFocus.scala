@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query bench isolation harness (round 18, VERDICT task 1): the
   * exact Bench session + noop-sink protocol for a NAMED subset of the
   * registry, with per-run whole-stage-codegen compile accounting read
@@ -23,29 +21,8 @@ import org.apache.spark.sql.SparkSession
 object BenchFocus {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    GraftSession.quietStartup()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        GraftSession.shufflePartitions(cpus, GraftSession.dirBytes(sfDir)).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        (128L * 1024 * 1024).toString)
-      // Whole-stage-codegen class-cache capacity (STATIC conf, Spark
-      // default 100). Default matches Bench's round-18 setting so focus
-      // numbers stay comparable; override to 100 to reproduce the
-      // capacity-thrash diagnosis (recompiles → 0 with a big cache =
-      // capacity; unchanged = sources genuinely differ per run).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      // mirror Bench's AQE coalescing knob so focus A/Bs are comparable
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PFIRST", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBenignLogs()
+    val cpus = GraftSession.runCpus
+    val spark = GraftSession.forRun(cpus, sfDir)
 
     // Spark's codegen source is a singleton object with codahale
     // counters; METRIC_COMPILATION_TIME is a Histogram whose COUNT is

@@ -2,75 +2,107 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions._
 
-/** Session-extension registration for graft's custom Catalyst
-  * functions, so any session created with
-  * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`) has `dot_product` and
-  * `simhash_agg` available in SQL and `expr(...)` without per-query
-  * registration calls.
+/** The one place graft's SQL functions and optimizer rule enter a
+  * session. Every session built by [[GraftSession.builder]] (or with
+  * `spark.sql.extensions=graft.GraftExtensions`) has all 14 functions
+  * in SQL and `expr(...)`, and [[plans.RewriteDotProduct]] in its
+  * optimizer; operators never register anything per call.
+  *
+  * `bloom_agg(xxhash64(k), estItems, numBits)` and
+  * `bloom_might_contain(bf, xxhash64(k))` expose Spark's own bloom
+  * pair, which the optimizer injects for runtime join pruning but does
+  * not register: an explicit membership gate built in one job and
+  * applied in another (see `scale_runtime_filter`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[functions.DotProduct].getName, "dot_product"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        functions.DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("simhash_agg"),
-      new ExpressionInfo(classOf[functions.SimHashAgg].getName, "simhash_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        functions.SimHashAgg(exprs.head).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[functions.RollingHash].getName, "rolling_hash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        functions.RollingHash(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("mg_topk"),
-      new ExpressionInfo(classOf[functions.MisraGriesAgg].getName, "mg_topk"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        functions.MisraGriesAgg(exprs(0), exprs(1)).toAggregateExpression()))
+    def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Unit =
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    fn("dot_product", classOf[DotProduct])(a => DotProduct(a(0), a(1)))
+    fn("simhash_agg", classOf[SimHashAgg])(a => SimHashAgg(a.head).toAggregateExpression())
+    fn("rolling_hash", classOf[RollingHash])(a => RollingHash(a(0), a(1)))
+    fn("mg_topk", classOf[MisraGriesAgg])(a => MisraGriesAgg(a(0), a(1)).toAggregateExpression())
+    fn("tdigest_quantile", classOf[TDigestAgg])(
+      a => TDigestAgg(a(0), a(1), a(2)).toAggregateExpression())
+    fn("tdigest_sketch", classOf[TDigestSketchAgg])(
+      a => TDigestSketchAgg(a(0), a(1)).toAggregateExpression())
+    fn("tdigest_merge_quantile", classOf[TDigestMergeAgg])(
+      a => TDigestMergeAgg(a(0), a(1), a(2)).toAggregateExpression())
+    fn("tdigest_quantile_of", classOf[TDigestQuantileOf])(a => TDigestQuantileOf(a(0), a(1), a(2)))
+    fn("bitmap_construct_obj_agg", classOf[BitmapConstructObjAgg])(
+      a => BitmapConstructObjAgg(a(0)).toAggregateExpression())
+    fn("bitmap_or_obj_agg", classOf[BitmapOrObjAgg])(
+      a => BitmapOrObjAgg(a(0)).toAggregateExpression())
+    fn("bitmap_and", classOf[BitmapAnd])(a => BitmapAnd(a(0), a(1)))
+    fn("bloom_agg", classOf[BloomFilterAggregate])(a => new BloomFilterAggregate(a(0), a(1), a(2)))
+    fn("bloom_might_contain", classOf[BloomFilterMightContain])(
+      a => BloomFilterMightContain(a(0), a(1)))
+    // `bpe_subwords(words [, extra_piece...])`: trailing string literals
+    // extend the fixture vocab with learned merges. The builder reads
+    // TextOps.bpeVocab only when the function is used, so starting a
+    // session does not initialise TextOps.
+    fn("bpe_subwords", classOf[BpeSubwords])(a => BpeSubwords(a.head, operators.TextOps.bpeVocab,
+      a.tail.map(_.eval().asInstanceOf[UTF8String].toString)))
     e.injectOptimizerRule(_ => plans.RewriteDotProduct)
   }
 }
 
-/** Recommended session builder for the engine: shuffle parallelism
-  * matched to cores (not the 200 default), AQE with skew handling, UTC,
-  * and the graft extensions. This is the user-facing entry point; the
-  * driver-run mains (Verify/Bench) configure equivalently.
+/** The session factory: every graft session — user, main and test — is
+  * built by [[builder]], which adds [[GraftExtensions]], AQE with skew
+  * handling, UTC and a 2000-entry codegen cache to Spark's builder.
+  * The repo's mains start theirs with [[forRun]]; the test and gate
+  * session is `PlanShapes.gateSession`.
   */
 object GraftSession {
-  /** Apply graft's optimizer rules to an already-built session — the
-    * driver-run mains (Verify/Bench/plan dumps) and the shared test
-    * session create plain sessions, so they opt in here; sessions
-    * built through [[GraftExtensions]] get the same rules via
-    * injectOptimizerRule. Idempotent. */
-  def applyOptimizations(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(plans.RewriteDotProduct))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ plans.RewriteDotProduct
+  /** Whole-stage-codegen class-cache capacity (a static conf; Spark's
+    * default is 100). Several registered pipelines compile 100+ units
+    * per run (dedup_semantic_coarse 126, sim_pq_train 153 before its
+    * round-18 fusing), so at 100 a query evicts its own classes and
+    * re-pays Janino on every execution. Measured with BenchFocus,
+    * warm-min, 100 → 2000 entries: dedup_clusters 2.72 → 2.22 s (66 → 0
+    * recompiles per run), dedup_semantic_coarse 4.23 → 2.46,
+    * dedup_apply 3.53 → 2.16. The cache lives on the driver, so the
+    * value holds at any cluster size. */
+  val CodegenCacheEntries = 2000
+
+  /** Cores for the repo's mains: `SPARK_GRAFT_CPUS`, else the
+    * machine's core count. */
+  def runCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** Session for the repo's mains: `local[cpus]`, shuffle partitions
+    * sized to the bytes under `dataDir` ([[shufflePartitions]]), no UI,
+    * WARN logging with the benign floods quieted. `tune` adds a main's
+    * own `.config`s on top of the builder. */
+  def forRun(cpus: Int, dataDir: String,
+      tune: SparkSession.Builder => SparkSession.Builder = b => b): SparkSession = {
+    quietStartup()
+    val spark = tune(builder(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions(cpus, dirBytes(dataDir)).toString)
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    quietBenignLogs()
+    spark
+  }
 
   /** Quiet the benign-but-flooding log categories in the driver-run
     * mains: `WindowExec`'s "No Partition Defined" warning fires on
     * every metadata-sized global window (quantile-literal relations,
     * ≤k-row model tables — each site's bounded-cardinality argument is
-    * in PLANS.md), and `SimpleFunctionRegistry` warns "replaced a
-    * previously registered function" every time a fresh session
-    * re-registers graft's extension functions — both drown the
-    * harness's ~2000-char output tail in dozens of identical lines per
-    * run. Opt-in from mains only: user sessions keep default logging,
-    * so a REAL unpartitioned window over fact data still warns where
-    * it matters. */
+    * in PLANS.md) — it drowns the harness's ~2000-char output tail in
+    * dozens of identical lines per run. Opt-in from mains only: user
+    * sessions keep default logging, so a REAL unpartitioned window over
+    * fact data still warns where it matters. */
   def quietBenignLogs(): Unit =
     try {
       org.apache.logging.log4j.core.config.Configurator.setLevel(
         "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry",
-        org.apache.logging.log4j.Level.ERROR)
       // DAGScheduler's "Broadcasting large task binary" WARN fires for
       // every stage whose serialized closure tops 1 MiB — at local[32]
       // with broadcast dims that is most stages, and it floods the
@@ -182,6 +214,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (128L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
   }
 
   /** Cluster profile for the 100 TB deployment the engine targets

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** nprobe recall/cost curve for the IVF-PQ shortlist (round 18,
   * VERDICT task 3). Two measured points existed (nprobe=1 recall
   * 0.20, nprobe=3 recall 0.33); this sweeps the knob through the same
@@ -16,17 +14,7 @@ object IvfPqSweep {
     val sfDir = args(0)
     val probes = if (args.length > 1) args.tail.map(_.toInt).toSeq
                  else Seq(1, 2, 3, 5, 8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    GraftSession.quietStartup()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        GraftSession.shufflePartitions(cpus, GraftSession.dirBytes(sfDir)).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBenignLogs()
+    val spark = GraftSession.forRun(GraftSession.runCpus, sfDir)
     for (np <- probes) {
       def once(): (Double, org.apache.spark.sql.Row) = {
         val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Registry-WIDE static plan audit (round 18, optimization guide §1/§7):
@@ -26,13 +25,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("plans/r19/plan_audit.tsv")
-    GraftSession.quietStartup()
-    val spark = SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.quietBenignLogs()
+    val spark = GraftSession.forRun(GraftSession.runCpus, sfDir)
 
     val rows = new scala.collection.mutable.ArrayBuffer[String]
     val flags = new scala.collection.mutable.ArrayBuffer[String]

@@ -15,11 +15,7 @@ object PlanDump {
     // the round-18 optimization artifacts (plans/r18/*.txt) commit.
     val fmtMode = args.contains("-formatted")
     val rest = args.filterNot(a => a == "-final" || a == "-formatted")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forRun(GraftSession.runCpus, rest(0))
     for (q <- rest.tail) {
       println(s"===== $q =====")
       val df = SparkEntry.queries(q)(spark, rest(0))

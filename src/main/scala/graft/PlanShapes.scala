@@ -19,8 +19,7 @@ import java.nio.file.{Files, Paths}
   *
   * The fingerprints are config-sensitive (partition counts, AQE
   * thresholds, data sizes feed strategy choices), so the generator
-  * pins the EXACT TestSpark session shape: local[4], 4 shuffle
-  * partitions, UTC, sf0.001.
+  * runs in the same [[gateSession]] as TestSpark, at sf0.001.
   *
   * Regenerate after an intentional plan change:
   *   sbt "runMain graft.PlanShapes"         # rewrites tools/plan_shapes.json
@@ -28,6 +27,19 @@ import java.nio.file.{Files, Paths}
   */
 object PlanShapes {
   val ArtifactPath = "tools/plan_shapes.json"
+
+  /** The gate session, shared by TestSpark, [[main]] and SeedDump:
+    * [[GraftSession.builder]] on local[4] with 4 shuffle partitions
+    * (UTC comes from the builder). Plan fingerprints, `Tables.fanout`
+    * widths and the committed gate artifacts all assume this shape. */
+  def gateSession(): SparkSession = {
+    val s = GraftSession.builder("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("ERROR")
+    s
+  }
 
   def normalize(plan: String): String = plan
     .replaceAll("#\\d+", "#")
@@ -103,14 +115,7 @@ object PlanShapes {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = gateSession()
     val entries = Bench.headline.toSeq.sorted.map { q =>
       s"""  "$q": "${shapeHash(spark, sfDir, q)}""""
     }

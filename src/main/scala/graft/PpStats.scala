@@ -10,15 +10,7 @@ package graft
   */
 object PpStats {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    GraftSession.quietStartup()
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions",
-        GraftSession.shufflePartitions(cpus, GraftSession.dirBytes(args(0))).toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBenignLogs()
+    val spark = GraftSession.forRun(GraftSession.runCpus, args(0))
     val dir = args(0)
     val which = if (args.length > 1) args.tail.toSet else Set("jaccard", "containment")
     val tok = operators.Dedup.shingleTok(spark, dir)

@@ -2,13 +2,7 @@ package graft
 
 object QSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[16]").config("spark.sql.shuffle.partitions",
-        GraftSession.shufflePartitions(16, GraftSession.dirBytes(args(0))).toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBenignLogs()
+    val spark = GraftSession.forRun(GraftSession.runCpus, args(0))
     for (q <- args.tail) {
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(q)(spark, args(0))

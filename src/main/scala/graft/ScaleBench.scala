@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Two-point scaling harness (round 12, VERDICT task 1): time the
   * named queries at TWO scale factors in one JVM and report the
   * per-query scaling exponent α = log(t_B/t_A) / log(|B|/|A|) — the
@@ -25,8 +23,7 @@ object ScaleBench {
     val dirB = args(1)
     val ratio = args(2).toDouble
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    GraftSession.quietStartup()
+    val cpus = GraftSession.runCpus
     // Shuffle sizing is SCALE-AWARE per data directory (round 15):
     // each (query, dir) pair runs at the partitions the engine would
     // use for that corpus size — cores until the input outgrows them,
@@ -36,26 +33,15 @@ object ScaleBench {
     // bounding the rule). shuffle.partitions is runtime-settable, so
     // the per-dir value is applied in time() below; the session
     // default here covers dirA.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        GraftSession.shufflePartitions(cpus.toInt, GraftSession.dirBytes(dirA)).toString)
-      // Make shuffle removal SYNCHRONOUS once GC surfaces the dead
-      // dependency (round 15): with the default fire-and-forget
-      // cleaner, decade-3 graph runs each left ~30 GiB of dead shuffle
-      // scratch behind (the [scale] WARN below measured it) and the
-      // NEXT run inherited a fuller disk — graph_communities sf100
-      // ENOSPC'd on garbage, not on its own live footprint.
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        (128L * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBenignLogs()
+    //
+    // Make shuffle removal SYNCHRONOUS once GC surfaces the dead
+    // dependency (round 15): with the default fire-and-forget
+    // cleaner, decade-3 graph runs each left ~30 GiB of dead shuffle
+    // scratch behind (the [scale] WARN below measured it) and the
+    // NEXT run inherited a fuller disk — graph_communities sf100
+    // ENOSPC'd on garbage, not on its own live footprint.
+    val spark = GraftSession.forRun(cpus, dirA,
+      _.config("spark.cleaner.referenceTracking.blocking.shuffle", "true"))
 
     // Local-dir scratch bytes (sum over spark.local.dir roots) — the
     // observable the GC-between-runs loop below is accountable to. -1
@@ -81,7 +67,7 @@ object ScaleBench {
       val fn = SparkEntry.queries(name)
       // Per-dir scale-aware partitions (see session comment above).
       spark.conf.set("spark.sql.shuffle.partitions",
-        GraftSession.shufflePartitions(cpus.toInt, GraftSession.dirBytes(dir)).toString)
+        GraftSession.shufflePartitions(cpus, GraftSession.dirBytes(dir)).toString)
       def once(): Double = {
         val t0 = System.nanoTime()
         fn(spark, dir).write.format("noop").mode("overwrite").save()

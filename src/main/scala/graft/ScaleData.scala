@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Content-keyed sf1 synthesis (round 12, VERDICT task 1): replicate
@@ -40,18 +40,10 @@ object ScaleData {
     val dst = args.lift(1).getOrElse("/tmp/graft_sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val K = args.lift(3).map(_.toLong).getOrElse(10000000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        GraftSession.shufflePartitions(cpus.toInt,
-          GraftSession.dirBytes(src) * copies).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBenignLogs()
+    val cpus = GraftSession.runCpus
+    // Partitions sized for the synthesized corpus, not the source.
+    val spark = GraftSession.forRun(cpus, src, _.config("spark.sql.shuffle.partitions",
+      GraftSession.shufflePartitions(cpus, GraftSession.dirBytes(src) * copies).toString))
 
     def off(c: String, i: Int): Column = col(c) + lit(K * i)
     def rep(base: DataFrame)(copy: (DataFrame, Int) => DataFrame): DataFrame =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,20 +8,7 @@ object Verify {
     // optional trailing args: restrict to these query names (local
     // iteration aid; the driver always runs the full set)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    GraftSession.quietStartup()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        GraftSession.shufflePartitions(cpus.toInt, GraftSession.dirBytes(sfDir)).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        (128L * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietBenignLogs()
+    val spark = GraftSession.forRun(GraftSession.runCpus, sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

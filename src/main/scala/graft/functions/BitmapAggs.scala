@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -119,19 +118,4 @@ case class BitmapOrObjAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): BitmapOrObjAgg =
     copy(child = newChildren(0))
-}
-
-object BitmapAggs {
-  /** Register `bitmap_construct_obj_agg(pos)` and
-    * `bitmap_or_obj_agg(bm)` (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_construct_obj_agg",
-      exprs => BitmapConstructObjAgg(exprs(0)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_or_obj_agg",
-      exprs => BitmapOrObjAgg(exprs(0)).toAggregateExpression(),
-      "built-in")
-  }
 }

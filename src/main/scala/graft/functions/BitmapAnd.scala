@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -56,12 +55,4 @@ case class BitmapAnd(left: Expression, right: Expression) extends BinaryExpressi
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BitmapAnd =
     copy(left = newLeft, right = newRight)
-}
-
-object BitmapAnd {
-  /** Expose as `bitmap_and(a, b)` in the session's function registry
-    * (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_and", exprs => BitmapAnd(exprs(0), exprs(1)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -83,15 +82,4 @@ case class BpeSubwords(child: Expression, vocab: Seq[String], extra: Seq[String]
 
   override protected def withNewChildInternal(newChild: Expression): BpeSubwords =
     copy(child = newChild)
-}
-
-object BpeSubwords {
-  /** Expose as `bpe_subwords(words [, extra_piece...])` (idempotent);
-    * trailing string-literal args extend the vocab with learned merges. */
-  def register(spark: SparkSession, vocab: Seq[String]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_subwords",
-      exprs => BpeSubwords(exprs.head, vocab,
-        exprs.tail.map(_.eval().asInstanceOf[UTF8String].toString)),
-      "built-in")
 }

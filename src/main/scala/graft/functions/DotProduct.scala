@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -71,12 +70,4 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
-}
-
-object DotProduct {
-  /** Expose as `dot_product(a, b)` in the session's function registry
-    * (idempotent) — callable via `expr("dot_product(...)")` and SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
 }

@@ -4,7 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -138,12 +137,4 @@ case class MisraGriesAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): MisraGriesAgg =
     copy(child = newChildren(0), kExpr = newChildren(1))
-}
-
-object MisraGriesAgg {
-  /** Register as `mg_topk(item, k)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_topk", exprs => MisraGriesAgg(exprs(0), exprs(1)).toAggregateExpression(),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -93,11 +92,4 @@ case class RollingHash(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): RollingHash =
     copy(left = newLeft, right = newRight)
-}
-
-object RollingHash {
-  /** Register as `rolling_hash(str, window)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs(0), exprs(1)), "built-in")
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -89,11 +88,4 @@ case class SimHashAgg(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): SimHashAgg =
     copy(child = newChildren.head)
-}
-
-object SimHashAgg {
-  /** Register as `simhash_agg(hash)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_agg", exprs => SimHashAgg(exprs.head).toAggregateExpression(), "built-in")
 }

@@ -4,7 +4,6 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -246,30 +245,6 @@ object TDigestBuffer {
     val lo = in.readDouble(); val hi = in.readDouble()
     if (n > 0) buf.setBounds(lo, hi)
     buf
-  }
-}
-
-object TDigestAgg {
-  /** Register `tdigest_quantile(x, delta, q)`, `tdigest_sketch(x,
-    * delta)`, `tdigest_merge_quantile(sketch, delta, q)` and the
-    * scalar `tdigest_quantile_of(sketch, delta, q)` (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tdigest_quantile",
-      exprs => TDigestAgg(exprs(0), exprs(1), exprs(2)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tdigest_sketch",
-      exprs => TDigestSketchAgg(exprs(0), exprs(1)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tdigest_merge_quantile",
-      exprs => TDigestMergeAgg(exprs(0), exprs(1), exprs(2)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tdigest_quantile_of",
-      exprs => TDigestQuantileOf(exprs(0), exprs(1), exprs(2)),
-      "built-in")
   }
 }
 

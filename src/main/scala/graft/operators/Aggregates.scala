@@ -172,7 +172,6 @@ object Aggregates {
     * sized. Sketch ⇒ no oracle; accuracy invariant-tested against the
     * exact per-type distribution. */
   private def aggTdigestReaggregate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TDigestAgg.register(spark)
     import graft.Tables.events
     val daily = events(spark, dir)
       .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
@@ -236,7 +235,6 @@ object Aggregates {
     * (PlanAudit catch). ObjectHashAggregate removes both sorts; the
     * 4 KB partials over the wire are unchanged. */
   private def aggBitmapDistinct(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BitmapAggs.register(spark)
     val monthly = lineitem(spark, dir)
       .groupBy(col("l_returnflag"), date_trunc("month", col("l_shipdate")).as("mon"),
         bitmap_bucket_number(col("l_partkey")).as("bkt"))
@@ -467,9 +465,6 @@ object Aggregates {
     * rows, no count-distinct shuffle of user ids. Spark ships
     * bitmap_or_agg but no AND; the custom expression fills the gap. */
   private def aggBitmapIntersect(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BitmapAnd.register(spark)
-    // hash-aggregable construct twin — see aggBitmapDistinct (round 18)
-    graft.functions.BitmapAggs.register(spark)
     val ev = Tables.events(spark, dir)
     def bm(t: String) = ev.filter(col("event_type") === t)
       .select(bitmap_bucket_number(col("user_id")).as("bkt"),

@@ -68,7 +68,6 @@ object Curation {
     * unit — 64 here, thousands at scale), then a (shard, seq) hash-agg
     * with map-side combine. No global ordering anywhere. */
   private def packSequences(spark: SparkSession, dir: String): DataFrame = {
-    TextOps.registerBpe(spark)
     val budget = 256L
     val nShards = 64
     val w = Window.partitionBy(col("shard_id")).orderBy(col("doc_id"))
@@ -97,7 +96,6 @@ object Curation {
     * shard_id, per-shard window, then a 64-row (shard count) final
     * aggregate. The manifest is metadata-sized by construction. */
   private def shardManifest(spark: SparkSession, dir: String): DataFrame = {
-    TextOps.registerBpe(spark)
     val budget = 256L
     val nShards = 64
     val w = Window.partitionBy(col("shard_id")).orderBy(col("doc_id"))
@@ -300,7 +298,6 @@ object Curation {
     * aggregate over the corpus + a 1-row budget broadcast; arithmetic
     * is rounded (r6) so the plan is cross-engine exact. */
   private def pipelineMixturePlan(spark: SparkSession, dir: String): DataFrame = {
-    TextOps.registerBpe(spark)
     val budgetShare = 0.5 // train on half the corpus tokens
     val weight = when(col("source") === "src0", 0.4)
       .when(col("source") === "src1", 0.3)
@@ -894,7 +891,6 @@ object Curation {
     * still overflows an executor). Produces the byte-identical set to
     * the oracle's flat window at any partitioning. */
   private def corpusBudgetSelect(spark: SparkSession, dir: String): DataFrame = {
-    TextOps.registerBpe(spark)
     val budget = 10000L
     val docs = documents(spark, dir).select(
       col("doc_id"),

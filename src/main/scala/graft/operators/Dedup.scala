@@ -188,7 +188,6 @@ object Dedup {
     * (a sort below a self-join is two wasted range exchanges); the
     * standalone query adds the presentation sort. */
   private def dedupSimhashCore(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.SimHashAgg.register(spark)
     fanout(documents(spark, dir))
       .select(col("doc_id"), explode(toks).as("word"))
       .withColumn("h", conv(substring(md5(col("word")), 1, 15), 16, 10).cast(LongType))
@@ -425,7 +424,6 @@ object Dedup {
     * `(h & 63) == 0` on the signed Long is exactly `hu % 64 == 0` on
     * the unsigned value. */
   private def dedupRollingChunks(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.RollingHash.register(spark)
     fanout(documents(spark, dir))
       .select(col("doc_id"), expr("rolling_hash(text, 16)").as("hashes"))
       .select(col("doc_id"),
@@ -479,7 +477,6 @@ object Dedup {
 
   private[graft] def dedupEmbeddingCapped(
       spark: SparkSession, dir: String, cap: Long): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val v = fanout(embeddings(spark, dir))
       .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
       .withColumn("nrm", sqrt(expr("dot_product(e, e)")))
@@ -503,7 +500,6 @@ object Dedup {
     * deterministic — the oracle embeds the SAME planes as literals and
     * recomputes identical buckets and cosines. */
   private def dedupEmbeddingLsh(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val bucket = embeddingPlanes.zipWithIndex.map { case (p, i) =>
       when(Similarity.dotLambda(col("e"), array(p.map(lit): _*)) > 0, lit(1L << i))
         .otherwise(lit(0L))

@@ -710,7 +710,6 @@ object Multimodal {
     * beyond the id join, which at scale co-locates when both modality
     * tables are bucketed by id (see join_bucketed). */
   private def mmTextEmbedJoin(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val vecs = embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
     documents(spark, dir)
@@ -757,7 +756,6 @@ object Multimodal {
     * the quantize pass is one broadcast join + per-row arithmetic; the
     * per-vector regroup shuffles (vec_id, dim) pairs once. */
   private def mmEmbedQuantize(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val v = Tables.fanout(Tables.embeddings(spark, dir))
       .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
     val dims = v.select(posexplode(col("e")).as(Seq("pos", "x")))
@@ -817,8 +815,6 @@ object Multimodal {
     * NOT inherit it: a sort below a self-join drags two full range
     * exchanges of every fingerprint into the plan for nothing). */
   private def mmSimhashCore(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.RollingHash.register(spark)
-    graft.functions.SimHashAgg.register(spark)
     documents(spark, dir)
       .select(col("doc_id"), col("text").cast(BinaryType).as("payload"))
       .select(col("doc_id"), explode(expr("rolling_hash(payload, 4)")).as("h"))

@@ -287,14 +287,13 @@ object ScalePatterns {
     * `scale_runtime_filter`: the optimizer's runtime filter only fires
     * inside one query's plan, but an ETL pipeline often builds the
     * selective side in ONE job and scans the 100 TB fact in ANOTHER.
-    * Registering Spark's own bloom pair (`functions.Bloom`) lets the
+    * Spark's own bloom pair (`bloom_agg`, `bloom_might_contain`) lets the
     * pipeline build the sketch explicitly (mergeable agg, one tiny
     * binary row), broadcast it, and gate fact rows BEFORE the join
     * shuffle. No false negatives + the exact join downstream ⇒ the
     * result is provably identical to the plain join the oracle runs;
     * false positives only cost shuffle bytes. */
   def bloomPrefilterJoin(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Bloom.register(spark)
     val dim = part(spark, dir).filter(col("p_size") === 1)
       .select(col("p_partkey"), col("p_brand"))
     // Build job: mergeable agg → ONE ~100 KB sketch row to the driver

@@ -40,7 +40,6 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   private def normed(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     fanout(embeddings(spark, dir))
       .select(col("vec_id"), col("label"),
         col("embedding").cast(ArrayType(DoubleType)).as("e"))
@@ -705,7 +704,6 @@ object Similarity {
     * a sequential-sum norm, all bitwise cross-engine ⇒ oracle-checked.
     */
   private def fnVector(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     fanout(embeddings(spark, dir))
       .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
       .select(
@@ -768,7 +766,6 @@ object Similarity {
     * deterministically under the final r6 — the float-sum error
     * (≈4 ulp of 4.0) is 9 orders below the 5e-7 rounding slack. */
   private def simMaxsimRerank(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.DotProduct.register(spark)
     val v = fanout(embeddings(spark, dir))
       .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
     val slotCols = (0 until 4).map(i => struct(lit(i.toLong).as("slot"),

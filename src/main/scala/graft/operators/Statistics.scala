@@ -184,7 +184,6 @@ object Statistics {
     * exactly-sorted fixture and asserts merge-stability across
     * repartitionings. */
   private def aggTdigestPercentile(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TDigestAgg.register(spark)
     // ONE digest per group, three scalar extractions (round 18): the
     // previous three independent tdigest_quantile aggregates each
     // built an identical digest over the same rows — 3× the sketch

@@ -58,7 +58,6 @@ object TextOps {
   }
 
   private def textTokenCount(spark: SparkSession, dir: String): DataFrame = {
-    registerBpe(spark)
     graft.Tables.fanout(documents(spark, dir)) // per-row regex work: spread single-split inputs
       .select(
         col("doc_id"),
@@ -125,13 +124,6 @@ object TextOps {
     ltrim(walk("toks"))
   }
 
-  /** Subword token count of a whole document given its word array —
-    * Σ pieces per word, 0 for an empty doc. */
-  /** Register the codegen'd segmentation expression (idempotent) —
-    * every caller of `subwords`/`subwordCount` goes through here. */
-  private[graft] def registerBpe(spark: SparkSession): Unit =
-    graft.functions.BpeSubwords.register(spark, bpeVocab)
-
   /** Flattened piece stream of a word array under the fixture vocab
     * (+ optional learned merge pieces), via the compiled expression —
     * the hot path every token-billed op shares. `bpeWordWith` above is
@@ -140,6 +132,8 @@ object TextOps {
   private[graft] def subwords(tk: Column, extra: Column*): Column =
     call_function("bpe_subwords", (tk +: extra): _*)
 
+  /** Subword token count of a whole document given its word array —
+    * Σ pieces per word, 0 for an empty doc. */
   private[graft] def subwordCount(tk: Column): Column =
     size(subwords(tk)).cast(LongType)
 
@@ -158,7 +152,6 @@ object TextOps {
     * window — on a stream it needs no watermark and runs in append
     * mode with zero state. */
   private[graft] def bpeTokenizeCols(docs: DataFrame): DataFrame = {
-    registerBpe(docs.sparkSession)
     docs
       .select(col("doc_id"), toks.as("tk"))
       .select(col("doc_id"),
@@ -192,7 +185,6 @@ object TextOps {
     * vocabulary, not the corpus. One shuffle total, then a driver-side
     * top-50 via TakeOrderedAndProject. */
   private def textBpePairStats(spark: SparkSession, dir: String): DataFrame = {
-    registerBpe(spark)
     graft.Tables.fanout(documents(spark, dir))
       .select(explode(toks).as("w"))
       .select(subwords(array(col("w"))).as("ps")) // per-word: pairs stay word-internal
@@ -213,7 +205,6 @@ object TextOps {
     * tokenizer fragments that domain; retrain or re-weight). One
     * narrow projection + one small hash aggregate. */
   private def textBpeFertility(spark: SparkSession, dir: String): DataFrame = {
-    registerBpe(spark)
     graft.Tables.fanout(documents(spark, dir))
       .select(col("source"), col("lang"),
         size(toks).cast(LongType).as("ws"),
@@ -242,7 +233,6 @@ object TextOps {
     * broadcast per iteration — per-iteration cost is one corpus scan,
     * never a driver-side corpus. */
   private def textBpeApplyMerge(spark: SparkSession, dir: String): DataFrame = {
-    registerBpe(spark)
     // The learned merge is the trainer's output artifact: one scalar,
     // collected to the driver (bounded state, like the k-means
     // centroids) so both segmentations run as static-vocab compiled
@@ -496,7 +486,6 @@ object TextOps {
     * candidate list into the recount — no third scan, no second
     * driver round-trip. */
   private def textHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.MisraGriesAgg.register(spark)
     val words = documents(spark, dir).select(explode(toks).as("word"))
     val cand = words
       .agg(expr("mg_topk(word, 40)").as("mg"), count(lit(1)).as("total"))
@@ -986,7 +975,6 @@ object TextOps {
     * not); the final rollup is one map-side-combinable hash agg on
     * (lang, source). */
   private def pipelineDatasetCard(spark: SparkSession, dir: String): DataFrame = {
-    registerBpe(spark)
     val stop = Seq("the", "a", "of", "and", "to", "in")
     val d = graft.Tables.fanout(documents(spark, dir))
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),

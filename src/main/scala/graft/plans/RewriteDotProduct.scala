@@ -31,9 +31,9 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   * gate replica for every affected query when this rule shipped, and
   * again when the null-parity semantics landed).
   *
-  * Registered via [[graft.GraftExtensions]] (injectOptimizerRule) and
-  * added to `spark.experimental.extraOptimizations` by the Verify /
-  * Bench / plan-dump mains and the shared test session.
+  * Injected into every graft session by [[graft.GraftExtensions]]
+  * (injectOptimizerRule); `spark.sql.optimizer.excludedRules` turns it
+  * off for an A/B.
   */
 object RewriteDotProduct extends Rule[LogicalPlan] {
   private def sameVar(e: Expression, v: NamedLambdaVariable): Boolean = e match {

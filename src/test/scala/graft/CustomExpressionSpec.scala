@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.{DotProduct, SimHashAgg}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,8 +10,20 @@ class CustomExpressionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  test("a fresh session has all 14 graft functions and the dot-product rule") {
+    val fresh = spark.newSession()
+    val names = Seq("dot_product", "simhash_agg", "rolling_hash", "mg_topk",
+      "tdigest_quantile", "tdigest_sketch", "tdigest_merge_quantile", "tdigest_quantile_of",
+      "bitmap_construct_obj_agg", "bitmap_or_obj_agg", "bitmap_and",
+      "bloom_agg", "bloom_might_contain", "bpe_subwords")
+    val missing = names.filterNot(fresh.catalog.functionExists)
+    assert(missing.isEmpty, s"missing from a fresh session: $missing")
+    val phys = SparkEntry.queries("sim_rp_project")(fresh, TestSpark.sf)
+      .queryExecution.executedPlan.toString
+    assert(phys.contains("dot_product"), s"RewriteDotProduct did not fire\n$phys")
+  }
+
   test("dot_product matches the lambda formulation exactly") {
-    DotProduct.register(spark)
     val df = Tables.embeddings(spark, TestSpark.sf)
       .select(col("embedding").cast("array<double>").as("e"))
       .select(
@@ -24,7 +35,6 @@ class CustomExpressionSpec extends AnyFunSuite {
   }
 
   test("bpe_subwords matches the reference higher-order-function walk on the corpus") {
-    operators.TextOps.registerBpe(spark)
     val base = array(operators.TextOps.bpeVocab.map(lit): _*)
     val df = Tables.documents(spark, TestSpark.sf)
       .select(filter(split(col("text"), " "), t => t =!= "").as("tk"))
@@ -37,7 +47,6 @@ class CustomExpressionSpec extends AnyFunSuite {
   }
 
   test("bpe_subwords: extra merge pieces, longest-match shadowing, empty and null input") {
-    operators.TextOps.registerBpe(spark)
     val df = Seq(Seq("thewindow", "xyz", "table"), Seq.empty[String]).toDF("tk")
     val out = df.select(operators.TextOps.subwords(col("tk")).as("ps"))
       .collect().map(_.getSeq[String](0))
@@ -55,7 +64,6 @@ class CustomExpressionSpec extends AnyFunSuite {
   }
 
   test("dot_product handles empty and null arrays") {
-    DotProduct.register(spark)
     val df = Seq(
       (Seq(1.0, 2.0), Seq(3.0, 4.0)),
       (Seq.empty[Double], Seq.empty[Double])).toDF("a", "b")
@@ -71,7 +79,6 @@ class CustomExpressionSpec extends AnyFunSuite {
     // exactly, so RewriteDotProduct is provably semantics-preserving —
     // a ragged pair null-pads under zip_with and poisons the sum, and
     // dot_product must agree (it used to truncate to the shorter side)
-    DotProduct.register(spark)
     val ragged = Seq((Seq(1.0, 2.0, 9.0), Seq(10.0, 10.0))).toDF("a", "b")
       .select(expr("dot_product(a, b)")).collect()(0)
     assert(ragged.isNullAt(0), "ragged pair must be NULL, not a truncated dot")
@@ -82,7 +89,6 @@ class CustomExpressionSpec extends AnyFunSuite {
   }
 
   test("bitmap_and: byte-wise AND, min-length truncation, null propagation") {
-    graft.functions.BitmapAnd.register(spark)
     val df = Seq(
       (Array[Byte](0x0F, 0x33, 0x70), Array[Byte](0x05, 0x0F.toByte)),
       (Array[Byte](), Array[Byte](1, 2, 3))).toDF("a", "b")
@@ -95,7 +101,6 @@ class CustomExpressionSpec extends AnyFunSuite {
   }
 
   test("bitmap_and intersection count equals the two-semi-join answer") {
-    graft.functions.BitmapAnd.register(spark)
     val bmBoth = SparkEntry.queries("agg_bitmap_intersect")(spark, TestSpark.sf)
       .collect()(0).getLong(0)
     val ev = Tables.events(spark, TestSpark.sf)
@@ -105,7 +110,6 @@ class CustomExpressionSpec extends AnyFunSuite {
   }
 
   test("simhash_agg: identical token multisets give identical fingerprints") {
-    SimHashAgg.register(spark)
     val df = Seq(
       (1L, "alpha"), (1L, "beta"), (1L, "gamma"),
       (2L, "gamma"), (2L, "alpha"), (2L, "beta"), // same set, other order
@@ -118,7 +122,6 @@ class CustomExpressionSpec extends AnyFunSuite {
   }
 
   test("rolling_hash computes the polynomial hash with the rolling recurrence") {
-    graft.functions.RollingHash.register(spark)
     val rows = Seq("abcdef").toDF("s")
       .select(expr("rolling_hash(s, 3)").as("h")).collect()(0)
       .getSeq[Long](0)
@@ -134,7 +137,6 @@ class CustomExpressionSpec extends AnyFunSuite {
   }
 
   test("rolling_hash edge cases: short string and empty") {
-    graft.functions.RollingHash.register(spark)
     val out = Seq("ab", "").toDF("s")
       .select(expr("rolling_hash(s, 3)").as("h")).collect()
     assert(out.forall(_.getSeq[Long](0).isEmpty))
@@ -146,7 +148,6 @@ class CustomExpressionSpec extends AnyFunSuite {
     // depend only on the local window, so all chunks after the first
     // boundary are byte-identical. Dedup over CDC chunk fingerprints
     // therefore still matches a shifted document.
-    graft.functions.RollingHash.register(spark)
     def chunks(s: String): Seq[String] = {
       val hs = Seq(s).toDF("s")
         .select(expr("rolling_hash(s, 16)").as("h")).collect()(0).getSeq[Long](0)
@@ -166,7 +167,6 @@ class CustomExpressionSpec extends AnyFunSuite {
   }
 
   test("simhash_agg merges partials consistently across partition counts") {
-    SimHashAgg.register(spark)
     def run(parts: Int): Long =
       Tables.documents(spark, TestSpark.sf).repartition(parts)
         .select(explode(split(col("text"), " ")).as("w"))
@@ -177,7 +177,6 @@ class CustomExpressionSpec extends AnyFunSuite {
 
   test("mg_topk keeps at most k counters and never loses a true heavy hitter") {
     import spark.implicits._
-    graft.functions.MisraGriesAgg.register(spark)
     // 1000×'hot' + 50 each of 40 cold items: n=3000, k=5 ⇒ guarantee
     // threshold n/(k+1)=500 < freq(hot) — 'hot' MUST survive the sketch
     val rows = Seq.fill(1000)("hot") ++ (1 to 40).flatMap(i => Seq.fill(50)(s"cold$i"))
@@ -195,7 +194,6 @@ class CustomExpressionSpec extends AnyFunSuite {
 
   test("mg_topk rejects non-literal and non-positive k at analysis time") {
     import spark.implicits._
-    graft.functions.MisraGriesAgg.register(spark)
     val df = Seq(("a", 3)).toDF("w", "n")
     for (bad <- Seq("mg_topk(w, n)", "mg_topk(w, 0)", "mg_topk(n, 5)")) {
       val e = intercept[Exception] { df.agg(expr(bad)).collect() }
@@ -205,7 +203,6 @@ class CustomExpressionSpec extends AnyFunSuite {
 
   test("mg_topk with k >= cardinality is exact regardless of partitioning") {
     import spark.implicits._
-    graft.functions.MisraGriesAgg.register(spark)
     val rows = Seq.fill(7)("a") ++ Seq.fill(3)("b") ++ Seq.fill(5)("c")
     def run(parts: Int): Map[String, Long] =
       rows.toDF("w").repartition(parts)
@@ -218,7 +215,6 @@ class CustomExpressionSpec extends AnyFunSuite {
 
   test("tdigest_quantile: bounded rank error on a known distribution") {
     import spark.implicits._
-    graft.functions.TDigestAgg.register(spark)
     // 1..10000 shuffled deterministically: every quantile's true value
     // is known exactly; rank error = |estimate − q·n| / n
     val n = 10000
@@ -234,7 +230,6 @@ class CustomExpressionSpec extends AnyFunSuite {
 
   test("tdigest_quantile: merge-stable across partitionings, exact at extremes") {
     import spark.implicits._
-    graft.functions.TDigestAgg.register(spark)
     val xs = (1 to 5000).map(i => math.pow(1.002, i)) // skewed tail
     def run(parts: Int, q: Double): Double =
       xs.toDF("x").repartition(parts)
@@ -255,7 +250,6 @@ class CustomExpressionSpec extends AnyFunSuite {
 
   test("tdigest_quantile rejects bad arguments at analysis time") {
     import spark.implicits._
-    graft.functions.TDigestAgg.register(spark)
     val df = Seq(1.0, 2.0).toDF("x")
     for (bad <- Seq("tdigest_quantile(x, 5, 0.5)", "tdigest_quantile(x, 200, 1.5)",
         "tdigest_quantile(x, x, 0.5)")) {

@@ -636,7 +636,6 @@ class InvariantSpec extends AnyFunSuite {
     val total = sel.map(_.getLong(1)).sum
     assert(total <= 10000L, s"selected $total tokens > budget")
     val selIds = sel.map(_.getLong(0)).toSet
-    operators.TextOps.registerBpe(spark)
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"),
         // same token definition as the operator: SUBWORD count (r7)
@@ -875,7 +874,6 @@ class InvariantSpec extends AnyFunSuite {
     // EXACT double, not a tolerance: same insertion/merge sequence →
     // same buffer; serialization round-trips exactly; quantile() on a
     // compressed pending-free buffer does not re-compress.
-    graft.functions.TDigestAgg.register(spark)
     val src = Tables.lineitem(spark, sf)
       .select(col("l_returnflag"), col("l_extendedprice"))
     src.createOrReplaceTempView("td_eq_src")
@@ -899,7 +897,6 @@ class InvariantSpec extends AnyFunSuite {
     // Spark's declarative bitmap_construct_agg/bitmap_or_agg so that
     // bitmap_count / bitmap_and / stored partials stay interchangeable.
     // This pins the 4096-byte pos>>3 / 1<<(pos&7) layout contract.
-    graft.functions.BitmapAggs.register(spark)
     Tables.lineitem(spark, sf)
       .select(col("l_returnflag"), col("l_partkey"))
       .createOrReplaceTempView("bm_eq_src")

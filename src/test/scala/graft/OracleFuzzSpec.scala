@@ -57,15 +57,7 @@ object FuzzMain {
     val from = args.lift(2).map(_.toInt).getOrElse(1)
     val to = args.lift(3).map(_.toInt).getOrElse(500)
     new java.io.File(out).mkdirs()
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-fuzz")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forRun(GraftSession.runCpus, sf)
     val (errs, code, log) = OracleFuzz.runAndCheck(spark, sf, out, from to to)
     errs.foreach(e => println(s"[fuzz] SPARK-SIDE FAIL $e"))
     println(log)

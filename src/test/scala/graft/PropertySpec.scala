@@ -248,7 +248,6 @@ class PropertySpec extends AnyFunSuite {
   test("BPE pieces concatenate back to the corpus text (char conservation)") {
     import org.apache.spark.sql.functions._
     val sf = TestSpark.sf
-    graft.operators.TextOps.registerBpe(spark)
     val toks = filter(split(col("text"), " "), t => t =!= "")
     val bad = Tables.documents(spark, sf)
       .select(

@@ -17,16 +17,13 @@ class RewriteRuleSpec extends AnyFunSuite {
 
   /** Run `body` against an isolated session without the rule.
     * `newSession()` shares the SparkContext but gets fresh session
-    * state, so the shared TestSpark session's extraOptimizations are
-    * never mutated — other suites (plan-hash specs) can never observe
-    * the rule temporarily removed, even under parallel execution. The
-    * filterNot is defensive: it also holds if session-state cloning
-    * ever starts propagating the parent's extraOptimizations. */
+    * state and its own SQL conf, so excluding the injected rule there
+    * never reaches the shared TestSpark session — other suites
+    * (plan-hash specs) can never observe the rule switched off, even
+    * under parallel execution. */
   private def withoutRule[A](body: org.apache.spark.sql.SparkSession => A): A = {
     val fresh = spark.newSession()
-    fresh.experimental.extraOptimizations =
-      fresh.experimental.extraOptimizations
-        .filterNot(_ == graft.plans.RewriteDotProduct)
+    fresh.conf.set("spark.sql.optimizer.excludedRules", graft.plans.RewriteDotProduct.ruleName)
     body(fresh)
   }
 

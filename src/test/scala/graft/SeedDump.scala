@@ -8,12 +8,7 @@ object SeedDump {
   def main(args: Array[String]): Unit = {
     val q = OracleFuzz.gen(args(0).toInt)
     println("SQL:\n" + q.sql)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    GraftSession.applyOptimizations(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = PlanShapes.gateSession()
     q.build(spark, args.lift(1).getOrElse("/root/testdata/sf0.001")).show(50, false)
     spark.stop()
   }

@@ -3,19 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared session across all suites (Spark startup dominates test
-  * time otherwise). */
+  * time otherwise): the gate session, [[PlanShapes.gateSession]]. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    GraftSession.applyOptimizations(s)
-    s
-  }
+  lazy val spark: SparkSession = PlanShapes.gateSession()
   val sf: String = "/root/testdata/sf0.001"
 }
