@@ -14,15 +14,25 @@ import org.apache.spark.sql.types.LongType
   *    first (`calc_lowest_key`, `keymap.rs:129-142`; doc-tests
   *    `keymap.rs:24-35,153-170`: keys {0,1,3} → next is 2, then 4)
   *
-  * Implementation: free keys are generated as `spark.range(0, max+m+1)`
-  * anti-joined against used keys, ranked, and zipped to the ranked
-  * novel values — exact mex gap-filling, fully distributed, O(|dim|)
-  * work (never proportional to fact volume). At 100 TB the dim is the
-  * small side: `lookup` broadcasts it.
+  * Keys must be unique and non-negative (the bijection requires the
+  * first; the free-key arithmetic below relies on both).
   *
-  * The deliberate deviation documented in SURVEY.md §7.3 (max+1 instead
-  * of mex) applies only to the streaming-append fast path
-  * (`assignDense`); `transact` is faithful.
+  * Implementation: the free keys come from the gaps between used keys.
+  * One window over `dim` ordered by key pairs each used key `k` of rank
+  * `r` with its predecessor `prev` (−1 for the first); the keys
+  * `prev+1 .. k-1` are free, and a free key `g` found there is the
+  * `(g − r)`-th free key overall. Past the last gap the free keys run
+  * on from `max+1`, so free slot `s` beyond the gaps is `|dim| + s`.
+  * Novel values, ranked by value, take the slot of their rank — exact
+  * mex gap-filling, O(max key) work on the dim side, never
+  * proportional to fact volume. At 100 TB the dim is the small side:
+  * `lookup` broadcasts it.
+  *
+  * `transact` runs no Spark action: it returns one lazy plan, so
+  * `values` is read once, by the caller's action, and an error in its
+  * source surfaces there. Each unmaterialized `transact` stacks onto
+  * the plan of the one before, so materialize `dim` between batches
+  * (e.g. `KeyMap(km.dim.localCheckpoint())`).
   */
 final case class KeyMap(dim: DataFrame) {
   require(dim.columns.toSeq == Seq("key", "value"),
@@ -33,38 +43,13 @@ final case class KeyMap(dim: DataFrame) {
     * (gap-filling mex order, ties broken by value order — matching the
     * reference's per-record insertion by iteration order). */
   def transact(values: DataFrame): KeyMap = {
-    val spark = dim.sparkSession
-    val incoming = values.toDF("value").distinct()
-    val novel = incoming.join(dim, Seq("value"), "left_anti")
+    val novel = values.toDF("value").distinct()
+      .join(dim, Seq("value"), "left_anti")
       .withColumn("slot_idx",
         (row_number().over(Window.orderBy(col("value"))) - 1).cast(LongType))
-
-    val stats = dim.agg(
-      coalesce(max(col("key")), lit(-1L)).as("max_key")).collect()(0)
-    val maxKey = stats.getLong(0)
-    val nNovel = novel.count()
-
-    if (nNovel == 0) this
-    else {
-      // candidate keys 0..max+nNovel: enough to fill every gap and extend
-      val free = spark.range(0, maxKey + nNovel + 1).toDF("key")
-        .join(dim.select("key"), Seq("key"), "left_anti")
-        .withColumn("slot_idx",
-          (row_number().over(Window.orderBy(col("key"))) - 1).cast(LongType))
-      val assigned = novel.join(free, "slot_idx").select(col("key"), col("value"))
-      KeyMap(dim.unionByName(assigned))
-    }
-  }
-
-  /** Fast path for append-heavy pipelines: max+1 + dense rank, no gap
-    * filling (one less join; keys stay monotonic). */
-  def assignDense(values: DataFrame): KeyMap = {
-    val incoming = values.toDF("value").distinct()
-    val novel = incoming.join(dim, Seq("value"), "left_anti")
-    val maxKey = dim.agg(coalesce(max(col("key")), lit(-1L))).collect()(0).getLong(0)
-    val assigned = novel.select(
-      (lit(maxKey) + row_number().over(Window.orderBy(col("value"))).cast(LongType)).as("key"),
-      col("value"))
+    val assigned = novel.crossJoin(keyCount)
+      .join(gaps, Seq("slot_idx"), "left")
+      .select(coalesce(col("gap_key"), col("n_keys") + col("slot_idx")).as("key"), col("value"))
     KeyMap(dim.unionByName(assigned))
   }
 
@@ -74,14 +59,26 @@ final case class KeyMap(dim: DataFrame) {
     facts.join(broadcast(dim.withColumnRenamed("value", valueCol)), Seq(valueCol), "left")
 
   /** The reference's `calc_lowest_key` (mex): smallest non-negative
-    * integer not present as a key (`keymap.rs:129-135`). */
-  def lowestFreeKey(): Long = {
-    val spark = dim.sparkSession
-    val maxKey = dim.agg(coalesce(max(col("key")), lit(-1L))).collect()(0).getLong(0)
-    spark.range(0, maxKey + 2).toDF("key")
-      .join(dim.select("key"), Seq("key"), "left_anti")
-      .agg(min(col("key"))).collect()(0).getLong(0)
+    * integer not present as a key (`keymap.rs:129-135`) — the first gap
+    * key, else `|dim|`. */
+  def lowestFreeKey(): Long =
+    gaps.agg(min(col("gap_key")).as("gap_key")).crossJoin(keyCount)
+      .select(coalesce(col("gap_key"), col("n_keys"))).collect()(0).getLong(0)
+
+  /** Free keys below the max key, each with its rank among all free
+    * keys: `(gap_key, slot_idx)`. */
+  private def gaps: DataFrame = {
+    val byKey = Window.orderBy(col("key"))
+    dim.select(col("key"),
+        lag(col("key"), 1, -1L).over(byKey).as("prev"),
+        (row_number().over(byKey) - 1).cast(LongType).as("rank"))
+      .filter(col("key") > col("prev") + 1)
+      .select(explode(sequence(col("prev") + 1, col("key") - 1)).as("gap_key"), col("rank"))
+      .select(col("gap_key"), (col("gap_key") - col("rank")).as("slot_idx"))
   }
+
+  /** One row: the number of used keys, `n_keys`. */
+  private def keyCount: DataFrame = dim.agg(count(lit(1)).as("n_keys"))
 
   def lookupKey(value: String): Option[Long] =
     dim.filter(col("value") === value).select("key")

@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
 import graft.etl.KeyMap
+import org.apache.spark.grafttest.Listeners
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The reference's doc-test assertions
@@ -43,6 +46,34 @@ class KeyMapSpec extends AnyFunSuite {
     val km = KeyMap.empty(spark).transact(Seq("a", "b").toDF("value"))
     assert(km.lookupKey("a").contains(0L))
     assert(km.lookupKey("b").contains(1L))
+  }
+
+  test("transact on an unmaterialized dim launches no Spark job") {
+    // count only this thread's jobs: they carry its job group
+    val sc = spark.sparkContext
+    val group = "keymap-transact-lazy"
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "KeyMap.transact")
+    try {
+      // one gap (2), three novel values: 2, then past max 3 → 4, 5
+      val km = base.transact(Seq("b", "a", "zero", "c", "a").toDF("value"))
+      Listeners.drain(sc)
+      assert(jobs.get() == 0, s"transact launched ${jobs.get()} Spark jobs")
+      val keys = km.dim.as[(Long, String)].collect().map(_.swap).toMap
+      assert(keys == Map("zero" -> 0L, "one" -> 1L, "three" -> 3L,
+        "a" -> 2L, "b" -> 4L, "c" -> 5L))
+      Listeners.drain(sc)
+      assert(jobs.get() > 0, "the listener saw no job for the collect")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("lookup broadcasts the dim onto facts") {

@@ -18,8 +18,13 @@ class PropertySpec extends AnyFunSuite {
   private def cases[A](g: Gen[A], n: Int = 8): Seq[A] =
     (0 until n).map(i => g.pureApply(Gen.Parameters.default, Seed(i.toLong)))
 
-  private val keySetGen: Gen[Set[Long]] =
-    Gen.containerOf[Set, Long](Gen.choose(0L, 12L))
+  // random key sets plus the shapes the mex arithmetic special-cases:
+  // empty, no key 0, and no gaps at all (0 until n)
+  private val keySetGen: Gen[Set[Long]] = Gen.oneOf(
+    Gen.containerOf[Set, Long](Gen.choose(0L, 12L)),
+    Gen.const(Set.empty[Long]),
+    Gen.containerOf[Set, Long](Gen.choose(1L, 12L)),
+    Gen.choose(1L, 8L).map(n => (0L until n).toSet))
 
   test("property: lowestFreeKey is the true mex of any key set") {
     cases(keySetGen).foreach { keys =>
@@ -31,19 +36,29 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("property: transact preserves existing keys, stays bijective, adds only novel values") {
+    // up to 8 new values against at most 13 keys: often more novel
+    // values than gaps, so assignment runs on past the max key
     val gen = for {
       keys <- keySetGen
-      vals <- Gen.listOfN(3, Gen.oneOf("aa", "bb", "cc", "v1", "v2"))
+      vals <- Gen.choose(0, 8).flatMap(Gen.listOfN(_,
+        Gen.oneOf("aa", "bb", "cc", "dd", "ee", "ff", "v1", "v2", "v3")))
     } yield (keys, vals)
-    cases(gen).foreach { case (keys, newValues) =>
+    val cs = cases(gen, n = 12)
+    // the fixed seeds must reach every key-set shape
+    assert(cs.exists(_._1.isEmpty) && cs.exists(c => c._1.nonEmpty && !c._1(0L)) &&
+      cs.exists(c => c._1.nonEmpty && c._1.max == c._1.size - 1))
+    cs.foreach { case (keys, newValues) =>
       val dim = keys.toSeq.map(k => (k, s"v$k")).toDF("k", "v")
-      val km = KeyMap.fromDim(dim, "k", "v")
-      val out = km.transact(newValues.toDF("value"))
-      val outKeys = out.dim.select("key").as[Long].collect()
-      assert(outKeys.toSet.size == outKeys.length, s"key collision: keys=$keys new=$newValues")
-      keys.foreach(k => assert(out.lookupKey(s"v$k").contains(k)))
-      val distinctNew = newValues.toSet -- keys.map(k => s"v$k")
-      assert(out.dim.count() == keys.size + distinctNew.size)
+      val out = KeyMap.fromDim(dim, "k", "v").transact(newValues.toDF("value")).dim
+        .as[(Long, String)].collect()
+      // plain-Scala mex reference: novel values, in value order, take
+      // the free keys in key order
+      val existing = keys.map(k => s"v$k" -> k).toMap
+      val novel = newValues.distinct.filterNot(existing.contains).sorted
+      val free = Iterator.from(0).map(_.toLong).filterNot(keys)
+      val expected = existing ++ novel.iterator.zip(free)
+      assert(out.length == expected.size, s"row count: keys=$keys new=$newValues")
+      assert(out.map(_.swap).toMap == expected, s"keys=$keys new=$newValues")
     }
   }
 
