@@ -216,27 +216,4 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
   }
-
-  /** Cluster profile for the 100 TB deployment the engine targets
-    * (1000-executor scale). Local mode ignores most of these; they
-    * document the intended knobs and are applied when a real master is
-    * passed.
-    *
-    *  - shuffle.partitions 4× cores-in-cluster: AQE coalesces down, but
-    *    the upper bound must exceed the skew split count.
-    *  - maxPartitionBytes 256 MB: scan tasks large enough to amortize
-    *    scheduling, small enough to fit columnar batches in memory.
-    *  - autoBroadcastJoinThreshold 64 MB: dims broadcast, facts never.
-    *  - adaptive.advisoryPartitionSizeInBytes 128 MB: post-shuffle
-    *    target so reducers neither starve nor spill.
-    */
-  def clusterBuilder(master: String, clusterCores: Int): SparkSession.Builder =
-    builder(master)
-      .config("spark.sql.shuffle.partitions", (clusterCores * 4).toString)
-      .config("spark.sql.files.maxPartitionBytes", (256L * 1024 * 1024).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (128L * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
 }

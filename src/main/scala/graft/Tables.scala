@@ -1,15 +1,20 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.types.StructType
 
 /** Table loaders for the driver-generated parquet star schema
   * (/root/repo/TESTDATA.md). All operators read through here so the
   * scan path (and any future source swap — e.g. bucketed tables on a
   * real cluster) is centralized.
   *
-  * Scale note: `spark.read.parquet` plans splits from footer metadata
-  * (`maxPartitionBytes`), so the same code path scales from the 6k-row
+  * Scale note: a read lists the files and plans splits from their
+  * sizes (`maxPartitionBytes`); it reads a footer only when [[read]]
+  * misses its schema memo. The same code path scales from the 6k-row
   * sf0.001 fixture to a 100 TB lake — no code change, only config.
   */
 object Tables {
@@ -18,7 +23,77 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** Schema memo capacity. Ten fixture tables plus the write-once
+    * caches need a few dozen entries; the cap bounds a streaming job,
+    * whose history read is a new path set every epoch. */
+  private val SchemaMemoEntries = 512
+
+  // (digest of the paths, reader confs) -> (schema, digest of the
+  // listing it was inferred from)
+  private type MemoKey = (String, Seq[(String, String)])
+  // access-ordered, so the least recently used entry is dropped first
+  private val schemaMemo = new java.util.LinkedHashMap[MemoKey, (StructType, String)](64, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[MemoKey, (StructType, String)]): Boolean =
+      size() > SchemaMemoEntries
+  }
+
+  /** The one parquet read path: every parquet read in `src/main` goes
+    * through here. A plain `spark.read.parquet` infers the schema on
+    * every call, and inference is a one-task Spark job that reads a
+    * footer (~60 ms at sf0.1 on a 4-core machine, most of the time it
+    * takes to build a short query). This infers each file set's schema
+    * once per process and declares it on later reads
+    * (`spark.read.schema(s).parquet`), which list the files but start
+    * no job.
+    *
+    * The memo key is a digest of the paths in the caller's order (the
+    * listing order decides which footer inference reads) plus the
+    * session's parquet-reader confs. The value is the schema and a
+    * digest of the listing (path, length, mtime) it was inferred from.
+    * A hit is checked against the listing the new relation's file index
+    * has already made, so no second listing: a rewritten or appended
+    * file set is inferred again, and the schema and the analyzed plan
+    * are always the ones a plain read returns. The memo is
+    * process-wide, holds only schemas and digests, and keeps at most
+    * `SchemaMemoEntries` of them. */
+  def read(spark: SparkSession, paths: String*): DataFrame = {
+    val key = (digest(paths.iterator), readerConfs(spark))
+    val declared = schemaMemo.synchronized(Option(schemaMemo.get(key))).flatMap {
+      case (schema, listing) =>
+        Some(spark.read.schema(schema).parquet(paths: _*)).filter(listingDigest(_).contains(listing))
+    }
+    declared.getOrElse {
+      val df = spark.read.parquet(paths: _*)
+      listingDigest(df).foreach(l => schemaMemo.synchronized(schemaMemo.put(key, (df.schema, l))))
+      df
+    }
+  }
+
+  /** The confs that change what parquet schema inference returns. */
+  private def readerConfs(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive"
+    }.sorted
+
+  /** Digest of the files a read's relation listed, in listing order;
+    * None when the relation has no in-memory listing to check. */
+  private def listingDigest(df: DataFrame): Option[String] =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    }.collect {
+      case HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _) =>
+        digest(index.allFiles().iterator.map(f =>
+          s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}"))
+    }
+
+  private def digest(parts: Iterator[String]): String = {
+    val md = MessageDigest.getInstance("SHA-256")
+    parts.foreach(p => md.update((p + "\n").getBytes(UTF_8)))
+    java.util.HexFormat.of().formatHex(md.digest())
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame  = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame    = table(s, d, "orders")

@@ -34,10 +34,12 @@ final case class Pipeline(
 // ---------------------------------------------------------------- sources
 
 /** R8 (`/root/reference/src/extract/fs.rs:6-13`) generalized: schema is
-  * declared, never inferred — the reference's structs fix schemas at
-  * compile time (`skopje-macros/src/lib.rs:113-119`). */
+  * declared, not re-inferred — the reference's structs fix schemas at
+  * compile time (`skopje-macros/src/lib.rs:113-119`); here
+  * [[graft.Tables.read]] infers a file set's schema once and declares
+  * it on every later read. */
 final case class ParquetSource(path: String) extends Source {
-  def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
+  def read(spark: SparkSession): DataFrame = graft.Tables.read(spark, path)
 }
 
 final case class JsonSource(path: String, schema: StructType, multiLine: Boolean = false)

@@ -132,7 +132,7 @@ object Dedup {
         .filter(col("doc_id") % 5 =!= 4)))
         .write.mode("overwrite").parquet(idxBase)
     }
-    val hist = spark.read.parquet(idxBase)
+    val hist = read(spark, idxBase)
     // the batch is signed fresh and probed twice (index + self-join)
     val batch = bandsOf(signatureOf(fanout(documents(spark, dir))
       .filter(col("doc_id") % 5 === 4))).localCheckpoint()
@@ -649,7 +649,7 @@ object Dedup {
         .select(col("doc_id"), explode(array_distinct(shingles(col("tk")))).as("tk"))
         .write.mode("overwrite").parquet(tokBase)
     }
-    spark.read.parquet(tokBase)
+    read(spark, tokBase)
   }
 
   private[graft] def shingleTok(spark: SparkSession, dir: String): DataFrame = {

@@ -56,7 +56,7 @@ object Graph {
         .unionByName(pairs.select(s.as("src"), p.as("dst")))
         .write.mode("overwrite").parquet(base)
     }
-    spark.read.parquet(base)
+    read(spark, base)
   }
 
   /** Node id → the namespaced string every output/oracle speaks:
@@ -174,7 +174,7 @@ object Graph {
         }
       }
     }
-    spark.read.parquet(base)
+    read(spark, base)
   }
 
   /** One PageRank iteration: dst-keyed contribution aggregation

@@ -74,7 +74,7 @@ object ScalePatterns {
         .withColumn("o_year", year(col("o_orderdate")))
         .write.partitionBy("o_year").mode("overwrite").parquet(base)
     }
-    spark.read.parquet(base)
+    read(spark, base)
       .filter(col("o_year") === 1995)
       .groupBy(month(col("o_orderdate")).cast("bigint").as("month"))
       .agg(count(lit(1)).as("n"), Parity.r2(sum(col("o_totalprice"))).as("revenue"))
@@ -115,8 +115,8 @@ object ScalePatterns {
         .select(col("d_year"), col("d_n_orders"), col("d_complete"))
         .write.mode("overwrite").parquet(dimBase)
     }
-    val fact = spark.read.parquet(base)
-    val dim = spark.read.parquet(dimBase).filter(col("d_complete") === 1)
+    val fact = read(spark, base)
+    val dim = read(spark, dimBase).filter(col("d_complete") === 1)
     fact.join(broadcast(dim), col("o_year") === col("d_year"))
       .groupBy(col("o_year").cast("bigint").as("yr"))
       .agg(count(lit(1)).as("n"),
@@ -146,7 +146,7 @@ object ScalePatterns {
       .filter(col("l_shipdate") >= lit(cutoff))
       .groupBy(col("l_linestatus"))
       .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("qty"))
-    spark.read.parquet(base).unionByName(delta)
+    read(spark, base).unionByName(delta)
       .groupBy(col("l_linestatus"))
       .agg(sum(col("n")).as("n"), sum(col("qty")).as("qty"))
       .orderBy(col("l_linestatus"))
@@ -277,7 +277,7 @@ object ScalePatterns {
         .withColumn("o_totalprice", col("o_totalprice") * 0.9)
         .write.partitionBy("yr").mode("overwrite").parquet(base)
     }
-    s.read.parquet(base)
+    read(s, base)
       .groupBy(col("yr"))
       .agg(count(lit(1)).as("n"), Parity.r2(sum(col("o_totalprice"))).as("total"))
       .orderBy(col("yr"))
@@ -384,10 +384,10 @@ object ScalePatterns {
         .filter(f => f.getName.endsWith(".parquet")).map(_.length).sum
       val target = 32L * 1024 * 1024 // local-mode stand-in for the 128 MB lake default
       val nOut = math.max(1L, (bytes + target - 1) / target).toInt
-      spark.read.parquet(frag).repartition(nOut)
+      read(spark, frag).repartition(nOut)
         .write.mode("overwrite").parquet(packed)
     }
-    spark.read.parquet(packed)
+    read(spark, packed)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"), Parity.r2(sum(col("o_totalprice"))).as("total"))
       .orderBy(col("o_orderstatus"))

@@ -942,10 +942,10 @@ object Similarity {
       tf.write.mode("overwrite").parquet(s"$tmp/tf")
       // df and the scalar stats derive from the just-written relations —
       // read them back rather than re-scanning the corpus twice more
-      spark.read.parquet(s"$tmp/tf").groupBy(col("term"))
+      read(spark, s"$tmp/tf").groupBy(col("term"))
         .agg(count(lit(1)).as("df")).write.mode("overwrite").parquet(s"$tmp/df")
       dlen.write.mode("overwrite").parquet(s"$tmp/dlen")
-      spark.read.parquet(s"$tmp/dlen")
+      read(spark, s"$tmp/dlen")
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"),
           max(col("doc_id")).as("max_id"))
         .write.mode("overwrite").parquet(s"$tmp/stats")
@@ -958,8 +958,8 @@ object Similarity {
         rm(tmp)
       }
     } }
-    (spark.read.parquet(s"$path/tf"), spark.read.parquet(s"$path/dlen"),
-      spark.read.parquet(s"$path/df"), spark.read.parquet(s"$path/stats"))
+    (read(spark, s"$path/tf"), read(spark, s"$path/dlen"),
+      read(spark, s"$path/df"), read(spark, s"$path/stats"))
   }
 
   /** Score-fusion rerank for an arbitrary bounded query side — the

@@ -632,7 +632,7 @@ object TextOps {
       fpOf(fanout(documents(spark, dir)).filter(col("doc_id") % 5 =!= 4))
         .write.mode("overwrite").parquet(idxBase)
     }
-    val hist = spark.read.parquet(idxBase)
+    val hist = read(spark, idxBase)
     val batch = fpOf(fanout(documents(spark, dir)).filter(col("doc_id") % 5 === 4))
       .localCheckpoint()
     val vsHist = batch.as("n").join(hist.as("h"), col("n.wmin") === col("h.wmin"))

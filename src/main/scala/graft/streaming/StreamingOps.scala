@@ -284,7 +284,7 @@ object StreamingOps {
         graft.operators.Dedup.signatureOf(stable)).localCheckpoint()
       val histEpochs = historyEpochs(spark, indexDir, epochId)
       val vsHist = if (histEpochs.isEmpty) None else Some {
-        val hist = spark.read.parquet(histEpochs.toIndexedSeq: _*)
+        val hist = graft.Tables.read(spark, histEpochs.toIndexedSeq: _*)
         bands.as("n").join(hist.as("h"),
             col("n.band_idx") === col("h.band_idx") && col("n.band") === col("h.band"))
           .select(col("h.doc_id").as("doc_a"), col("n.doc_id").as("doc_b"),
@@ -360,7 +360,7 @@ object StreamingOps {
         .localCheckpoint() // consumed by 2 probes + verify + index sink
       val histEpochs = historyEpochs(spark, indexDir, epochId)
       val hist = if (histEpochs.isEmpty) None
-        else Some(spark.read.parquet(histEpochs.toIndexedSeq: _*))
+        else Some(graft.Tables.read(spark, histEpochs.toIndexedSeq: _*))
 
       // the batch op's candidate stage, parameterized by which side
       // is the probing SUBSET — identical prunes, identical columns
@@ -468,7 +468,7 @@ object StreamingOps {
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(col("b.vec_id").as("bid"), cs("a", "b").as("cs"))
     val cands = if (histEpochs.isEmpty) vsBatch else {
-      val hist = spark.read.parquet(histEpochs.toIndexedSeq: _*)
+      val hist = graft.Tables.read(spark, histEpochs.toIndexedSeq: _*)
       vsBatch.unionByName(
         cur.as("n").join(hist.as("h"),
             col("n.cell") === col("h.cell") && col("h.vec_id") < col("n.vec_id"))
@@ -697,7 +697,7 @@ object StreamingOps {
           .toDF().localCheckpoint()
         val histEpochs = historyEpochs(spark, indexDir, epochId)
         val hist = if (histEpochs.isEmpty) None
-          else Some(spark.read.parquet(histEpochs.toIndexedSeq: _*))
+          else Some(graft.Tables.read(spark, histEpochs.toIndexedSeq: _*))
         val all = hist.map(cur.unionByName(_)).getOrElse(cur)
         def blocks(s: DataFrame): DataFrame = s.select(col("simhash")).distinct()
           .select(col("simhash"),

@@ -1,0 +1,128 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.Try
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.grafttest.Listeners
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.scalatest.funsuite.AnyFunSuite
+
+/** [[Tables.read]], the one parquet read path: a file set's schema is
+  * inferred once, later reads of the unchanged files start no Spark
+  * job and analyze to the same plan as a plain read, and a changed
+  * file set or reader conf is never served a stale schema. */
+class ParquetReadSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private def tmp(name: String): String =
+    java.nio.file.Files.createTempDirectory("graft_parquet_read").resolve(name).toString
+
+  /** Spark jobs `f` starts on this thread (they carry its job group). */
+  private def jobsDuring[T](f: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val group = "parquet-read-" + Thread.currentThread().getId
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "ParquetReadSpec")
+    try {
+      val out = f
+      Listeners.drain(sc)
+      (jobs.get(), out)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def analyzed(df: DataFrame): String =
+    PlanShapes.normalize(df.queryExecution.analyzed.toString)
+
+  test("a second read of an unchanged table starts no Spark job and plans like a plain read") {
+    for (name <- Tables.names) {
+      Tables.table(spark, TestSpark.sf, name)
+      val (jobs, df) = jobsDuring(Tables.table(spark, TestSpark.sf, name))
+      assert(jobs == 0, s"re-reading $name started $jobs Spark jobs")
+      assert(analyzed(df) == analyzed(spark.read.parquet(s"${TestSpark.sf}/$name.parquet")), name)
+    }
+  }
+
+  test("a hive-partitioned layout re-reads with the plain read's partition columns") {
+    val p = tmp("parted")
+    Seq((1L, "a", 1995), (2L, "b", 1996), (3L, "c", 1996)).toDF("id", "v", "yr")
+      .write.partitionBy("yr").parquet(p)
+    Tables.read(spark, p)
+    val (jobs, df) = jobsDuring(Tables.read(spark, p))
+    assert(jobs == 0)
+    assert(analyzed(df) == analyzed(spark.read.parquet(p)))
+    assert(df.filter($"yr" === 1996).count() == 2)
+  }
+
+  test("a path overwritten with a different schema is read with the new schema") {
+    val p = tmp("overwritten")
+    Seq((1, "x")).toDF("a", "b").write.parquet(p)
+    assert(Tables.read(spark, p).columns.toSeq == Seq("a", "b"))
+    Seq((2L, 3.5, true)).toDF("c", "d", "e").write.mode("overwrite").parquet(p)
+    val df = Tables.read(spark, p)
+    assert(df.schema == spark.read.parquet(p).schema)
+    assert(df.as[(Long, Double, Boolean)].collect().toSeq == Seq((2L, 3.5, true)))
+  }
+
+  test("a part file appended to a read directory shows up in count()") {
+    val p = tmp("appended")
+    Seq(1L, 2L, 3L).toDF("id").write.parquet(p)
+    assert(Tables.read(spark, p).count() == 3)
+    Seq(4L, 5L).toDF("id").write.mode("append").parquet(p)
+    assert(Tables.read(spark, p).count() == 5)
+    val (jobs, again) = jobsDuring(Tables.read(spark, p))
+    assert(jobs == 0)
+    assert(again.count() == 5)
+  }
+
+  test("toggling nanosAsLong is never served the other setting's ts type") {
+    // Spark cannot write TIMESTAMP(NANOS); write the file with parquet-mr
+    val p = tmp("events.parquet")
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(p, "part-0.parquet"))
+      .withType(schema).build()
+    w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1700000000123456789L))
+    w.close()
+    def tsType(df: => DataFrame): String =
+      Try(df.schema("ts").dataType.simpleString).fold(e => e.getClass.getName, identity)
+    val conf = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(conf)
+    try {
+      spark.conf.set(conf, "true")
+      assert(tsType(Tables.read(spark, p)) == "bigint")
+      spark.conf.set(conf, "false")
+      val plain = tsType(spark.read.parquet(p))
+      assert(plain != "bigint")
+      assert(tsType(Tables.read(spark, p)) == plain)
+    } finally before.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+  }
+
+  test("src/main reads parquet only through Tables.read") {
+    // `.read` then any `.schema(..)`/`.option(..)` calls, then `.parquet(`
+    val parquetRead = """\.read(\s*\.\w+\([^()]*\))*\s*\.parquet\(""".r
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val hits = files(root).filter(_.getName.endsWith(".scala")).flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      parquetRead.findAllIn(src).map(_ => root.toPath.relativize(f.toPath).toString).toSeq
+    }
+    // the helper's inferring read and its declared-schema read
+    assert(hits.sorted == Seq("graft/Tables.scala", "graft/Tables.scala"), hits)
+  }
+}
