@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
+import org.apache.spark.sql.SparkSession
+
 /** Content-addressed locations for write-once materializations (bucketed
   * tables, partitioned layouts, incremental-agg partials, trained IVF
   * centroids, format round-trips).
@@ -12,6 +17,19 @@ package graft
   * here digests the canonical path PLUS each source table's file
   * inventory (name, length, mtime), so any content change re-keys the
   * cache and re-materializes.
+  *
+  * PUBLISH RULE: every store is written through [[once]] — built
+  * complete in a fresh `_`-prefixed sibling temp directory, then
+  * published by one atomic Hadoop `FileContext` rename. A store is
+  * either complete or absent; there is no marker file to check, and
+  * the same code is correct on any Hadoop file system, not only on
+  * local disk.
+  *
+  * CACHE-KEY CONTRACT: a store's `kind` ends in a logic-version tag
+  * (`_vN`) bumped with ANY semantic change to what the build writes,
+  * and carries every build parameter (`ivfcent_k10_i2_v6`). The digest
+  * covers only the source file inventory, so a code edit that keeps
+  * the kind would be served the stale store with no error.
   *
   * On a real cluster these layouts live at curated lake paths with
   * explicit refresh policy; the digest scheme is the local-mode analogue
@@ -40,4 +58,59 @@ object Caches {
     * same way (bucketed tables must re-register per source content). */
   def tableSuffix(kind: String, srcDir: String, tables: Seq[String]): String =
     digest(kind, srcDir, tables)
+
+  private val buildLocks = new ConcurrentHashMap[String, Object]()
+
+  /** The published store `dir(kind, srcDir, tables)`, built on first use.
+    *
+    * Hit: the directory exists, so it is returned with no build and no
+    * Spark job. Miss: under a per-store JVM lock (re-checked), `build`
+    * writes the COMPLETE store into a fresh sibling directory whose name
+    * starts with `_` (file-source listings skip such names), and one
+    * `FileContext.rename(…, Rename.NONE)` publishes it. A build that
+    * throws publishes nothing; a loser of a cross-process publish race
+    * gets `FileAlreadyExistsException` and drops its own temp.
+    * (`FileSystem.rename` onto an existing directory would instead MOVE
+    * the temp inside the winner's store.) */
+  def once(spark: SparkSession, kind: String, srcDir: String, tables: Seq[String])(
+      build: String => Unit): String = {
+    require(kind.matches(".*_v\\d+$"),
+      s"store kind '$kind' must end in a logic-version tag (_vN)")
+    val dst = dir(kind, srcDir, tables)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(dst).getFileSystem(conf)
+    val path = fs.makeQualified(new Path(dst))
+    if (!fs.exists(path)) buildLocks.computeIfAbsent(dst, _ => new Object).synchronized {
+      if (!fs.exists(path)) {
+        val tmp = new Path(path.getParent, s"_${path.getName}.${java.util.UUID.randomUUID}")
+        try {
+          build(tmp.toString)
+          try FileContext.getFileContext(fs.getUri, conf).rename(tmp, path, Options.Rename.NONE)
+          catch { case _: FileAlreadyExistsException => } // another process published first
+        } finally fs.delete(tmp, true)
+      }
+    }
+    dst
+  }
+
+  private def fsOf(spark: SparkSession, path: Path): FileSystem =
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Write `bytes` as the file `path` (inside a [[once]] build). */
+  def writeBytes(spark: SparkSession, path: String, bytes: Array[Byte]): Unit = {
+    val p = new Path(path)
+    val out = fsOf(spark, p).create(p, false)
+    try out.write(bytes) finally out.close()
+  }
+
+  /** Write one small driver-side text store, one line per element. */
+  def writeLines(spark: SparkSession, path: String, lines: Seq[String]): Unit =
+    writeBytes(spark, path, lines.map(_ + "\n").mkString.getBytes(UTF_8))
+
+  /** Read back a file written by [[writeLines]]. */
+  def readLines(spark: SparkSession, path: String): IndexedSeq[String] = {
+    val p = new Path(path)
+    val in = fsOf(spark, p).open(p)
+    try new String(in.readAllBytes(), UTF_8).linesIterator.toIndexedSeq finally in.close()
+  }
 }

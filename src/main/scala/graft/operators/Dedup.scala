@@ -126,12 +126,10 @@ object Dedup {
       .as(Seq("band_idx", "band")))
 
   private def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val idxBase = graft.Caches.dir("mhindex", dir, Seq("documents"))
-    if (!new java.io.File(idxBase, "_SUCCESS").exists()) {
+    val idxBase = graft.Caches.once(spark, "mhindex_v1", dir, Seq("documents"))(
       bandsOf(signatureOf(fanout(documents(spark, dir))
         .filter(col("doc_id") % 5 =!= 4)))
-        .write.mode("overwrite").parquet(idxBase)
-    }
+        .write.parquet(_))
     val hist = read(spark, idxBase)
     // the batch is signed fresh and probed twice (index + self-join)
     val batch = bandsOf(signatureOf(fanout(documents(spark, dir))
@@ -640,21 +638,20 @@ object Dedup {
     * rank by an order DuckDB can reproduce (global (freq, string)
     * order); the production [[shingleTok]] ranks by (freq, id), whose
     * xxhash64 ties no SQL oracle can re-derive. */
-  private[graft] def shingleTokRaw(spark: SparkSession, dir: String): DataFrame = {
-    val tokBase = graft.Caches.dir("jacshingle", dir, Seq("documents"))
-    if (!new java.io.File(tokBase, "_SUCCESS").exists()) {
+  private[graft] def shingleTokRaw(spark: SparkSession, dir: String): DataFrame =
+    read(spark, shingleTokStore(spark, dir))
+
+  private def shingleTokStore(spark: SparkSession, dir: String): String =
+    graft.Caches.once(spark, "jacshingle_v1", dir, Seq("documents"))(
       fanout(documents(spark, dir))
         .select(col("doc_id"), toks.as("tk"))
         .filter(size(col("tk")) >= 3)
         .select(col("doc_id"), explode(array_distinct(shingles(col("tk")))).as("tk"))
-        .write.mode("overwrite").parquet(tokBase)
-    }
-    read(spark, tokBase)
-  }
+        .write.parquet(_))
 
   private[graft] def shingleTok(spark: SparkSession, dir: String): DataFrame = {
-    val tokBase = graft.Caches.dir("jacshingle", dir, Seq("documents"))
-    val raw = shingleTokRaw(spark, dir)
+    val tokBase = shingleTokStore(spark, dir)
+    val raw = read(spark, tokBase)
     // Project to xxhash64 shingle IDS at the scan (round 14): every
     // downstream shuffle — global frequency, the per-doc rank window's
     // external sort, the prefix self-join, the doc-set collect — ships

@@ -66,22 +66,22 @@ object Relational {
     * an explicit schema (no runtime inference — the reference declares
     * schemas statically, `/root/reference/src/extract/fs.rs:6-13`). */
   private def scanJson(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.Caches.dir("region_json", dir, Seq("region"))
-    region(spark, dir).coalesce(1).write.mode("overwrite").json(tmp)
+    val store = graft.Caches.once(spark, "region_json_v1", dir, Seq("region"))(
+      region(spark, dir).coalesce(1).write.json(_))
     val schema = StructType(Seq(
       StructField("r_regionkey", IntegerType), StructField("r_name", StringType)))
-    spark.read.schema(schema).json(tmp)
+    spark.read.schema(schema).json(store)
       .select(col("r_regionkey"), col("r_name"))
       .orderBy(col("r_regionkey"))
   }
 
   private def scanCsv(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.Caches.dir("nation_csv", dir, Seq("nation"))
-    nation(spark, dir).coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
+    val store = graft.Caches.once(spark, "nation_csv_v1", dir, Seq("nation"))(
+      nation(spark, dir).coalesce(1).write.option("header", "true").csv(_))
     val schema = StructType(Seq(
       StructField("n_nationkey", IntegerType), StructField("n_name", StringType),
       StructField("n_regionkey", IntegerType)))
-    spark.read.schema(schema).option("header", "true").csv(tmp)
+    spark.read.schema(schema).option("header", "true").csv(store)
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
       .orderBy(col("n_nationkey"))
   }
@@ -93,10 +93,9 @@ object Relational {
     * order-independent corpus profile (line count, total/min/max
     * chars) — which the oracle recomputes from the parquet original. */
   private def scanText(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.Caches.dir("documents_text", dir, Seq("documents"))
-    if (!new java.io.File(tmp, "_SUCCESS").exists())
-      documents(spark, dir).select(col("text")).write.mode("overwrite").text(tmp)
-    spark.read.text(tmp)
+    val store = graft.Caches.once(spark, "documents_text_v1", dir, Seq("documents"))(
+      documents(spark, dir).select(col("text")).write.text(_))
+    spark.read.text(store)
       .agg(count(lit(1)).as("n_lines"),
         sum(length(col("value"))).cast(LongType).as("total_chars"),
         min(length(col("value"))).cast(LongType).as("min_chars"),
@@ -113,18 +112,15 @@ object Relational {
     * contents in executors; partition count follows
     * maxPartitionBytes like any file scan. */
   private def scanBinaryFile(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = new java.io.File(graft.Caches.dir("region_bin", dir, Seq("region")))
-    if (!new java.io.File(tmp, "_DONE").exists()) {
-      tmp.mkdirs()
+    val store = graft.Caches.once(spark, "region_bin_v1", dir, Seq("region")) { out =>
       region(spark, dir).select(col("r_regionkey"), col("r_name")).collect()
         .foreach { r => // 5 bounded dim rows — fixture setup, not a data path
-          val f = new java.io.FileOutputStream(new java.io.File(tmp, s"r${r.getInt(0)}.bin"))
-          try f.write(r.getString(1).getBytes("UTF-8")) finally f.close()
+          graft.Caches.writeBytes(spark, s"$out/r${r.getInt(0)}.bin",
+            r.getString(1).getBytes("UTF-8"))
         }
-      new java.io.FileOutputStream(new java.io.File(tmp, "_DONE")).close()
     }
     spark.read.format("binaryFile").option("pathGlobFilter", "*.bin")
-      .load(tmp.getAbsolutePath)
+      .load(store)
       .select(
         element_at(split(col("path"), "/"), -1).as("file"),
         col("length"),
@@ -139,14 +135,12 @@ object Relational {
     * from the parquet original and equality proves the round-trip is
     * lossless (including doubles: the writer emits full precision). */
   private def scanXml(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.Caches.dir("supplier_xml", dir, Seq("supplier"))
-    if (!new java.io.File(tmp, "_SUCCESS").exists())
-      supplier(spark, dir).coalesce(1).write.mode("overwrite")
-        .option("rowTag", "supplier").xml(tmp)
+    val store = graft.Caches.once(spark, "supplier_xml_v1", dir, Seq("supplier"))(
+      supplier(spark, dir).coalesce(1).write.option("rowTag", "supplier").xml(_))
     val schema = StructType(Seq(
       StructField("s_suppkey", LongType), StructField("s_name", StringType),
       StructField("s_nationkey", LongType), StructField("s_acctbal", DoubleType)))
-    spark.read.schema(schema).option("rowTag", "supplier").xml(tmp)
+    spark.read.schema(schema).option("rowTag", "supplier").xml(store)
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey"), col("s_acctbal"))
       .orderBy(col("s_suppkey"))
   }
@@ -158,10 +152,9 @@ object Relational {
     * the oracle recomputes from the parquet original — equality proves
     * the format round-trip is lossless. */
   private def scanOrc(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = graft.Caches.dir("customer_orc", dir, Seq("customer"))
-    if (!new java.io.File(tmp, "_SUCCESS").exists())
-      customer(spark, dir).write.mode("overwrite").orc(tmp)
-    spark.read.orc(tmp)
+    val store = graft.Caches.once(spark, "customer_orc_v1", dir, Seq("customer"))(
+      customer(spark, dir).write.orc(_))
+    spark.read.orc(store)
       .filter(col("c_acctbal") > 0)
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"), graft.Parity.r2(sum(col("c_acctbal"))).as("bal"))

@@ -59,27 +59,27 @@ object ScalePatterns {
       .orderBy(col("o_orderpriority"))
   }
 
+  /** orders hive-partitioned by `o_year`, the write-once layout shared
+    * by [[partitionPrunedScan]] and [[joinDpp]]. */
+  private def yearLayout(spark: SparkSession, dir: String): String =
+    graft.Caches.once(spark, "partyear_v1", dir, Seq("orders"))(
+      orders(spark, dir).withColumn("o_year", year(col("o_orderdate")))
+        .write.partitionBy("o_year").parquet(_))
+
   /** Partition-pruned scan: the fact table is laid out
     * hive-partitioned by year (the standard 100 TB lake layout); a
     * filter on the partition column then prunes directories at PLANNING
     * time — the scan never opens a non-matching file, so query cost
     * follows the selected partitions, not the table. Written once and
-    * reused (amortized layout cost, like the bucketed tables); the
-    * _SUCCESS marker gates against a half-written layout. The test
-    * suite asserts PartitionFilters in the plan. */
-  def partitionPrunedScan(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Caches.dir("partyear", dir, Seq("orders"))
-    if (!new java.io.File(base, "_SUCCESS").exists()) {
-      orders(spark, dir)
-        .withColumn("o_year", year(col("o_orderdate")))
-        .write.partitionBy("o_year").mode("overwrite").parquet(base)
-    }
-    read(spark, base)
+    * reused (amortized layout cost, like the bucketed tables) through
+    * the write-once publish, so a half-written layout is never read.
+    * The test suite asserts PartitionFilters in the plan. */
+  def partitionPrunedScan(spark: SparkSession, dir: String): DataFrame =
+    read(spark, yearLayout(spark, dir))
       .filter(col("o_year") === 1995)
       .groupBy(month(col("o_orderdate")).cast("bigint").as("month"))
       .agg(count(lit(1)).as("n"), Parity.r2(sum(col("o_totalprice"))).as("revenue"))
       .orderBy(col("month"))
-  }
 
   /** DYNAMIC partition pruning (the TPC-DS date-dim pattern): the fact
     * table is hive-partitioned by year; the year filter lives on a
@@ -94,14 +94,7 @@ object ScalePatterns {
     * (exact arithmetic — no float threshold to drift cross-engine or
     * cross-SF; drops the trailing partial year at every SF). */
   def joinDpp(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Caches.dir("partyear", dir, Seq("orders"))
-    if (!new java.io.File(base, "_SUCCESS").exists()) {
-      orders(spark, dir)
-        .withColumn("o_year", year(col("o_orderdate")))
-        .write.partitionBy("o_year").mode("overwrite").parquet(base)
-    }
-    val dimBase = graft.Caches.dir("datedim", dir, Seq("orders"))
-    if (!new java.io.File(dimBase, "_SUCCESS").exists()) {
+    val dimBase = graft.Caches.once(spark, "datedim_v1", dir, Seq("orders")) { out =>
       val yc = orders(spark, dir)
         .groupBy(year(col("o_orderdate")).as("d_year"))
         .agg(count(lit(1)).as("d_n_orders"))
@@ -113,9 +106,9 @@ object ScalePatterns {
         .withColumn("d_complete",
           (col("d_n_orders") * 5 * col("ny") > col("t") * 4).cast("int"))
         .select(col("d_year"), col("d_n_orders"), col("d_complete"))
-        .write.mode("overwrite").parquet(dimBase)
+        .write.parquet(out)
     }
-    val fact = read(spark, base)
+    val fact = read(spark, yearLayout(spark, dir))
     val dim = read(spark, dimBase).filter(col("d_complete") === 1)
     fact.join(broadcast(dim), col("o_year") === col("d_year"))
       .groupBy(col("o_year").cast("bigint").as("yr"))
@@ -134,14 +127,12 @@ object ScalePatterns {
     * bit-for-bit. */
   def incrementalAgg(spark: SparkSession, dir: String): DataFrame = {
     val cutoff = "1997-01-01"
-    val base = graft.Caches.dir("incragg", dir, Seq("lineitem"))
-    if (!new java.io.File(base, "_SUCCESS").exists()) {
+    val base = graft.Caches.once(spark, "incragg_v1", dir, Seq("lineitem"))(
       lineitem(spark, dir)
         .filter(col("l_shipdate") < lit(cutoff))
         .groupBy(col("l_linestatus"))
         .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("qty"))
-        .write.mode("overwrite").parquet(base)
-    }
+        .write.parquet(_))
     val delta = lineitem(spark, dir)
       .filter(col("l_shipdate") >= lit(cutoff))
       .groupBy(col("l_linestatus"))
@@ -257,25 +248,24 @@ object ScalePatterns {
     * 10% discount), untouched partitions keep their original files.
     * `partitionOverwriteMode=dynamic` is set on a child session so the
     * static-mode default (which would truncate the whole table) never
-    * leaks to other queries. Both writes are idempotent: the base
-    * layout is content-keyed write-once (graft.Caches), and re-running
-    * the restatement rewrites the same partition with the same rows.
+    * leaks to other queries. The base layout AND its restatement are
+    * built together into one write-once store (graft.Caches.once), so
+    * no reader ever sees the layout unrestated.
     * The oracle recomputes the post-restatement state from the raw
     * table — so the check proves the selective overwrite left every
     * other partition intact. */
   def partitionOverwrite(spark: SparkSession, dir: String): DataFrame = {
     val s = spark.newSession()
     s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val base = graft.Caches.dir("partoverwrite", dir, Seq("orders"))
-    val withYr = orders(s, dir)
-      .withColumn("yr", year(col("o_orderdate")).cast("long"))
-    if (!new java.io.File(base, "_SUCCESS").exists()) {
-      withYr.write.partitionBy("yr").mode("overwrite").parquet(base)
+    val base = graft.Caches.once(s, "partoverwrite_v1", dir, Seq("orders")) { out =>
+      val withYr = orders(s, dir)
+        .withColumn("yr", year(col("o_orderdate")).cast("long"))
+      withYr.write.partitionBy("yr").parquet(out)
       // restatement: only the yr=1997 directory is replaced — dynamic
       // mode scopes the overwrite to partitions present in the write
       withYr.filter(col("yr") === 1997)
         .withColumn("o_totalprice", col("o_totalprice") * 0.9)
-        .write.partitionBy("yr").mode("overwrite").parquet(base)
+        .write.partitionBy("yr").mode("overwrite").parquet(out)
     }
     read(s, base)
       .groupBy(col("yr"))
@@ -374,20 +364,17 @@ object ScalePatterns {
     * of the raw table — proving the rewrite lost nothing — while the
     * test suite asserts the file count actually collapsed. */
   def compaction(spark: SparkSession, dir: String): DataFrame = {
-    val base = graft.Caches.dir("compact", dir, Seq("orders"))
-    val frag = s"$base/fragmented"
-    val packed = s"$base/compacted"
-    if (!new java.io.File(packed, "_SUCCESS").exists()) {
-      orders(spark, dir).repartition(64)
-        .write.mode("overwrite").parquet(frag)
-      val bytes = new java.io.File(frag).listFiles()
-        .filter(f => f.getName.endsWith(".parquet")).map(_.length).sum
+    val base = graft.Caches.once(spark, "compact_v1", dir, Seq("orders")) { out =>
+      val frag = s"$out/fragmented"
+      orders(spark, dir).repartition(64).write.parquet(frag)
+      val fragPath = new org.apache.hadoop.fs.Path(frag)
+      val bytes = fragPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(fragPath).filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
       val target = 32L * 1024 * 1024 // local-mode stand-in for the 128 MB lake default
       val nOut = math.max(1L, (bytes + target - 1) / target).toInt
-      read(spark, frag).repartition(nOut)
-        .write.mode("overwrite").parquet(packed)
+      read(spark, frag).repartition(nOut).write.parquet(s"$out/compacted")
     }
-    read(spark, packed)
+    read(spark, s"$base/compacted")
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"), Parity.r2(sum(col("o_totalprice"))).as("total"))
       .orderBy(col("o_orderstatus"))

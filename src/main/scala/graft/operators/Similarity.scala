@@ -25,10 +25,6 @@ import org.apache.spark.sql.types._
 object Similarity {
   import Tables._
 
-  /** Serializes intra-JVM first-builds of the lexical index (the
-    * temp+rename publish only settles inter-PROCESS races). */
-  private val lexIdxBuildLock = new Object
-
   /** The composable dot form — since round 10 the optimizer rule
     * [[graft.plans.RewriteDotProduct]] rewrites every occurrence into
     * the codegen'd `dot_product`, so this IS the codegen path wherever
@@ -278,33 +274,23 @@ object Similarity {
     * tables' write-once shuffle). Persisted per corpus CONTENT (Caches
     * digest) as k rows of Double.toString values — a lossless
     * round-trip, so a reloaded centroid is bit-identical to a fresh
-    * one. Publish is write-temp-then-rename so a racing reader never
-    * sees a half-written file. */
+    * one. Published through [[graft.Caches.once]], so a reader sees
+    * the complete store or none. */
   private[operators] def trainedCentroids(
       v: DataFrame, dir: String, k: Int, iters: Int,
       kind: String = "ivfcent", tag: String = ""): Seq[(Int, Seq[Double])] = {
-    val base = new java.io.File(graft.Caches.dir(kind, dir, Seq("embeddings")))
-    // _q6 = the round-11 quantized-Lloyd algorithm version: a stale
+    val spark = v.sparkSession
+    // _v6 = the round-11 quantized-Lloyd algorithm version: a stale
     // float-mean cache from an earlier build must never satisfy the
     // quantized oracle, so the algorithm revision is part of the key
-    val f = new java.io.File(base, s"centroids${tag}_k${k}_i${iters}_q6.csv")
-    if (f.exists()) {
-      val src = scala.io.Source.fromFile(f)
-      try src.getLines().toIndexedSeq.map { line =>
-        val parts = line.split(',')
-        (parts.head.toInt, parts.tail.map(java.lang.Double.parseDouble).toSeq)
-      } finally src.close()
-    } else {
-      val cents = trainCentroids(v, k, iters)
-      base.mkdirs()
-      val tmp = java.io.File.createTempFile("centroids", ".tmp", base)
-      val w = new java.io.PrintWriter(tmp)
-      try cents.foreach { case (id, ce) =>
-        w.println((id.toString +: ce.map(_.toString)).mkString(","))
-      } finally w.close()
-      if (!tmp.renameTo(f) && !f.exists())
-        sys.error(s"could not publish centroids to $f")
-      cents
+    val base = graft.Caches.once(spark, s"${kind}_k${k}_i${iters}${tag}_v6", dir,
+        Seq("embeddings")) { out =>
+      graft.Caches.writeLines(spark, s"$out/centroids.csv", trainCentroids(v, k, iters)
+        .map { case (id, ce) => (id.toString +: ce.map(_.toString)).mkString(",") })
+    }
+    graft.Caches.readLines(spark, s"$base/centroids.csv").map { line =>
+      val parts = line.split(',')
+      (parts.head.toInt, parts.tail.map(java.lang.Double.parseDouble).toSeq)
     }
   }
 
@@ -915,49 +901,30 @@ object Similarity {
     * tables' write-once shuffle. Persisted per corpus CONTENT
     * ([[graft.Caches]] digest) as four parquet relations; longs
     * round-trip exactly, so a reloaded index is bit-identical to a
-    * fresh derivation and every consuming oracle is unchanged. Publish
-    * is write-temp-dir-then-rename — a racing reader never sees a
-    * half-written index; the loser of a publish race deletes its temp.
+    * fresh derivation and every consuming oracle is unchanged. The
+    * four relations are published together through
+    * [[graft.Caches.once]], so a reader sees the whole index or none.
     * Build cost is the text_tfidf cost class (one token-explode pass
     * per relation), paid once per corpus, off the query path. */
   private[operators] def lexicalIndex(
       spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val path = graft.Caches.dir("lexidx", dir, Seq("documents"))
-    val done = new java.io.File(path)
-    // Intra-JVM publish races (e.g. the streaming twin's foreachBatch
-    // racing a concurrent batch query on first build) serialize here:
-    // pid-only tmp suffixes collide WITHIN a JVM, and two threads
-    // interleaving writes into the same tmp dir could publish a mixed
-    // index. The rename below still settles inter-process races.
-    if (!done.isDirectory) lexIdxBuildLock.synchronized {
-      if (!done.isDirectory) {
+    val path = graft.Caches.once(spark, "lexidx_v1", dir, Seq("documents")) { out =>
       val docs = fanout(documents(spark, dir))
       val tok = docs.select(col("doc_id"),
         explode(filter(split(col("text"), " "), t => t =!= "")).as("term"))
       val tf = tok.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
       val dlen = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      val tmp = new java.io.File(done.getParentFile,
-        done.getName + ".tmp" + ProcessHandle.current().pid() +
-          "t" + Thread.currentThread().getId)
-      tf.write.mode("overwrite").parquet(s"$tmp/tf")
+      tf.write.parquet(s"$out/tf")
       // df and the scalar stats derive from the just-written relations —
       // read them back rather than re-scanning the corpus twice more
-      read(spark, s"$tmp/tf").groupBy(col("term"))
-        .agg(count(lit(1)).as("df")).write.mode("overwrite").parquet(s"$tmp/df")
-      dlen.write.mode("overwrite").parquet(s"$tmp/dlen")
-      read(spark, s"$tmp/dlen")
+      read(spark, s"$out/tf").groupBy(col("term"))
+        .agg(count(lit(1)).as("df")).write.parquet(s"$out/df")
+      dlen.write.parquet(s"$out/dlen")
+      read(spark, s"$out/dlen")
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"),
           max(col("doc_id")).as("max_id"))
-        .write.mode("overwrite").parquet(s"$tmp/stats")
-      if (!tmp.renameTo(done) && !done.isDirectory)
-        sys.error(s"could not publish lexical index to $done")
-      if (tmp.isDirectory) { // lost the publish race — drop the duplicate
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(tmp)
-      }
-    } }
+        .write.parquet(s"$out/stats")
+    }
     (read(spark, s"$path/tf"), read(spark, s"$path/dlen"),
       read(spark, s"$path/df"), read(spark, s"$path/stats"))
   }

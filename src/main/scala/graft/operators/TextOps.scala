@@ -627,11 +627,9 @@ object TextOps {
   private def dedupWinnowingIncremental(spark: SparkSession, dir: String): DataFrame = {
     def fpOf(docs: DataFrame): DataFrame =
       winnowSelectionsOf(docs).select(col("doc_id"), col("wmin")).distinct()
-    val idxBase = graft.Caches.dir("wnindex", dir, Seq("documents"))
-    if (!new java.io.File(idxBase, "_SUCCESS").exists()) {
+    val idxBase = graft.Caches.once(spark, "wnindex_v1", dir, Seq("documents"))(
       fpOf(fanout(documents(spark, dir)).filter(col("doc_id") % 5 =!= 4))
-        .write.mode("overwrite").parquet(idxBase)
-    }
+        .write.parquet(_))
     val hist = read(spark, idxBase)
     val batch = fpOf(fanout(documents(spark, dir)).filter(col("doc_id") % 5 === 4))
       .localCheckpoint()
@@ -737,14 +735,9 @@ object TextOps {
   private[operators] def fitClassifier(
       spark: SparkSession, dir: String,
       epochs: Int = ClsFitEpochs): Seq[Array[Long]] = {
-    val base = new java.io.File(graft.Caches.dir("clsfit", dir, Seq("documents")))
-    // both tunables in the name: a cap change must miss the cache too
-    val f = new java.io.File(base, s"weights_seq_e${epochs}_c$ClsFitSampleCap.csv")
-    if (f.exists()) {
-      val src = scala.io.Source.fromFile(f)
-      try src.getLines().toIndexedSeq.map(_.split(',').map(_.toLong))
-      finally src.close()
-    } else {
+    // both tunables in the kind: a cap change must miss the cache too
+    val kind = s"clsfit_e${epochs}_c${ClsFitSampleCap}_v1"
+    val base = graft.Caches.once(spark, kind, dir, Seq("documents")) { out =>
       val cnt = hashedFeats(spark, dir)
         .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
       val lab = cnt
@@ -778,16 +771,11 @@ object TextOps {
             while (i < 64) { w(i) += y * cv(i); i += 1 }
           }
         }
-        w.clone()
+        w.mkString(",")
       }
-      base.mkdirs()
-      val tmp = java.io.File.createTempFile("clsfit", ".tmp", base)
-      val pw = new java.io.PrintWriter(tmp)
-      try steps.foreach(s => pw.println(s.mkString(","))) finally pw.close()
-      if (!tmp.renameTo(f) && !f.exists())
-        sys.error(s"could not publish classifier weights to $f")
-      steps
+      graft.Caches.writeLines(spark, s"$out/weights.csv", steps)
     }
+    graft.Caches.readLines(spark, s"$base/weights.csv").map(_.split(',').map(_.toLong))
   }
 
   /** The learned weight trajectory, (iter, bucket, weight) — every

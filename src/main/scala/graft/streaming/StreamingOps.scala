@@ -603,8 +603,8 @@ object StreamingOps {
   /** RERANK-ON-INGEST — the streaming twin of the batch
     * `sim_rerank_fuse` (round 16, r15 VERDICT task 5): arriving QUERY
     * ids rerank against the static corpus + the PERSISTED write-once
-    * lexical index ([[graft.operators.Similarity.lexicalIndex]] — the
-    * trainedCentroids discipline applied to BM25 state). Per batch the
+    * lexical index ([[graft.operators.Similarity.lexicalIndex]], a
+    * [[graft.Caches.once]] store of BM25 state). Per batch the
     * work is the eval-only path: ANN shortlist vs the corpus (broadcast
     * batch-bounded query side), BM25 term joins restricted to the
     * shortlist, one fusion projection — the corpus-wide tf/df/dlen

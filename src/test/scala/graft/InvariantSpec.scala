@@ -526,13 +526,9 @@ class InvariantSpec extends AnyFunSuite {
 
   test("IVF centroids train once: a second invocation reuses the stored layout") {
     q("sim_ann_ivf").write.format("noop").mode("overwrite").save()
-    // _q6 = the algorithm-version suffix in the store key (round 11).
-    // Until round 13 this test checked the PRE-rename filename and
-    // passed vacuously against a stale cache file from an old build;
-    // clearing /tmp/graft_cache exposed it. Keep this name in sync
-    // with Similarity.trainedCentroids.
+    // the store kind carries k, iters and the algorithm version (_v6)
     val f = new java.io.File(
-      Caches.dir("ivfcent", sf, Seq("embeddings")), "centroids_k10_i2_q6.csv")
+      Caches.dir("ivfcent_k10_i2_v6", sf, Seq("embeddings")), "centroids.csv")
     assert(f.exists(), "first invocation must publish the centroid store")
     val published = f.lastModified()
     q("sim_ann_ivf").write.format("noop").mode("overwrite").save()
@@ -973,7 +969,7 @@ class InvariantSpec extends AnyFunSuite {
       val f = new java.io.File(d)
       if (!f.isDirectory) 0 else f.listFiles().count(_.getName.endsWith(".parquet"))
     }
-    val base = Caches.dir("compact", sf, Seq("orders"))
+    val base = Caches.dir("compact_v1", sf, Seq("orders"))
     val frag = parquetFiles(s"$base/fragmented")
     val packed = parquetFiles(s"$base/compacted")
     assert(frag == 64, s"fragmented layout should have 64 shards, got $frag")

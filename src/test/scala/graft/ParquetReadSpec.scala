@@ -1,19 +1,18 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
 import scala.util.Try
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.grafttest.Listeners
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Tables.read]], the one parquet read path: a file set's schema is
   * inferred once, later reads of the unchanged files start no Spark
   * job and analyze to the same plan as a plain read, and a changed
-  * file set or reader conf is never served a stale schema. */
+  * file set or reader conf is never served a stale schema. Its source
+  * scan also pins the one store publish path, [[Caches.once]]. */
 class ParquetReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -21,27 +20,7 @@ class ParquetReadSpec extends AnyFunSuite {
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory("graft_parquet_read").resolve(name).toString
 
-  /** Spark jobs `f` starts on this thread (they carry its job group). */
-  private def jobsDuring[T](f: => T): (Int, T) = {
-    val sc = spark.sparkContext
-    val group = "parquet-read-" + Thread.currentThread().getId
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "ParquetReadSpec")
-    try {
-      val out = f
-      Listeners.drain(sc)
-      (jobs.get(), out)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsDuring[T](f: => T): (Int, T) = Listeners.jobsDuring(spark.sparkContext)(f)
 
   private def analyzed(df: DataFrame): String =
     PlanShapes.normalize(df.queryExecution.analyzed.toString)
@@ -111,18 +90,24 @@ class ParquetReadSpec extends AnyFunSuite {
     } finally before.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
   }
 
-  test("src/main reads parquet only through Tables.read") {
+  test("src/main has one parquet read path and one store publish path") {
     // `.read` then any `.schema(..)`/`.option(..)` calls, then `.parquet(`
     val parquetRead = """\.read(\s*\.\w+\([^()]*\))*\s*\.parquet\(""".r
+    // the idioms of hand-rolled publishing that Caches.once replaces
+    val publish = """renameTo\(|"_SUCCESS"|"_DONE"|createTempFile|BuildLock""".r
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val hits = files(root).filter(_.getName.endsWith(".scala")).flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      parquetRead.findAllIn(src).map(_ => root.toPath.relativize(f.toPath).toString).toSeq
+    val sources = files(root).filter(_.getName.endsWith(".scala")).map { f =>
+      root.toPath.relativize(f.toPath).toString ->
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
     }
+    def hits(re: scala.util.matching.Regex): Seq[String] =
+      sources.flatMap { case (name, src) => re.findAllIn(src).map(m => s"$name: $m").toSeq }
     // the helper's inferring read and its declared-schema read
-    assert(hits.sorted == Seq("graft/Tables.scala", "graft/Tables.scala"), hits)
+    assert(hits(parquetRead).map(_.takeWhile(_ != ':')).sorted ==
+      Seq("graft/Tables.scala", "graft/Tables.scala"), hits(parquetRead))
+    assert(hits(publish).filterNot(_.startsWith("graft/Caches.scala:")).isEmpty, hits(publish))
   }
 }
