@@ -7,10 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions._
 
-/** The one place graft's SQL functions and optimizer rule enter a
+/** The one place graft's SQL functions and optimizer rules enter a
   * session. Every session built by [[GraftSession.builder]] (or with
   * `spark.sql.extensions=graft.GraftExtensions`) has all 14 functions
-  * in SQL and `expr(...)`, and [[plans.RewriteDotProduct]] in its
+  * in SQL and `expr(...)`, [[plans.RewriteDotProduct]] in its
+  * optimizer and [[plans.SmallSortOnePartition]] in AQE's runtime
   * optimizer; operators never register anything per call.
   *
   * `bloom_agg(xxhash64(k), estItems, numBits)` and
@@ -49,6 +50,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     fn("bpe_subwords", classOf[BpeSubwords])(a => BpeSubwords(a.head, operators.TextOps.bpeVocab,
       a.tail.map(_.eval().asInstanceOf[UTF8String].toString)))
     e.injectOptimizerRule(_ => plans.RewriteDotProduct)
+    e.injectRuntimeOptimizerRule(_ => plans.SmallSortOnePartition)
   }
 }
 

@@ -21,6 +21,12 @@ import java.nio.file.{Files, Paths}
   * thresholds, data sizes feed strategy choices), so the generator
   * runs in the same [[gateSession]] as TestSpark, at sf0.001.
   *
+  * The hashed plan is the INITIAL adaptive plan, taken before anything
+  * runs. AQE runtime rules (`injectRuntimeOptimizerRule`, e.g.
+  * [[plans.SmallSortOnePartition]]) act only when a stage finishes, so
+  * the tripwire never sees them: a runtime rule that changes a final
+  * plan needs its own test (SmallSortSpec).
+  *
   * Regenerate after an intentional plan change:
   *   sbt "runMain graft.PlanShapes"         # rewrites tools/plan_shapes.json
   * and record WHY in PLANS.md in the same commit.

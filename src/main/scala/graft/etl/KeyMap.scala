@@ -17,16 +17,17 @@ import org.apache.spark.sql.types.LongType
   * Keys must be unique and non-negative (the bijection requires the
   * first; the free-key arithmetic below relies on both).
   *
-  * Implementation: the free keys come from the gaps between used keys.
-  * One window over `dim` ordered by key pairs each used key `k` of rank
-  * `r` with its predecessor `prev` (−1 for the first); the keys
-  * `prev+1 .. k-1` are free, and a free key `g` found there is the
-  * `(g − r)`-th free key overall. Past the last gap the free keys run
-  * on from `max+1`, so free slot `s` beyond the gaps is `|dim| + s`.
-  * Novel values, ranked by value, take the slot of their rank — exact
-  * mex gap-filling, O(max key) work on the dim side, never
-  * proportional to fact volume. At 100 TB the dim is the small side:
-  * `lookup` broadcasts it.
+  * Implementation: rank arithmetic, never an enumeration of free keys.
+  * A used key `k` of rank `r` (0-based, in key order) has `k − r` free
+  * keys below it, so novel value number `s` (0-based, in value order)
+  * gets key `s + #{k : k − rank(k) ≤ s}`. One exchange gathers the used
+  * keys and the novel values into a single partition, where two
+  * windows compute it: the first, ordered by (novel, key, value), ranks
+  * used keys and numbers the novel values; the second, ordered by
+  * (free, novel), counts the used keys at or below each slot. Exact mex
+  * gap-filling in O(|dim| + |novel|) work, whatever the key values are,
+  * and never proportional to fact volume. At 100 TB the dim is the
+  * small side: `lookup` and the novel-value anti-join broadcast it.
   *
   * `transact` runs no Spark action: it returns one lazy plan, so
   * `values` is read once, by the caller's action, and an error in its
@@ -44,12 +45,21 @@ final case class KeyMap(dim: DataFrame) {
     * reference's per-record insertion by iteration order). */
   def transact(values: DataFrame): KeyMap = {
     val novel = values.toDF("value").distinct()
-      .join(dim, Seq("value"), "left_anti")
-      .withColumn("slot_idx",
-        (row_number().over(Window.orderBy(col("value"))) - 1).cast(LongType))
-    val assigned = novel.crossJoin(keyCount)
-      .join(gaps, Seq("slot_idx"), "left")
-      .select(coalesce(col("gap_key"), col("n_keys") + col("slot_idx")).as("key"), col("value"))
+      .join(broadcast(dim), Seq("value"), "left_anti")
+    val byInput = Window.orderBy(col("novel"), col("key"), col("value"))
+    val bySlot = Window.orderBy(col("free"), col("novel"))
+    val used = when(col("novel"), 0L).otherwise(1L)
+    // Used keys sort first, so `n` is a used key's rank, and `n − u` (u =
+    // all used keys) is a novel value's number.
+    val assigned = dim.select(col("key"), lit(false).as("novel"))
+      .unionByName(novel.select(col("value"), lit(true).as("novel")), allowMissingColumns = true)
+      .select(col("key"), col("value"), col("novel"),
+        (row_number().over(byInput) - 1).as("n"), sum(used).over(byInput).as("u"))
+      .select(col("value"), col("novel"),
+        when(col("novel"), col("n") - col("u")).otherwise(col("key") - col("n")).as("free"))
+      .select(col("value"), col("novel"), (col("free") + sum(used).over(bySlot)).as("key"))
+      .filter(col("novel"))
+      .select(col("key"), col("value"))
     KeyMap(dim.unionByName(assigned))
   }
 
@@ -59,26 +69,13 @@ final case class KeyMap(dim: DataFrame) {
     facts.join(broadcast(dim.withColumnRenamed("value", valueCol)), Seq(valueCol), "left")
 
   /** The reference's `calc_lowest_key` (mex): smallest non-negative
-    * integer not present as a key (`keymap.rs:129-135`) — the first gap
-    * key, else `|dim|`. */
+    * integer not present as a key (`keymap.rs:129-135`). Keys
+    * `0 .. m−1` are all used exactly when the first `m` keys in key
+    * order equal their ranks, so the mex is the count of keys with
+    * `key == rank`. */
   def lowestFreeKey(): Long =
-    gaps.agg(min(col("gap_key")).as("gap_key")).crossJoin(keyCount)
-      .select(coalesce(col("gap_key"), col("n_keys"))).collect()(0).getLong(0)
-
-  /** Free keys below the max key, each with its rank among all free
-    * keys: `(gap_key, slot_idx)`. */
-  private def gaps: DataFrame = {
-    val byKey = Window.orderBy(col("key"))
-    dim.select(col("key"),
-        lag(col("key"), 1, -1L).over(byKey).as("prev"),
-        (row_number().over(byKey) - 1).cast(LongType).as("rank"))
-      .filter(col("key") > col("prev") + 1)
-      .select(explode(sequence(col("prev") + 1, col("key") - 1)).as("gap_key"), col("rank"))
-      .select(col("gap_key"), (col("gap_key") - col("rank")).as("slot_idx"))
-  }
-
-  /** One row: the number of used keys, `n_keys`. */
-  private def keyCount: DataFrame = dim.agg(count(lit(1)).as("n_keys"))
+    dim.select(col("key"), (row_number().over(Window.orderBy(col("key"))) - 1).as("rank"))
+      .filter(col("key") === col("rank")).count()
 
   def lookupKey(value: String): Option[Long] =
     dim.filter(col("value") === value).select("key")

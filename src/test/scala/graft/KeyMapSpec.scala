@@ -42,6 +42,15 @@ class KeyMapSpec extends AnyFunSuite {
     assert(km.dim.count() == 5)
   }
 
+  test("keys {0, 2^40}: novel values take 1 and 2, then the mex is 3") {
+    // listing the free keys below the max key would take 2^40 rows
+    val far = KeyMap.fromDim(Seq((0L, "zero"), (1L << 40, "far")).toDF("k", "v"), "k", "v")
+    val km = far.transact(Seq("b", "a").toDF("value"))
+    assert(km.lookupKey("a").contains(1L))
+    assert(km.lookupKey("b").contains(2L))
+    assert(km.lowestFreeKey() == 3L)
+  }
+
   test("empty keymap starts at 0") {
     val km = KeyMap.empty(spark).transact(Seq("a", "b").toDF("value"))
     assert(km.lookupKey("a").contains(0L))
