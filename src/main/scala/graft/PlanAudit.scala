@@ -18,7 +18,7 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   * Usage: sbt -batch "runMain graft.PlanAudit <sfDir> [out.tsv]"
   * Prints one TSV row per query and a summary of every query tripping
-  * a screen; the committed artifact is plans/r18/plan_audit.tsv.
+  * a screen; the committed artifact is plans/r19/plan_audit.tsv.
   * Static explain only — nothing executes, so the audit covers the
   * whole registry in one JVM in minutes. */
 object PlanAudit {

@@ -203,69 +203,137 @@ object Similarity {
       .orderBy(col("qid"), col("rnk"))
   }
 
-  /** Distributed Lloyd k-means for the IVF coarse centroids — since
-    * round 11 the QUANTIZED, oracle-expressible variant (the
-    * [[clusterKmeans]] recipe), so every downstream consumer
+  /** Lloyd centroids: rows (key, cid, c). `key` is the group a keyed
+    * assignment looks a centroid up by (the super-cell `sid`, the PQ
+    * subspace `sub`); it is 0 and ignored when assignment is unkeyed. */
+  private[graft] type Cents = Seq[(Long, Long, Seq[Double])]
+
+  private[graft] def unkeyed(cents: Seq[(Long, Seq[Double])]): Cents =
+    cents.map { case (cid, c) => (0L, cid, c) }
+
+  /** THE QUANTIZED-LLOYD CORE — the one nearest-centroid argmin
+    * ([[nearest]]), the one centroid update ([[update]]) and the one
+    * round loop ([[train]]) behind every k-means in the engine: the
+    * IVF coarse and PQ / IVF-PQ codebook stores ([[trainCentroids]]),
+    * cluster_kmeans and the flat SemDeDup cells ([[kmeansModelSeq]]),
+    * both levels of the hierarchical cells ([[coarseModelSeq]]),
+    * sim_pq_train (keyed by subspace), the IVF/PQ encoders, and the
+    * three streaming ingest twins.
+    *
+    * Results are bit-identical to the DuckDB oracles'
+    * `list_inner_product` Lloyd CTEs, and to themselves across
+    * partitionings, under three conditions:
+    *  - distance is ‖x‖² − 2⟨x,c⟩ + ‖c‖² evaluated in that order,
+    *    every dot a left-to-right fold from 0.0 (DotProduct, which
+    *    `dotLambda` is rewritten to). ‖c‖² is folded on the driver as
+    *    `foldLeft(0.0)(acc + x*x)`, which IS DotProduct's loop, so the
+    *    literal equals a run-time `dot_product(c, c)` bit for bit;
+    *  - the argmin is ascending struct order on (dist, cid): ties go to
+    *    the lowest cid, the oracles' `ORDER BY dist, cid`;
+    *  - each coordinate is one exact division Σq / (n·10⁶) over BIGINT
+    *    sums of values quantized to 10⁻⁶, so no float sum depends on
+    *    partition order.
+    *
+    * Assignment is a map-side `array_min(transform(<literal>))`
+    * projection: no join, no window, no exchange, and no SortAggregate
+    * (an explode + min(struct) argmin plans one — struct buffers are
+    * not hash-aggregable). A transform lambda re-evaluates its body per
+    * candidate, so `x` must be a column (never an inline slice), and
+    * ‖x‖² is bound as the variable of a one-element transform around
+    * the argmin: a staged ‖x‖² column referenced once is inlined INTO
+    * the lambda by CollapseProject, running the self-dot k× per row
+    * (the first literal-argmin cut measured sim_pq_encode 1.8× slower
+    * at sf1 from an inline slice + self-dot).
+    * A training round is scan → argmin → combinable (key, cid, dim)
+    * agg → one ≤k-row collect; the per-round collect replaced a slower
+    * lazy DAG (crossJoin + per-vector window per round) in round 18. */
+  private def nearest(x: Column, cents: Cents,
+      key: Option[Column] = None): Column = {
+    def cands(cs: Cents): Column = array(cs.sortBy(_._2).map { case (_, cid, c) =>
+      struct(lit(cid).as("cid"), array(c.map(lit): _*).as("c"),
+        lit(c.foldLeft(0.0)((acc, v) => acc + v * v)).as("cc"))
+    }: _*)
+    // keyed: one literal map key → candidates; a key without
+    // centroids yields a null argmin
+    val lits = key.fold(cands(cents)) { k =>
+      element_at(map(cents.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
+        case (g, cs) => Seq(lit(g), cands(cs)) }: _*), k)
+    }
+    element_at(transform(array(dotLambda(x, x)), xx =>
+      array_min(transform(lits, c => struct(
+        (xx - lit(2.0) * dotLambda(x, c.getField("c")) + c.getField("cc")).as("dist"),
+        c.getField("cid").as("cid"), c.getField("cc").as("cc"))))), 1)
+  }
+
+  /** `v` (array column `e`, plus the key column when keyed) with its
+    * nearest centroid's cid, dist and cc. The argmin sits in its own
+    * projection, so CollapseProject evaluates it once per row. */
+  private[graft] def assign(v: DataFrame, cents: Cents,
+      key: Option[String] = None): DataFrame =
+    v.withColumn("m", nearest(col("e"), cents, key.map(col)))
+      .select(v.columns.map(col) ++
+        Seq(col("m.cid").as("cid"), col("m.dist").as("dist"), col("m.cc").as("cc")): _*)
+
+  /** One centroid update over an assignment: quantized BIGINT sums
+    * grouped by (key, cid, dim). A cell that lost every point is
+    * absent from the result. */
+  private def update(assigned: DataFrame, key: Option[String]): DataFrame = {
+    val k = key.map(col).toSeq
+    assigned
+      .select(k ++ Seq(col("cid"), posexplode(transform(col("e"),
+        x => floor(x * lit(1000000.0) + lit(0.5)).cast("long"))).as(Seq("i", "xq"))): _*)
+      .groupBy(k ++ Seq(col("cid"), col("i")): _*)
+      .agg(sum(col("xq")).as("sq"), count(lit(1)).as("cnt"))
+      .withColumn("ci", col("sq").cast("double") /
+        (col("cnt") * lit(1000000L)).cast("double"))
+      .groupBy(k :+ col("cid"): _*)
+      .agg(transform(sort_array(collect_list(struct(col("i"), col("ci")))),
+        s => s.getField("ci")).as("c"))
+      .select(key.fold(lit(0L))(col).as("key"), col("cid"), col("c"))
+  }
+
+  /** `rounds` Lloyd rounds from `init` over `v`, each collected. */
+  private def train(v: DataFrame, key: Option[String], init: Cents,
+      rounds: Int): Cents =
+    (1 to rounds).foldLeft(init) { (cents, _) =>
+      update(assign(v, cents, key), key).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toIndexedSeq))
+        .sortBy(t => (t._1, t._2)).toIndexedSeq
+    }
+
+  /** The k lowest-vec_id vectors as unkeyed centroids 0..k−1 — the
+    * oracles' `ORDER BY vec_id LIMIT k` init. */
+  private def lowestIds(v: DataFrame, k: Int): Cents =
+    v.orderBy(col("vec_id")).limit(k).select(col("e")).collect().toIndexedSeq
+      .zipWithIndex.map { case (r, i) => (0L, i.toLong, r.getSeq[Double](0).toIndexedSeq) }
+
+  /** The IVF coarse / PQ codebook trainer — since round 11 the
+    * quantized, oracle-expressible Lloyd, so every downstream consumer
     * (`sim_ann_ivf`, `sim_pq_encode`, `sim_ann_ivfpq`) carries a real
-    * DuckDB oracle instead of `no_oracle by design`:
-    *
-    *  - the training sample is an md5 hash-split (`md5('cs:'||vec_id)`
-    *    — never xxhash64, which the oracle cannot recompute);
-    *  - assignment scores ‖x‖² − 2⟨x,c⟩ + ‖c‖² with sequential-fold
-    *    dots (bitwise = DuckDB `list_inner_product`), ties to the
-    *    lowest centroid id;
-    *  - centroid updates sum per-dimension values quantized to 1e-6
-    *    BIGINTs — exact and partition-order-free — and each coordinate
-    *    is one exact-int division Σq/(n·10⁶), so DuckDB re-derives
-    *    bit-identical centroids round by round.
-    *
-    * Trains on the sample (centroids only need representativeness, so
-    * training cost is decoupled from corpus size) via a broadcast
-    * literal centroid array + a partial-agg `min(struct(…))` argmin —
-    * map-side combinable, no per-vector window. Only k×dim doubles
-    * return to the driver per iteration. Init is the k sample vectors
-    * with the lowest (md5(vec_id), vec_id) — corpus-order-free and
-    * cross-run stable. */
+    * DuckDB oracle ([[lloydSql]]). It trains on an md5 hash-split
+    * sample (`md5('cs:'||vec_id)` — never xxhash64, which the oracle
+    * cannot recompute), so training cost is decoupled from corpus size;
+    * init is the k sample vectors with the lowest (md5(vec_id),
+    * vec_id), corpus-order-free and cross-run stable. */
   private[operators] def trainCentroids(
-      v: DataFrame, k: Int, iters: Int): Seq[(Int, Seq[Double])] = {
+      v: DataFrame, k: Int, iters: Int): Seq[(Long, Seq[Double])] = {
     val sample = v
       .filter(conv(substring(md5(concat(lit("cs:"),
         col("vec_id").cast(StringType))), 1, 8), 16, 10).cast("long") % 4 === 0)
       .select(col("vec_id"), col("e"))
       .localCheckpoint() // iterated over — don't rescan parquet per round
-    var cents: Seq[(Int, Seq[Double])] =
+    val init: Cents =
       sample.withColumn("h", md5(col("vec_id").cast(StringType)))
         .orderBy(col("h"), col("vec_id")).limit(k)
         .collect().toIndexedSeq.zipWithIndex
-        .map { case (r, i) => (i, r.getAs[scala.collection.Seq[Double]]("e").toSeq) }
-    for (_ <- 1 to iters) {
-      val centLits = cents.map { case (id, ce) =>
-        struct(lit(id).as("cent_id"), array(ce.map(lit): _*).as("ce")) }
-      val means = sample
-        .select(col("vec_id"), col("e"), explode(array(centLits: _*)).as("c"))
-        .select(col("vec_id"), col("e"), struct(
-          (dotLambda(col("e"), col("e"))
-            - lit(2.0) * dotLambda(col("e"), col("c.ce"))
-            + dotLambda(col("c.ce"), col("c.ce"))).as("dist"),
-          col("c.cent_id").as("cent_id")).as("sc"))
-        .groupBy(col("vec_id")).agg(min(col("sc")).as("m"), first(col("e")).as("e"))
-        .select(col("m.cent_id").as("cell"), posexplode(transform(col("e"),
-          x => floor(x * lit(1000000.0) + lit(0.5)).cast("long"))).as(Seq("pos", "xq")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(sum(col("xq")).as("sq"), count(lit(1)).as("cnt"))
-        .withColumn("mx", col("sq").cast("double") /
-          (col("cnt") * lit(1000000L)).cast("double"))
-        .groupBy(col("cell"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mx")))),
-          s => s.getField("mx")).as("ce"))
-        .collect()
-        .map(r => r.getAs[Int]("cell") -> r.getAs[scala.collection.Seq[Double]]("ce").toSeq)
-        .toMap
+        .map { case (r, i) =>
+          (0L, i.toLong, r.getAs[scala.collection.Seq[Double]]("e").toIndexedSeq) }
+    (1 to iters).foldLeft(init) { (cents, _) =>
+      val means = train(sample, None, cents, 1).map(c => c._2 -> c).toMap
       // a centroid that lost every point keeps its previous position
       // (mirrored in the oracles as COALESCE over a LEFT JOIN)
-      cents = cents.map { case (id, old) => (id, means.getOrElse(id, old)) }
-    }
-    cents
+      cents.map(old => means.getOrElse(old._2, old))
+    }.map(c => (c._2, c._3))
   }
 
   /** Train-once centroid store: the coarse centroids are a LAYOUT
@@ -278,7 +346,7 @@ object Similarity {
     * the complete store or none. */
   private[operators] def trainedCentroids(
       v: DataFrame, dir: String, k: Int, iters: Int,
-      kind: String = "ivfcent", tag: String = ""): Seq[(Int, Seq[Double])] = {
+      kind: String = "ivfcent", tag: String = ""): Seq[(Long, Seq[Double])] = {
     val spark = v.sparkSession
     // _v6 = the round-11 quantized-Lloyd algorithm version: a stale
     // float-mean cache from an earlier build must never satisfy the
@@ -290,58 +358,15 @@ object Similarity {
     }
     graft.Caches.readLines(spark, s"$base/centroids.csv").map { line =>
       val parts = line.split(',')
-      (parts.head.toInt, parts.tail.map(java.lang.Double.parseDouble).toSeq)
+      (parts.head.toLong, parts.tail.map(java.lang.Double.parseDouble).toSeq)
     }
   }
-
-  /** Literal candidate array for a trained codebook — each entry
-    * carries its pre-folded ‖c‖² (the [[centsLitCol]] discipline:
-    * `foldLeft(0.0)(acc + x*x)` IS DotProduct's ascending-index IEEE
-    * sequence, so the constant is bit-identical to the runtime
-    * `dot_product(ce, ce)` the old exploded form evaluated per row). */
-  private def bookLitCol(cents: Seq[(Int, Seq[Double])],
-      idName: String): Column =
-    array(cents.map { case (id, ce) =>
-      val cc = ce.foldLeft(0.0)((acc, x) => acc + x * x)
-      struct(lit(id).as(idName), array(ce.map(lit): _*).as("ce"),
-        lit(cc).as("cc"))
-    }: _*)
-
-  /** Nearest-candidate struct via the literal MAP-SIDE argmin (round
-    * 18, the [[kmeansAssignLit]] form, guide §2.4): ascending struct
-    * order on (dist, id) replicates `min(struct(dist, id))` over the
-    * old explode exactly — the same ‖x‖² − 2⟨x,c⟩ + ‖c‖² doubles
-    * (dotLambda is rewritten to the very codegen DotProduct the
-    * exploded form called) and the same lowest-id tie-break — with NO
-    * Generate, NO Sort+SortAggregate pair and NO Exchange. The old
-    * shape looked map-side-combinable but was NOT hash-aggregable:
-    * min over a STRUCT buffer (like the r13 min-over-STRING trap) and
-    * first over ARRAY plan SortAggregate, i.e. a full sort of the n·k
-    * exploded rows on both sides of a vec_id exchange, per assignment
-    * (caught registry-wide by the round-18 PlanAudit screen).
-    *
-    * `x` and `xx = ⟨x,x⟩` must be PRE-STAGED COLUMNS (withColumn),
-    * never inline expressions: a transform lambda re-evaluates its
-    * body per candidate, so an inline slice() or self-dot would run
-    * k× per row (the first cut of this rewrite measured sim_pq_encode
-    * 1.8× SLOWER at sf1 from exactly that — 16 candidates × (slice +
-    * 2 dots) per subspace; hoisted, one ⟨x,c⟩ per candidate remains,
-    * which is the old exploded form's per-row work without its
-    * Generate/sort/shuffle). */
-  private def nearestLit(x: Column, xx: Column, cands: Column,
-      idName: String): Column =
-    array_min(transform(cands, c =>
-      struct(
-        (xx - lit(2.0) * dotLambda(x, c.getField("ce"))
-          + c.getField("cc")).as("dist"),
-        c.getField(idName).as(idName))))
 
   /** IVF-style ANN: k-means-trained coarse centroids partition the
     * corpus into cells (assignment = nearest centroid via the codegen
     * dot product); queries probe only their own cell, so the search
-    * join is cell-local — no all-pairs. Assignment is the literal
-    * map-side argmin ([[nearestLit]] — round 18; previously an
-    * explode + min(struct) that planned SortAggregate).
+    * join is cell-local — no all-pairs. Assignment is the Lloyd
+    * core's literal map-side argmin ([[assign]]).
     * Centroids come from the train-once store above — query cost is
     * assignment + probe, never training. Since round 11 the quantized
     * Lloyd makes the whole path DuckDB-re-derivable ⇒ full oracle
@@ -350,11 +375,8 @@ object Similarity {
   private def simAnnIvf(spark: SparkSession, dir: String): DataFrame = {
     val v = normed(spark, dir)
     val coarse = trainedCentroids(v, dir, k = 10, iters = 2)
-    val withCell = v
-      .withColumn("xx", dotLambda(col("e"), col("e")))
-      .withColumn("m",
-        nearestLit(col("e"), col("xx"), bookLitCol(coarse, "cent_id"), "cent_id"))
-      .select(col("vec_id"), col("e"), col("nrm"), col("m.cent_id").as("cell"))
+    val withCell = assign(v, unkeyed(coarse))
+      .select(col("vec_id"), col("e"), col("nrm"), col("cid").as("cell"))
     val q = withCell.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("e").as("qe"), col("nrm").as("qnrm"),
         col("cell").as("qcell"))
@@ -379,7 +401,7 @@ object Similarity {
     * are Lloyd-trained per subspace on the same deterministic hash
     * sample as IVF and persisted write-once (training is a LAYOUT cost,
     * not a query cost). Encoding is one pass: a literal map-side
-    * argmin per subspace ([[nearestLit]], round 18 — the winning
+    * argmin per subspace ([[nearest]], round 18 — the winning
     * struct carries its distortion so no second lookup), four winners
     * already in wide form — no explode, no aggregate, no exchange.
     * Output: the code manifest + reconstruction MSE (exact:
@@ -393,32 +415,30 @@ object Similarity {
     val subDim = 16  // dims per subspace (4 × 16 = 64)
     val k = 16       // codes per subspace → 4 bits each
     val v = normed(spark, dir)
-    val books: Seq[(Int, Seq[(Int, Seq[Double])])] = (0 until m).map { j =>
+    val books: Seq[(Int, Seq[(Long, Seq[Double])])] = (0 until m).map { j =>
       val sub = v.select(col("vec_id"), slice(col("e"), j * subDim + 1, subDim).as("e"))
       j -> trainedCentroids(sub, dir, k, iters = 2, kind = "pqcode", tag = s"_m$j")
     }
-    // per-subspace literal argmin (round 18, [[nearestLit]]): the four
+    // per-subspace literal argmin (round 18, [[nearest]]): the four
     // winners land as COLUMNS of one narrow projection — no 64-way
     // explode, no Sort/SortAggregate/Exchange, and the wide-form pivot
     // agg disappears because the codes are already wide. withColumn
-    // staging keeps the slice, the self-dot and each twice-referenced
-    // argmin in their own projections (the kmeansAssignLit
-    // CollapseProject note + the nearestLit hoisting contract).
+    // staging keeps each slice and each twice-referenced argmin in its
+    // own projection (the [[assign]] CollapseProject note + the
+    // [[nearest]] hoisting contract).
     val staged = (0 until m).foldLeft(v.select(col("vec_id"), col("e"))) {
       case (df, j) =>
         df.withColumn(s"se$j", slice(col("e"), j * subDim + 1, subDim))
-          .withColumn(s"sx$j", dotLambda(col(s"se$j"), col(s"se$j")))
     }
     val wide = books.foldLeft(staged) {
       case (df, (j, cs)) =>
-        df.withColumn(s"b$j",
-          nearestLit(col(s"se$j"), col(s"sx$j"), bookLitCol(cs, "code"), "code"))
+        df.withColumn(s"b$j", nearest(col(s"se$j"), unkeyed(cs)))
     }
     wide.select(col("vec_id"),
-      col("b0.code").cast(LongType).as("code0"),
-      col("b1.code").cast(LongType).as("code1"),
-      col("b2.code").cast(LongType).as("code2"),
-      col("b3.code").cast(LongType).as("code3"),
+      col("b0.cid").cast(LongType).as("code0"),
+      col("b1.cid").cast(LongType).as("code1"),
+      col("b2.cid").cast(LongType).as("code2"),
+      col("b3.cid").cast(LongType).as("code3"),
       // per-subspace distortions are quantized BEFORE summing exactly
       // as the old cross-row agg did (4 exact BIGINT adds — order-free,
       // identical value); the exact-int sum then divides out in the
@@ -467,15 +487,12 @@ object Similarity {
       struct(lit(id).as("cent_id"), array(ce.map(lit): _*).as("ce")) }
     val centMap = map(coarse.flatMap { case (id, ce) =>
       Seq(lit(id), array(ce.map(lit): _*)) }: _*)
-    // coarse routing via the literal map-side argmin ([[nearestLit]],
-    // round 18) — the old explode + min(struct)/first(array) planned a
+    // coarse routing via the literal map-side argmin ([[assign]]) —
+    // an explode + min(struct)/first(array) argmin plans a
     // Sort+SortAggregate pair around a vec_id exchange, per reference
     // to this subtree (the eval rows re-execute it several times)
-    val withCell = v
-      .withColumn("xx", dotLambda(col("e"), col("e")))
-      .withColumn("m",
-        nearestLit(col("e"), col("xx"), bookLitCol(coarse, "cent_id"), "cent_id"))
-      .select(col("vec_id"), col("e"), col("nrm"), col("m.cent_id").as("cell"))
+    val withCell = assign(v, unkeyed(coarse))
+      .select(col("vec_id"), col("e"), col("nrm"), col("cid").as("cell"))
       .withColumn("resid", zip_with(col("e"), element_at(centMap, col("cell")),
         (x, y) => x - y))
     val books = (0 until 4).map { j =>
@@ -489,9 +506,9 @@ object Similarity {
         struct(lit(j).as("sub"), lit(id).as("code"), array(ce.map(lit): _*).as("ce")) }
     }
     // encode: nearest residual codeword per (vector, subspace) — the
-    // same literal argmin as PQ encoding ([[nearestLit]], round 18; no
-    // 64-way explode, no Sort/SortAggregate/Exchange). Slices and
-    // self-dots stage as columns (the nearestLit hoisting contract);
+    // same literal argmin as PQ encoding ([[nearest]], round 18; no
+    // 64-way explode, no Sort/SortAggregate/Exchange). Slices stage as
+    // columns (the nearest hoisting contract);
     // the ADC join needs the long (cid, cell, cnrm, sub, code) form,
     // so the four per-subspace winners explode as a 4-element array.
     val staged = (0 until 4).foldLeft(
@@ -499,12 +516,10 @@ object Similarity {
         col("nrm").as("cnrm"), col("resid"))) {
       case (df, j) =>
         df.withColumn(s"se$j", slice(col("resid"), j * subDim + 1, subDim))
-          .withColumn(s"sx$j", dotLambda(col(s"se$j"), col(s"se$j")))
     }
     val codeCols = books.map { case (j, cs) =>
       struct(lit(j).as("sub"),
-        nearestLit(col(s"se$j"), col(s"sx$j"), bookLitCol(cs, "code"), "code")
-          .getField("code").as("code"))
+        nearest(col(s"se$j"), unkeyed(cs)).getField("cid").as("code"))
     }
     val codes = staged
       .select(col("cid"), col("cell"), col("cnrm"),
@@ -1031,207 +1046,58 @@ object Similarity {
       |  FROM p)
       |""".stripMargin
 
-  /** Lloyd's k-means (k=4, two update rounds) over the embedding
-    * corpus, made BIT-DETERMINISTIC cross-engine — the clustering
-    * primitive behind IVF coarse quantizers and corpus bucketing,
-    * here with a real DuckDB oracle rather than the usual
-    * "no_oracle by design" escape hatch for iterative ML:
-    *
-    *  - centroid updates sum per-dimension values QUANTIZED to 1e-6
-    *    BIGINTs (exact, order-independent — a float sum over a
-    *    cluster would be partition-order-dependent), and each
-    *    centroid coordinate is ONE exact-int division Σq/(n·10⁶);
-    *  - distances expand to ‖x‖² − 2⟨x,c⟩ + ‖c‖² where each dot is
-    *    the proven sequential-fold pair (`aggregate`/zip_with vs
-    *    `list_inner_product`), so argmin compares identical doubles,
-    *    tie-broken by cluster id;
-    *  - inertia re-quantizes per-row distances before summing, so the
-    *    objective is an exact integer in both engines.
-    *
-    * Init is the 4 lowest vec_ids (deterministic). Scale: each round
-    * is one broadcast of the k×dim centroid relation + one
-    * map-side-combinable (cid, dim) hash-agg over posexploded
-    * quantized values — no driver-side collect, no per-row state; the
-    * k× candidate fanout is the same shape sim_cosine_topk carries. */
   /** The corpus's embedding relation, double-cast, as k-means sees it. */
   private def kmeansVecs(spark: SparkSession, dir: String): DataFrame =
     fanout(embeddings(spark, dir))
       .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
 
-  /** Collected centroid rows, cid ascending — k×dim bounded driver
-    * metadata (the IVF-centroid / streaming-twin precedent; VERDICT
-    * r17 explicitly blesses such collects). Used to turn each Lloyd
-    * assignment into a MAP-SIDE argmin (round 18, guide §2.4 "remove
-    * shuffles outright"): the old shape crossJoined the broadcast
-    * centroid relation (n·k rows materialized) and ran a
-    * row_number window partitioned by vec_id — a full shuffle + sort
-    * of n·k rows PER ROUND. The literal form shuffles nothing. */
-  private def collectCents(cents: DataFrame): Seq[(Long, Seq[Double])] =
-    cents.select(col("cid").cast(LongType).as("cid"), col("c")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq))
-      .sortBy(_._1).toIndexedSeq
-
-  /** The candidate list as ONE constant-folded literal
-    * array<struct<cid, c, cc>>. cc = ⟨c,c⟩ is pre-folded driver-side
-    * with dotLambda's exact IEEE sequence (products left-to-right,
-    * then a left fold of sums — `acc + x*x` IS that sequence), so
-    * downstream doubles are bit-identical to the old JVM-side
-    * `dotLambda(c, c)` per joined row. All children are literals, so
-    * ConstantFolding collapses the whole expression to a single
-    * Literal — plan size stays O(1) in k. */
-  private def centsLitCol(cents: Seq[(Long, Seq[Double])]): Column =
-    array(cents.map { case (cid, c) =>
-      val cc = c.foldLeft(0.0)((acc, x) => acc + x * x)
-      struct(lit(cid).as("cid"), array(c.map(lit): _*).as("c"),
-        lit(cc).as("cc"))
-    }: _*)
-
-  /** One Lloyd assignment round: nearest centroid by
-    * ‖x‖² − 2⟨x,c⟩ + ‖c‖², ties to the lowest cluster id.
-    * Round 18: per-row `array_min(transform(...))` over the literal
-    * candidates — ascending struct order on (dist, cid) is exactly the
-    * old window's `orderBy(dist, cid)` rn=1 row (the arithmetic and
-    * tie-break the streaming twin already parity-proves in
-    * StreamBatchParitySpec). No join, no exchange, no sort: the
-    * assignment is a narrow projection, which is also the 100 TB
-    * posture (faiss-style map-side routing; the old form shuffled
-    * n·k rows per round). */
-  private def kmeansAssignLit(v: DataFrame,
-      cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    val best = array_min(transform(centsLitCol(cents), c =>
-      struct(
-        (dotLambda(col("e"), col("e"))
-          - lit(2.0) * dotLambda(col("e"), c.getField("c"))
-          + c.getField("cc")).as("dist"),
-        c.getField("cid").as("cid"),
-        c.getField("cc").as("cc"))))
-    // withColumn + project (not three getField copies in one select):
-    // CollapseProject keeps the non-cheap multi-referenced argmin in
-    // its own projection, so it is evaluated once per row.
-    v.withColumn("best", best)
-      .select(col("vec_id"), col("e"), col("best.cid").as("cid"),
-        col("best.dist").as("dist"), col("best.cc").as("cc"))
-  }
-
-  /** One Lloyd update round: quantized-BIGINT per-dimension sums →
-    * deterministic centroid coordinates (see [[clusterKmeans]]). */
-  private def kmeansUpdate(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("cid"), posexplode(transform(col("e"),
-        x => floor(x * lit(1000000.0) + lit(0.5)).cast("long"))).as(Seq("i", "xq")))
-      .groupBy(col("cid"), col("i"))
-      .agg(sum(col("xq")).as("sq"), count(lit(1)).as("cnt"))
-      .withColumn("ci", col("sq").cast("double") /
-        (col("cnt") * lit(1000000L)).cast("double"))
-      .groupBy(col("cid"))
-      .agg(transform(sort_array(collect_list(struct(col("i"), col("ci")))),
-        s => s.getField("ci")).as("c"))
-
-  /** The TRAINED centroid relation (cid, c) after the two Lloyd rounds
-    * — the "model" the streaming assign-on-ingest twin scores against
-    * (StreamingOps.kmeansAssign; parity-tested in
-    * StreamBatchParitySpec). `k` is the cell count (round 12: lifted
-    * out of the hardcoded 4 so [[dedupSemanticAt]] can follow the
-    * SemDeDup k-grows-with-corpus rule; the oracle fixtures stay at
-    * their pinned k). */
-  /** The trained model as collected rows: each Lloyd round is one
-    * scan → map-side argmin → combinable update agg → k-row collect
-    * (round 18 — the rounds were previously one lazy DAG whose every
-    * assign was a crossJoin + vec_id window; see [[kmeansAssignLit]]).
-    * Sequencing through the driver costs one ≤k-row collect per round
-    * — bounded metadata, and exactly how the IVF trainer
-    * ([[trainedCentroids]]) already stages its rounds. */
+  /** The flat k-means model (cid, c), cid ascending: two Lloyd rounds
+    * from the k lowest vec_ids — the model cluster_kmeans and the flat
+    * SemDeDup rows route with and the streaming assign-on-ingest twins
+    * score against (StreamingOps.kmeansAssign / semanticDedupIngest;
+    * parity-tested in StreamBatchParitySpec). A cell that loses every
+    * point drops out, as in the cluster_kmeans oracle (no COALESCE), so
+    * the model can hold fewer than k rows. `k` is the cell count
+    * (round 12: lifted out of the hardcoded 4 so [[dedupSemanticAt]]
+    * can follow the SemDeDup k-grows-with-corpus rule). */
   private[graft] def kmeansModelSeq(spark: SparkSession, dir: String,
       k: Int = 4): Seq[(Long, Seq[Double])] = {
     val v = kmeansVecs(spark, dir)
-    val c0 = collectCents(v.orderBy(col("vec_id")).limit(k)
-      .withColumn("cid",
-        (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("long"))
-      .select(col("cid"), col("e").as("c")))
-    val c1 = collectCents(kmeansUpdate(kmeansAssignLit(v, c0)))
-    collectCents(kmeansUpdate(kmeansAssignLit(v, c1)))
+    train(v, None, lowestIds(v, k), 2).map(c => (c._2, c._3))
   }
 
-  private[graft] def kmeansModel(spark: SparkSession, dir: String,
-      k: Int = 4): DataFrame = {
-    val sp = spark
-    import sp.implicits._
-    kmeansModelSeq(spark, dir, k).toDF("cid", "c")
-  }
-
-  /** The final (third) assignment relation — batch truth for the
-    * streaming twin's parity check. */
+  /** The final (third) assignment relation (vec_id, e, cid, dist, cc)
+    * — batch truth for the streaming twin's parity check. */
   private[graft] def kmeansFinalAssign(spark: SparkSession, dir: String,
       k: Int = 4): DataFrame =
-    kmeansAssignLit(kmeansVecs(spark, dir), kmeansModelSeq(spark, dir, k))
+    assign(kmeansVecs(spark, dir), unkeyed(kmeansModelSeq(spark, dir, k)))
 
-  /** Product-quantizer codebook TRAINING with a real oracle — the
-    * oracle-checked twin of the k-means [[trainedCentroids]] path
-    * `sim_pq_encode` trains with (that one is float-mean Lloyd ⇒
-    * no_oracle by design): each of the 4×16-dim subspaces gets the
-    * same QUANTIZED two-round Lloyd as [[clusterKmeans]] (exact-BIGINT
-    * centroid sums, sequential-fold dots, re-quantized inertia), so
-    * DuckDB re-derives the identical four codebooks and their
-    * training diagnostics (cluster sizes, per-subspace inertia,
-    * centroid norms) bit-for-bit. The per-subspace inertia column IS
-    * the quantization-error budget a PQ deployment monitors.
+  /** Product-quantizer codebook TRAINING with a real oracle: each of
+    * the 4×16-dim subspaces gets the same quantized two-round Lloyd as
+    * [[clusterKmeans]] (4 lowest vec_ids as seeds), so DuckDB re-derives
+    * the identical four codebooks and their training diagnostics
+    * (cluster sizes, per-subspace inertia, centroid norms) bit-for-bit.
+    * The per-subspace inertia column IS the quantization-error budget a
+    * PQ deployment monitors.
     *
-    * Scale: 4 independent subspace pipelines, each the clusterKmeans
-    * shape (broadcast k×16 centroids + combinable (cid, dim) aggs). */
+    * ONE Lloyd keyed by subspace `sub`, not four per-subspace pipelines
+    * (round 18): the unrolled 4× shape carried ~150 whole-stage-codegen
+    * units — past Spark's 100-entry codegen class cache — so every run
+    * recompiled ~4 s of Janino even warm. Keyed, the 4n 16-dim rows run
+    * one argmin projection that looks up their subspace's codebook. */
   private def simPqTrain(spark: SparkSession, dir: String): DataFrame = {
     val v0 = kmeansVecs(spark, dir)
-    // ONE subspace-KEYED Lloyd pipeline instead of 4 structurally
-    // identical per-subspace pipelines unioned at the end (round 18,
-    // the sim_pq_train adjudication): the unrolled 4× shape carried
-    // ~150 whole-stage-codegen units — past Spark's 100-entry codegen
-    // class cache — so EVERY execution recompiled ~4 s of Janino even
-    // "warm" (measured via CodegenMetrics in BenchFocus; the bench's
-    // four-round 3.1 → 13.7 s climb was this thrash compounding with
-    // session codegen pressure). Keying every stage by `sub` runs the
-    // same arithmetic over 4n 16-dim rows in ~40 codegen units and a
-    // quarter of the shuffle stages — the same total bytes through
-    // fewer, wider stages, which is also the better cluster posture
-    // (fewer scheduler waves, one shuffle per Lloyd step instead of
-    // four). Per-row float work is unchanged (same dot expansions,
-    // same window comparisons, exact-int centroid updates), so the
-    // output is BIT-IDENTICAL and the DuckDB oracle is untouched.
     val vs = v0.select(col("vec_id"), explode(array((0 until 4).map(j =>
         struct(lit(j.toLong).as("sub"),
           slice(col("e"), j * 16 + 1, 16).as("e"))): _*)).as("s"))
       .select(col("vec_id"), col("s.sub").as("sub"), col("s.e").as("e"))
-    // init: per subspace, the 4 lowest vec_ids (same rule as before —
-    // every vector contributes every subspace, so the id set matches)
-    val c0 = vs.withColumn("rn",
-        row_number().over(Window.partitionBy(col("sub")).orderBy(col("vec_id"))))
-      .filter(col("rn") <= 4)
-      .select(col("sub"), (col("rn") - 1).cast("long").as("cid"),
-        col("e").as("c"))
-    def assign(v: DataFrame, cents: DataFrame): DataFrame =
-      v.join(broadcast(cents), Seq("sub"))
-        .withColumn("cc", dotLambda(col("c"), col("c")))
-        .withColumn("dist",
-          dotLambda(col("e"), col("e")) - lit(2.0) * dotLambda(col("e"), col("c"))
-            + col("cc"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("sub"), col("vec_id"))
-            .orderBy(col("dist"), col("cid"))))
-        .filter(col("rn") === 1)
-        .select(col("sub"), col("vec_id"), col("e"), col("cid"),
-          col("dist"), col("cc"))
-    def update(assigned: DataFrame): DataFrame =
-      assigned
-        .select(col("sub"), col("cid"), posexplode(transform(col("e"),
-          x => floor(x * lit(1000000.0) + lit(0.5)).cast("long")))
-          .as(Seq("i", "xq")))
-        .groupBy(col("sub"), col("cid"), col("i"))
-        .agg(sum(col("xq")).as("sq"), count(lit(1)).as("cnt"))
-        .withColumn("ci", col("sq").cast("double") /
-          (col("cnt") * lit(1000000L)).cast("double"))
-        .groupBy(col("sub"), col("cid"))
-        .agg(transform(sort_array(collect_list(struct(col("i"), col("ci")))),
-          s => s.getField("ci")).as("c"))
-    val a3 = assign(vs, update(assign(vs, update(assign(vs, c0)))))
-    a3.groupBy(col("sub"), col("cid")).agg(
+    // every vector contributes every subspace, so each subspace's
+    // seeds are the slices of the 4 lowest vec_ids
+    val init = for ((_, cid, e) <- lowestIds(v0, 4); j <- 0 until 4)
+      yield (j.toLong, cid, e.slice(j * 16, j * 16 + 16))
+    val cents = train(vs, Some("sub"), init, 2)
+    assign(vs, cents, Some("sub"))
+      .groupBy(col("sub"), col("cid")).agg(
         count(lit(1)).cast("long").as("n"),
         sum(floor(col("dist") * lit(1000000.0) + lit(0.5)).cast("long"))
           .as("iq"),
@@ -1311,6 +1177,31 @@ object Similarity {
     dedupSemanticAt(spark, dir,
       semanticK(embeddings(spark, dir).count(), targetCell))
 
+  /** The trained two-level model behind [[dedupSemanticCoarseAt]]:
+    * (m, super centroids (cid, c), the super-routed corpus
+    * vp (vec_id, e, sid), member centroids (sid, cid, c)); the
+    * streaming ingest twin routes with the two centroid layers. */
+  private[graft] def coarseModelSeq(spark: SparkSession, dir: String, k: Int)
+      : (Int, Seq[(Long, Seq[Double])], DataFrame, Cents) = {
+    val g = math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
+    val m = (k + g - 1) / g
+    val v = kmeansVecs(spark, dir)
+    // level 1: g supers over the corpus (the clusterKmeans chain)
+    val supers = train(v, None, lowestIds(v, g), 2)
+    val vp = assign(v, supers).select(col("vec_id"), col("e"), col("cid").as("sid"))
+      .localCheckpoint() // corpus partition, reused by every level-2 pass
+    // level 2: m members per super-cell, trained within the cell only
+    // (keyed by sid). Seeds = the cell's m lowest vec_ids.
+    val seeds: Cents = vp
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("sid")).orderBy(col("vec_id"))))
+      .filter(col("rn") <= m)
+      .select(col("sid"), (col("rn") - 1).cast("long"), col("e")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toIndexedSeq))
+      .toIndexedSeq
+    (m, supers.map(c => (c._2, c._3)), vp, train(vp, Some("sid"), seeds, 2))
+  }
+
   /** [[dedupSemanticAt]] with HIERARCHICAL two-level k-means — the
     * coded form of the scale note SCALING.md's round-13 section makes
     * in prose: the SemDeDup k-∝-corpus rule keeps PAIR work linear but
@@ -1337,108 +1228,10 @@ object Similarity {
     * vec_ids), so it carries its own complete DuckDB oracle — both
     * Lloyd layers and the per-cell training re-derive bit-for-bit.
     * Output cell id = sid·m + cid (dense, deterministic). */
-  /** Level-2 assign: each vector sees exactly its super-cell's m
-    * member candidates (n·m·d, never n·k·d). Exposed as an object
-    * method (not a closure) so [[coarseModel]] can hand the trained
-    * member table to the streaming ingest twin. */
-  private def hierAssignOn(vp: DataFrame,
-      cents: Seq[(Long, Long, Seq[Double])]): DataFrame = {
-    // Same literal-argmin shape as [[kmeansAssignLit]], but the
-    // candidate set is per-SUPER-cell: a constant-folded map literal
-    // sid → array<struct<cid, c, cc>>, looked up by the row's sid.
-    // Every sid in vp has ≥1 member centroid by construction (its m
-    // seeds come from the sid's own vectors, and each vector counts
-    // toward some cell), so the lookup never misses — matching the old
-    // inner broadcast join on sid. Removes the per-round n·m-row
-    // vec_id window shuffle exactly as in the flat path.
-    val byCell = cents.groupBy(_._1).toSeq.sortBy(_._1).map { case (sid, ms) =>
-      lit(sid) -> array(ms.sortBy(_._2).map { case (_, cid, c) =>
-        val cc = c.foldLeft(0.0)((acc, x) => acc + x * x)
-        struct(lit(cid).as("cid"), array(c.map(lit): _*).as("c"),
-          lit(cc).as("cc"))
-      }: _*)
-    }
-    val mapLit = map(byCell.flatMap { case (k, v) => Seq(k, v) }: _*)
-    val best = array_min(transform(element_at(mapLit, col("sid")), c =>
-      struct(
-        (dotLambda(col("e"), col("e"))
-          - lit(2.0) * dotLambda(col("e"), c.getField("c"))
-          + c.getField("cc")).as("dist"),
-        c.getField("cid").as("cid"))))
-    vp.withColumn("best", best)
-      .select(col("vec_id"), col("e"), col("sid"), col("best.cid").as("cid"))
-  }
-
-  private def hierUpdateOn(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("sid"), col("cid"), posexplode(transform(col("e"),
-        x => floor(x * lit(1000000.0) + lit(0.5)).cast("long")))
-        .as(Seq("i", "xq")))
-      .groupBy(col("sid"), col("cid"), col("i"))
-      .agg(sum(col("xq")).as("sq"), count(lit(1)).as("cnt"))
-      .withColumn("ci", col("sq").cast("double") /
-        (col("cnt") * lit(1000000L)).cast("double"))
-      .groupBy(col("sid"), col("cid"))
-      .agg(transform(sort_array(collect_list(struct(col("i"), col("ci")))),
-        s => s.getField("ci")).as("c"))
-
-  /** The TRAINED two-level model of [[dedupSemanticCoarseAt]]:
-    * (m, super centroids (cid, c), super-routed corpus vp, member
-    * centroids (sid, cid, c) after both Lloyd layers). The streaming
-    * ingest twin collects supers + members from here so its per-row
-    * routing replays the exact batch arithmetic. */
-  /** Collected member-centroid rows (sid, cid, c), (sid, cid)
-    * ascending — g×m bounded driver metadata. */
-  private def collectMembers(cents: DataFrame): Seq[(Long, Long, Seq[Double])] =
-    cents.select(col("sid").cast(LongType).as("sid"),
-        col("cid").cast(LongType).as("cid"), col("c")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toIndexedSeq))
-      .sortBy(t => (t._1, t._2)).toIndexedSeq
-
-  /** The trained two-level model with collected centroid Seqs — the
-    * round-18 literal-argmin staging of [[coarseModel]]; each of the
-    * four training rounds is scan → map-side argmin → combinable agg
-    * → bounded collect (no crossJoin, no vec_id window shuffle). */
-  private def coarseModelSeq(spark: SparkSession, dir: String, k: Int)
-      : (Int, Seq[(Long, Seq[Double])], DataFrame, Seq[(Long, Long, Seq[Double])]) = {
-    val g = math.max(2, math.ceil(math.sqrt(k.toDouble)).toInt)
-    val m = (k + g - 1) / g
-    val v = kmeansVecs(spark, dir)
-    // level 1: g supers over the corpus (the clusterKmeans chain)
-    val s0 = collectCents(v.orderBy(col("vec_id")).limit(g)
-      .withColumn("cid",
-        (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("long"))
-      .select(col("cid"), col("e").as("c")))
-    val s1 = collectCents(kmeansUpdate(kmeansAssignLit(v, s0)))
-    val sCents = collectCents(kmeansUpdate(kmeansAssignLit(v, s1)))
-    val vp = kmeansAssignLit(v, sCents)
-      .select(col("vec_id"), col("e"), col("cid").as("sid"))
-      .localCheckpoint() // corpus partition, reused by every level-2 pass
-    // level 2: m members per super-cell, trained within the cell only.
-    // Seeds = the cell's m lowest vec_ids.
-    val h0 = collectMembers(vp
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("sid")).orderBy(col("vec_id"))))
-      .filter(col("rn") <= m)
-      .select(col("sid"), (col("rn") - 1).cast("long").as("cid"),
-        col("e").as("c")))
-    val h1 = collectMembers(hierUpdateOn(hierAssignOn(vp, h0)))
-    val mCents = collectMembers(hierUpdateOn(hierAssignOn(vp, h1)))
-    (m, sCents, vp, mCents)
-  }
-
-  private[graft] def coarseModel(spark: SparkSession, dir: String,
-      k: Int): (Int, DataFrame, DataFrame, DataFrame) = {
-    val sp = spark
-    import sp.implicits._
-    val (m, sCents, vp, mCents) = coarseModelSeq(spark, dir, k)
-    (m, sCents.toDF("cid", "c"), vp, mCents.toDF("sid", "cid", "c"))
-  }
-
   private[graft] def dedupSemanticCoarseAt(spark: SparkSession, dir: String,
       k: Int, tau: Double = 0.375): DataFrame = {
     val (m, _, vp, mCents) = coarseModelSeq(spark, dir, k)
-    val routed = hierAssignOn(vp, mCents)
+    val routed = assign(vp, mCents, Some("sid"))
       .select(col("vec_id"), col("e"),
         (col("sid") * m + col("cid")).as("cid"))
     // pair + keep tail identical to [[dedupSemanticAt]]
@@ -1467,6 +1260,12 @@ object Similarity {
     dedupSemanticCoarseAt(spark, dir,
       semanticK(embeddings(spark, dir).count(), targetCell))
 
+  /** Lloyd's k-means (k=4, two rounds) over the embedding corpus with
+    * a real DuckDB oracle: per cluster of the [[kmeansModelSeq]]
+    * model's final assignment, its size, inertia, mean distance and
+    * centroid norm. Inertia re-quantizes per-row distances to 10⁻⁶
+    * BIGINTs before summing, so the objective is an exact integer in
+    * both engines. */
   private def clusterKmeans(spark: SparkSession, dir: String): DataFrame = {
     val a3 = kmeansFinalAssign(spark, dir)
     a3.groupBy(col("cid")).agg(
@@ -1541,6 +1340,40 @@ object Similarity {
        |     list_inner_product(s.e, s.e) - 2.0 * list_inner_product(s.e, c.c)
        |       + list_inner_product(c.c, c.c) AS dist
        |    FROM $from s, $cents c)) WHERE rn = 1)""".stripMargin
+
+  /** The oracle-side Lloyd round shared by cluster_kmeans, sim_pq_train
+    * and the semantic rows: [[lloydAssignCte]] is the per-vector
+    * (dist, cid) argmin over the centroid CTE `cents` (`keepCc` also
+    * carries ‖c‖² for the final diagnostics), [[lloydUpdateCte]] the
+    * quantized BIGINT update over `dim` coordinates — a cell that lost
+    * every point drops out, as in [[update]]. */
+  private def lloydAssignCte(src: String, cents: String, out: String,
+      keepCc: Boolean) = {
+    val ccCol = if (keepCc) ", cc" else ""
+    s""" $out AS (
+       |  SELECT vec_id, e, cid, dist$ccCol FROM (
+       |   SELECT vec_id, e, cid, dist$ccCol,
+       |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
+       |   FROM (
+       |    SELECT $src.vec_id, $src.e, c.cid,
+       |     list_inner_product($src.e, $src.e)
+       |       - 2.0 * list_inner_product($src.e, c.c)
+       |       + list_inner_product(c.c, c.c) AS dist,
+       |     list_inner_product(c.c, c.c) AS cc
+       |    FROM $src, $cents c)) WHERE rn = 1)""".stripMargin
+  }
+  private def lloydUpdateCte(src: String, sums: String, cents: String, dim: Int) =
+    s""" $sums AS (
+       |  SELECT cid, t.i AS i,
+       |   sum(CAST(floor(e[t.i] * 1000000 + 0.5) AS BIGINT)) AS sq,
+       |   CAST(count(*) AS BIGINT) AS cnt
+       |  FROM $src, generate_series(1, $dim) AS t(i)
+       |  GROUP BY 1, 2),
+       | $cents AS (
+       |  SELECT cid,
+       |   list(CAST(sq AS DOUBLE) / CAST(cnt * 1000000 AS DOUBLE)
+       |     ORDER BY i) AS c
+       |  FROM $sums GROUP BY 1)""".stripMargin
 
   /** The sim_ann_ivfpq oracle's WITH chain through CTE `r` (coarse
     * Lloyd -> cells -> residuals -> 4 residual codebooks -> codes/LUT
@@ -2109,32 +1942,6 @@ object Similarity {
     // PQ codebook training, oracle-checked: the same quantized-Lloyd
     // determinism as cluster_kmeans, replicated per 16-dim subspace
     QueryDef("sim_pq_train", Some {
-      def assignCte(src: String, cents: String, out: String, keepCc: Boolean) = {
-        val ccCol = if (keepCc) ", cc" else ""
-        s""" $out AS (
-           |  SELECT vec_id, e, cid, dist$ccCol FROM (
-           |   SELECT vec_id, e, cid, dist$ccCol,
-           |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-           |   FROM (
-           |    SELECT $src.vec_id, $src.e, c.cid,
-           |     list_inner_product($src.e, $src.e)
-           |       - 2.0 * list_inner_product($src.e, c.c)
-           |       + list_inner_product(c.c, c.c) AS dist,
-           |     list_inner_product(c.c, c.c) AS cc
-           |    FROM $src, $cents c)) WHERE rn = 1)""".stripMargin
-      }
-      def updateCte(src: String, sums: String, cents: String) =
-        s""" $sums AS (
-           |  SELECT cid, t.i AS i,
-           |   sum(CAST(floor(e[t.i] * 1000000 + 0.5) AS BIGINT)) AS sq,
-           |   CAST(count(*) AS BIGINT) AS cnt
-           |  FROM $src, generate_series(1, 16) AS t(i)
-           |  GROUP BY 1, 2),
-           | $cents AS (
-           |  SELECT cid,
-           |   list(CAST(sq AS DOUBLE) / CAST(cnt * 1000000 AS DOUBLE)
-           |     ORDER BY i) AS c
-           |  FROM $sums GROUP BY 1)""".stripMargin
       def subBlock(j: Int): String = {
         val p = s"s$j"
         s""" v$p AS (
@@ -2143,11 +1950,11 @@ object Similarity {
            |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT)
            |    AS cid, e AS c
            |  FROM (SELECT vec_id, e FROM v$p ORDER BY vec_id LIMIT 4)),
-           |${assignCte(s"v$p", s"c0$p", s"a1$p", keepCc = false)},
-           |${updateCte(s"a1$p", s"u1$p", s"c1$p")},
-           |${assignCte(s"v$p", s"c1$p", s"a2$p", keepCc = false)},
-           |${updateCte(s"a2$p", s"u2$p", s"c2$p")},
-           |${assignCte(s"v$p", s"c2$p", s"a3$p", keepCc = true)},
+           |${lloydAssignCte(s"v$p", s"c0$p", s"a1$p", keepCc = false)},
+           |${lloydUpdateCte(s"a1$p", s"u1$p", s"c1$p", 16)},
+           |${lloydAssignCte(s"v$p", s"c1$p", s"a2$p", keepCc = false)},
+           |${lloydUpdateCte(s"a2$p", s"u2$p", s"c2$p", 16)},
+           |${lloydAssignCte(s"v$p", s"c2$p", s"a3$p", keepCc = true)},
            | g$p AS (
            |  SELECT CAST($j AS BIGINT) AS sub, cid,
            |   CAST(count(*) AS BIGINT) AS n,
@@ -2170,43 +1977,17 @@ object Similarity {
     // and the proven sequential-fold dot make every Lloyd round
     // bit-deterministic, so DuckDB re-derives the identical clustering
     QueryDef("cluster_kmeans", Some {
-      def assignCte(src: String, cents: String, out: String, keepCc: Boolean) = {
-        val ccCol = if (keepCc) ", cc" else ""
-        s""" $out AS (
-           |  SELECT vec_id, e, cid, dist$ccCol FROM (
-           |   SELECT vec_id, e, cid, dist$ccCol,
-           |    row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-           |   FROM (
-           |    SELECT $src.vec_id, $src.e, c.cid,
-           |     list_inner_product($src.e, $src.e)
-           |       - 2.0 * list_inner_product($src.e, c.c)
-           |       + list_inner_product(c.c, c.c) AS dist,
-           |     list_inner_product(c.c, c.c) AS cc
-           |    FROM $src, $cents c)) WHERE rn = 1)""".stripMargin
-      }
-      def updateCte(src: String, sums: String, cents: String) =
-        s""" $sums AS (
-           |  SELECT cid, t.i AS i,
-           |   sum(CAST(floor(e[t.i] * 1000000 + 0.5) AS BIGINT)) AS sq,
-           |   CAST(count(*) AS BIGINT) AS cnt
-           |  FROM $src, generate_series(1, 64) AS t(i)
-           |  GROUP BY 1, 2),
-           | $cents AS (
-           |  SELECT cid,
-           |   list(CAST(sq AS DOUBLE) / CAST(cnt * 1000000 AS DOUBLE)
-           |     ORDER BY i) AS c
-           |  FROM $sums GROUP BY 1)""".stripMargin
       s"""WITH v AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
          | c0 AS (
          |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cid,
          |   e AS c
          |  FROM (SELECT vec_id, e FROM v ORDER BY vec_id LIMIT 4)),
-         |${assignCte("v", "c0", "a1", keepCc = false)},
-         |${updateCte("a1", "u1", "c1")},
-         |${assignCte("v", "c1", "a2", keepCc = false)},
-         |${updateCte("a2", "u2", "c2")},
-         |${assignCte("v", "c2", "a3", keepCc = true)},
+         |${lloydAssignCte("v", "c0", "a1", keepCc = false)},
+         |${lloydUpdateCte("a1", "u1", "c1", 64)},
+         |${lloydAssignCte("v", "c1", "a2", keepCc = false)},
+         |${lloydUpdateCte("a2", "u2", "c2", 64)},
+         |${lloydAssignCte("v", "c2", "a3", keepCc = true)},
          | g AS (
          |  SELECT cid, CAST(count(*) AS BIGINT) AS n,
          |   sum(CAST(floor(dist * 1000000 + 0.5) AS BIGINT)) AS iq,
@@ -2285,10 +2066,9 @@ object Similarity {
          |         row_number() OVER (ORDER BY vec_id) AS rn FROM v), kk
          |  WHERE rn <= kk.k)""".stripMargin)
 
-  /** Shared Lloyd-chain CTE generators (round 13: lifted out of
-    * [[semanticOracleCore]] so the hierarchical-routing oracle reuses
-    * them VERBATIM — the emitted text for the existing rows is
-    * byte-identical, so their oracle hashes are untouched). */
+  /** The semantic rows' assignment CTE — [[lloydAssignCte]] without
+    * the ‖c‖² and dist outputs; shared VERBATIM by the flat and
+    * hierarchical semantic oracles (round 13). */
   private def semanticAssignCte(src: String, cents: String, out: String) =
     s""" $out AS (
        |  SELECT vec_id, e, cid FROM (
@@ -2300,18 +2080,6 @@ object Similarity {
        |       - 2.0 * list_inner_product($src.e, c.c)
        |       + list_inner_product(c.c, c.c) AS dist
        |    FROM $src, $cents c)) WHERE rn = 1)""".stripMargin
-  private def semanticUpdateCte(src: String, sums: String, cents: String) =
-    s""" $sums AS (
-       |  SELECT cid, t.i AS i,
-       |   sum(CAST(floor(e[t.i] * 1000000 + 0.5) AS BIGINT)) AS sq,
-       |   CAST(count(*) AS BIGINT) AS cnt
-       |  FROM $src, generate_series(1, 64) AS t(i)
-       |  GROUP BY 1, 2),
-       | $cents AS (
-       |  SELECT cid,
-       |   list(CAST(sq AS DOUBLE) / CAST(cnt * 1000000 AS DOUBLE)
-       |     ORDER BY i) AS c
-       |  FROM $sums GROUP BY 1)""".stripMargin
   /** The in-cell pair + keep-the-first tail over an assignment
     * relation `src(vec_id, e, cid)`. */
   private def semanticTailSql(src: String) =
@@ -2333,14 +2101,14 @@ object Similarity {
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
        | $seedCte,
        |${semanticAssignCte("v", "c0", "a1")},
-       |${semanticUpdateCte("a1", "u1", "c1")},
+       |${lloydUpdateCte("a1", "u1", "c1", 64)},
        |${semanticAssignCte("v", "c1", "a2")},
-       |${semanticUpdateCte("a2", "u2", "c2")},
+       |${lloydUpdateCte("a2", "u2", "c2", 64)},
        |${semanticAssignCte("v", "c2", "a3")},
        |${semanticTailSql("a3")}""".stripMargin
 
   /** Per-super-cell Lloyd CTE generators for the hierarchical oracle:
-    * like [[semanticAssignCte]]/[[semanticUpdateCte]] but every
+    * like [[semanticAssignCte]]/[[lloydUpdateCte]] but every
     * centroid carries its super id, assignment joins on `sid` (each
     * vector only meets its own cell's candidates) and updates group by
     * (sid, cid). */
@@ -2380,9 +2148,9 @@ object Similarity {
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
        |$preCtes $superSeedCte,
        |${semanticAssignCte("v", "s0", "sa1")},
-       |${semanticUpdateCte("sa1", "su1", "s1")},
+       |${lloydUpdateCte("sa1", "su1", "s1", 64)},
        |${semanticAssignCte("v", "s1", "sa2")},
-       |${semanticUpdateCte("sa2", "su2", "s2")},
+       |${lloydUpdateCte("sa2", "su2", "s2", 64)},
        |${semanticAssignCte("v", "s2", "pa3")},
        | vp AS (SELECT vec_id, e, cid AS sid FROM pa3),
        | $memberSeedCte,

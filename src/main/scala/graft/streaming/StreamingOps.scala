@@ -431,21 +431,9 @@ object StreamingOps {
       indexDir: String, outDir: String, tau: Double = 0.375):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     vecs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-      import org.apache.spark.sql.types.{ArrayType, DoubleType}
-      import graft.operators.Similarity.dotLambda
-      val spark = batch.sparkSession
-      val ec = col("e")
-      val scored = cents.sortBy(_._1).map { case (cid, c) =>
-        val cl = array(c.map(lit): _*)
-        struct(
-          (dotLambda(ec, ec) - lit(2.0) * dotLambda(ec, cl)
-            + dotLambda(cl, cl)).as("dist"),
-          lit(cid).as("cid"))
-      }
-      val cur = batch.toDF()
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
-        .select(col("vec_id"), col("e"),
-          element_at(array_sort(array(scored: _*)), 1).getField("cid").as("cell"))
+      import graft.operators.Similarity.{assign, dotLambda, unkeyed}
+      val cur = assign(embeddingVecs(batch.toDF()), unkeyed(cents))
+        .select(col("vec_id"), col("e"), col("cid").as("cell"))
         .withColumn("nrm", sqrt(dotLambda(col("e"), col("e"))))
         .localCheckpoint()
       cellVerdictTail(cur, indexDir, outDir, epochId, tau)
@@ -493,8 +481,8 @@ object StreamingOps {
     * argmin over that super-cell's m MEMBER centroids — O(√k) literal
     * comparisons per row, cell id = sid·m + cid exactly as the batch
     * routing. Both argmins use the identical sequential-fold distance
-    * (e·e − 2e·c + c·c) and (dist, cid) tie-break as
-    * `Similarity.coarseModel`'s trained layers, so on an id-ordered
+    * (e·e − 2e·c + c·c) and (dist, cid) tie-break as the batch
+    * routing (the Lloyd core's `Similarity.assign`), so on an id-ordered
     * replay of the training corpus the verdict stream equals the
     * batch `dedup_semantic_coarse` output EXACTLY
     * (StreamBatchParitySpec). A vector whose nearest super acquired
@@ -504,13 +492,12 @@ object StreamingOps {
     * documented rather than hidden.
     *
     * `supers` is (sid, centroid); `members` is (sid, cid, centroid)
-    * with cid ∈ [0, m); both collected from the batch-trained
-    * [[graft.operators.Similarity.coarseModel]] — k×dim literals
+    * with cid ∈ [0, m); both from the batch-trained
+    * [[graft.operators.Similarity.coarseModelSeq]] — k×dim literals
     * total, no driver state across batches. PRECONDITION: both layers
-    * non-empty — `coalesce` over the per-super member argmins needs
-    * ≥1 argument at analysis time, and a model with zero trained
-    * members would otherwise surface as an opaque planner error
-    * inside foreachBatch (round-15 advisor). */
+    * non-empty — an empty candidate literal has no element type, and
+    * a model with zero trained members would otherwise surface as an
+    * opaque planner error inside foreachBatch (round-15 advisor). */
   def semanticDedupCoarseIngest(vecs: DataFrame,
       supers: Seq[(Long, Seq[Double])],
       members: Seq[(Long, Long, Seq[Double])], m: Int,
@@ -519,30 +506,12 @@ object StreamingOps {
     require(supers.nonEmpty && members.nonEmpty,
       "semanticDedupCoarseIngest needs a trained model: supers and members must be non-empty")
     vecs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-      import org.apache.spark.sql.types.{ArrayType, DoubleType}
-      import graft.operators.Similarity.dotLambda
-      val ec = col("e")
-      def distTo(c: Seq[Double]): org.apache.spark.sql.Column = {
-        val cl = array(c.map(lit): _*)
-        dotLambda(ec, ec) - lit(2.0) * dotLambda(ec, cl) + dotLambda(cl, cl)
-      }
-      val superScored = supers.sortBy(_._1).map { case (sid, c) =>
-        struct(distTo(c).as("dist"), lit(sid).as("cid"))
-      }
-      val memberCid = members.groupBy(_._1).toSeq.sortBy(_._1).map {
-        case (sid, ms) =>
-          val scored = ms.sortBy(_._2).map { case (_, cid, c) =>
-            struct(distTo(c).as("dist"), lit(cid).as("cid"))
-          }
-          when(col("sid") === lit(sid),
-            element_at(array_sort(array(scored: _*)), 1).getField("cid"))
-      }
-      val cur = batch.toDF()
-        .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
-        .withColumn("sid",
-          element_at(array_sort(array(superScored: _*)), 1).getField("cid"))
-        .withColumn("cell", col("sid") * lit(m.toLong) + coalesce(memberCid: _*))
-        .select(col("vec_id"), col("e"), col("cell"))
+      import graft.operators.Similarity.{assign, dotLambda, unkeyed}
+      val routed = assign(embeddingVecs(batch.toDF()), unkeyed(supers))
+        .select(col("vec_id"), col("e"), col("cid").as("sid"))
+      val cur = assign(routed, members, Some("sid"))
+        .select(col("vec_id"), col("e"),
+          (col("sid") * lit(m.toLong) + col("cid")).as("cell"))
         .withColumn("nrm", sqrt(dotLambda(col("e"), col("e"))))
         .localCheckpoint()
       cellVerdictTail(cur, indexDir, outDir, epochId, tau)
@@ -968,28 +937,22 @@ object StreamingOps {
     * split: train offline on the corpus, route every new vector to its
     * bucket the micro-batch it arrives in.
     *
-    * Completely stateless — the k candidate distances are computed
-    * per row against literal centroid arrays and the argmin is an
-    * `array_sort(array(struct(dist, cid)))[1]` expression (ascending
-    * struct order = the batch row_number's (dist, cid) tie-break), so
-    * there is no shuffle, no watermark, append mode. Distances are the
-    * same ‖x‖² − 2⟨x,c⟩ + ‖c‖² sequential-fold arithmetic as the batch
-    * assignment — StreamBatchParitySpec asserts EXACT (vec_id, cid,
-    * dist) row-set equality against the batch third-round assignment. */
+    * Completely stateless — the argmin is the batch Lloyd core's
+    * literal map-side `Similarity.assign`, the very expression the
+    * batch assignment evaluates, so there is no shuffle, no watermark,
+    * append mode — and StreamBatchParitySpec asserts EXACT (vec_id,
+    * cid, dist) row-set equality against the batch third-round
+    * assignment. */
   def kmeansAssign(vecs: DataFrame, cents: Seq[(Long, Seq[Double])]): DataFrame = {
+    import graft.operators.Similarity.{assign, unkeyed}
+    assign(embeddingVecs(vecs), unkeyed(cents))
+      .select(col("vec_id"), col("cid"), col("dist"))
+  }
+
+  /** (vec_id, e): an embedding source as the Lloyd core reads it. */
+  private def embeddingVecs(vecs: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val e = col("embedding").cast(ArrayType(DoubleType))
-    val scored = cents.sortBy(_._1).map { case (cid, c) =>
-      val cl = array(c.map(lit): _*)
-      struct(
-        (graft.operators.Similarity.dotLambda(e, e)
-          - lit(2.0) * graft.operators.Similarity.dotLambda(e, cl)
-          + graft.operators.Similarity.dotLambda(cl, cl)).as("dist"),
-        lit(cid).as("cid"))
-    }
-    val best = element_at(array_sort(array(scored: _*)), 1)
-    vecs.select(col("vec_id"),
-      best.getField("cid").as("cid"), best.getField("dist").as("dist"))
+    vecs.select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
   }
 
   /** Score-on-ingest: the fixture quality classifier

@@ -508,8 +508,7 @@ class StreamBatchParitySpec extends AnyFunSuite {
     // against the literal centroids. Distances are the same
     // sequential-fold arithmetic, so equality is on the EXACT double,
     // not a rounding of it.
-    val model = graft.operators.Similarity.kmeansModel(spark, TestSpark.sf)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+    val model = graft.operators.Similarity.kmeansModelSeq(spark, TestSpark.sf)
     val batchVecs = Tables.embeddings(spark, TestSpark.sf)
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_stream_kmeans"
     batchVecs.write.mode("overwrite").parquet(dir)
@@ -544,8 +543,7 @@ class StreamBatchParitySpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     implicit val sc = spark2.sqlContext
-    val model = graft.operators.Similarity.kmeansModel(spark2, TestSpark.sf)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
+    val model = graft.operators.Similarity.kmeansModelSeq(spark2, TestSpark.sf)
     val base = s"${System.getProperty("java.io.tmpdir")}/" +
       s"graft_stream_semdedup_${System.nanoTime()}"
     val ms = MemoryStream[VecRow]
@@ -586,12 +584,8 @@ class StreamBatchParitySpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     implicit val sc = spark2.sqlContext
-    val (m, sCents, _, mCents) =
-      graft.operators.Similarity.coarseModel(spark2, TestSpark.sf, 16)
-    val supers = sCents.collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
-    val members = mCents.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toSeq)).toSeq
+    val (m, supers, _, members) =
+      graft.operators.Similarity.coarseModelSeq(spark2, TestSpark.sf, 16)
     assert(members.nonEmpty && supers.nonEmpty)
     val base = s"${System.getProperty("java.io.tmpdir")}/" +
       s"graft_stream_semcoarse_${System.nanoTime()}"
@@ -619,6 +613,31 @@ class StreamBatchParitySpec extends AnyFunSuite {
       s"hierarchical semantic dedup on ingest diverged from batch: " +
         s"stream-only ${(streamed -- batch).take(3)}, " +
         s"batch-only ${(batch -- streamed).take(3)}")
+  }
+
+  test("hierarchical ingest gives a vector whose super has no trained members a null cell and keeps it") {
+    // The member lookup is keyed by super id: a super with no member
+    // centroids must route to a NULL cell (never a lookup error under
+    // ANSI), and a null cell meets no cell-mates, so the vector keeps
+    // — here even against an identical batch-mate.
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sc = spark2.sqlContext
+    val supers = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
+    val members = Seq((0L, 0L, Seq(1.0, 0.0)), (0L, 1L, Seq(0.5, 0.0)))
+    val base = s"${System.getProperty("java.io.tmpdir")}/" +
+      s"graft_stream_semcoarse_null_${System.nanoTime()}"
+    val ms = MemoryStream[VecRow]
+    val q = StreamingOps.semanticDedupCoarseIngest(ms.toDF(), supers,
+        members, 2, s"$base/idx", s"$base/out")
+      .option("checkpointLocation", s"$base/ckpt").start()
+    ms.addData(VecRow(0L, Seq(1f, 0f)), VecRow(1L, Seq(0f, 1f)), VecRow(2L, Seq(0f, 1f)))
+    q.processAllAvailable(); q.stop()
+    val got = spark2.read.parquet(s"$base/out/epoch=*").collect().map { r =>
+      r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getBoolean(3))
+    }.toMap
+    assert(got == Map(0L -> (Some(0L), true), 1L -> (None, true), 2L -> (None, true)),
+      s"unexpected verdicts: $got")
   }
 
   final case class DocRow(doc_id: Long, text: String)
