@@ -65,8 +65,9 @@ object GraftSession {
     * default is 100). Several registered pipelines compile 100+ units
     * per run (dedup_semantic_coarse 126, sim_pq_train 153 before its
     * round-18 fusing), so at 100 a query evicts its own classes and
-    * re-pays Janino on every execution. Measured with BenchFocus,
-    * warm-min, 100 → 2000 entries: dedup_clusters 2.72 → 2.22 s (66 → 0
+    * re-pays Janino on every execution. Measured per query (warm-min
+    * and per-run recompiles, as the named `graft.Bench` mode prints
+    * them), 100 → 2000 entries: dedup_clusters 2.72 → 2.22 s (66 → 0
     * recompiles per run), dedup_semantic_coarse 4.23 → 2.46,
     * dedup_apply 3.53 → 2.16. The cache lives on the driver, so the
     * value holds at any cluster size. */
@@ -110,7 +111,7 @@ object GraftSession {
       // with broadcast dims that is most stages, and it floods the
       // captured bench tail. MapPartitionsRDD warns "RDD ... was locally
       // checkpointed" when Bench's eager per-run unpersist (deliberate —
-      // see Bench.once) drops checkpoint blocks; benign by construction
+      // see Bench.run) drops checkpoint blocks; benign by construction
       // because every invocation re-materializes its own.
       org.apache.logging.log4j.core.config.Configurator.setLevel(
         "org.apache.spark.scheduler.DAGScheduler", org.apache.logging.log4j.Level.ERROR)

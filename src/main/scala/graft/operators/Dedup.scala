@@ -714,8 +714,9 @@ object Dedup {
       .agg(collect_set(id).as("set"), count(lit(1)).as("n"))
   }
 
-  /** Jaccard candidate stage, exposed for [[graft.PpStats]] (the
-    * FP-ratio diagnostic the 100 TB sizing rests on). */
+  /** Jaccard candidate stage, exposed for InvariantSpec's PPJoin
+    * candidate:true ratio ceilings (the FP ratio the 100 TB sizing
+    * rests on). */
   private[graft] def jaccardPrefixCandidates(tok: DataFrame): DataFrame = {
     val t = 0.5
     val freq = tok.groupBy(col("tk")).agg(count(lit(1)).as("f"))
@@ -790,22 +791,7 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** CONTAINMENT join — the asymmetric overlap C(A→B) = |A∩B|/|A| ≥ t
-    * that symmetric Jaccard structurally misses: a short document
-    * quoted/embedded inside a long one has tiny Jaccard but high
-    * containment, and it's containment that decontamination and
-    * quote/subset dedup actually need. Directed pairs (sub, sup).
-    *
-    * Prefix filter adapted to the asymmetric threshold: C ≥ t forces
-    * overlap ≥ ⌈t·|A|⌉, so A (the candidate SUBSET) must share a
-    * shingle from its rarest-first prefix of size |A| − ⌈t·|A|⌉ + 1
-    * with B — only ~(1−t)·|A| rare shingles of each doc enter the
-    * index probe, while the B side needs no prefix (any of its
-    * shingles can witness). One length prune survives asymmetry:
-    * |B| ≥ ⌈t·|A|⌉ (B must have room for the overlap). Verify is the
-    * same two keyed joins + in-row array_intersect as
-    * [[dedupJaccardPrefix]] — never a token-level pair explosion. */
-  /** Containment candidate stage, exposed for [[graft.PpStats]]. */
+  /** Containment candidate stage, exposed for the same ratio ceilings. */
   private[graft] def containmentCandidates(tok: DataFrame): DataFrame = {
     val t = 0.8
     val freq = tok.groupBy(col("tk")).agg(count(lit(1)).as("f"))
@@ -838,6 +824,21 @@ object Dedup {
       .select(col("doc_sub"), col("doc_sup"))
   }
 
+  /** CONTAINMENT join — the asymmetric overlap C(A→B) = |A∩B|/|A| ≥ t
+    * that symmetric Jaccard structurally misses: a short document
+    * quoted/embedded inside a long one has tiny Jaccard but high
+    * containment, and it's containment that decontamination and
+    * quote/subset dedup actually need. Directed pairs (sub, sup).
+    *
+    * Prefix filter adapted to the asymmetric threshold: C ≥ t forces
+    * overlap ≥ ⌈t·|A|⌉, so A (the candidate SUBSET) must share a
+    * shingle from its rarest-first prefix of size |A| − ⌈t·|A|⌉ + 1
+    * with B — only ~(1−t)·|A| rare shingles of each doc enter the
+    * index probe, while the B side needs no prefix (any of its
+    * shingles can witness). One length prune survives asymmetry:
+    * |B| ≥ ⌈t·|A|⌉ (B must have room for the overlap). Verify is the
+    * same two keyed joins + in-row array_intersect as
+    * [[dedupJaccardPrefix]] — never a token-level pair explosion. */
   private def dedupContainment(spark: SparkSession, dir: String): DataFrame = {
     val t = 0.8
     val tok = shingleTok(spark, dir)
@@ -866,7 +867,7 @@ object Dedup {
     * 137:1 re-discovery arriving early). Runs [[containmentCandidates]]
     * over shingle STRINGS ranked by global (freq, string) order — the
     * one total order both engines can reproduce tie-for-tie; the
-    * production id-order variant's ratio diagnostic is graft.PpStats.
+    * production id-order variant's ratio is pinned in InvariantSpec.
     *
     * Scale: an EVAL op — ground truth is Σf² over ALL shingle buckets
     * (the dedup_minhash_eval truth-stage cost class), run at gate SFs

@@ -32,7 +32,7 @@ object Multimodal {
   // temp file (FileCacheImage{Input,Output}Stream). With 32 tasks ×
   // thousands of tiles per bench run that tmpfs churn made the decode
   // tier bimodal (mm_phash_pairs warm runs measured 5.0 s vs 1.7 s
-  // within one BenchFocus session, round 18). All payloads here are
+  // within one session, round 18). All payloads here are
   // already in memory, so the memory-cache mode is strictly better —
   // decoded bytes are identical. The object initializer runs in every
   // JVM that deserializes a closure referencing these helpers, so

@@ -84,19 +84,6 @@ object Similarity {
     Seq.fill(nPlanes)(Seq.fill(dim)(next()))
   }
 
-  /** ANN via random-hyperplane LSH: 12-bit sign signature → bucket;
-    * candidates meet queries only within their bucket (join on bucket
-    * id — no all-pairs). Approximate ⇒ no oracle. */
-  /** Multi-probe LSH + exact rerank — the production recall lever:
-    * each query probes its own 12-bit hyperplane bucket AND all 12
-    * Hamming-distance-1 neighbors (13 probes), candidates from any
-    * probe get EXACT cosine scores, global top-3 per query. Widens
-    * recall over single-bucket LSH (a near-neighbor differing on one
-    * hyperplane side is no longer lost) at 13× the bucket fan-out —
-    * still bucket-local equi-joins, never all-pairs. The probe list
-    * lives on the bounded query side (|Q|×13 rows, broadcast); each
-    * candidate has exactly one bucket, so probe buckets being distinct
-    * means no (qid, cid) pair can duplicate. */
   /** The multi-probe candidate relation, exact-scored: (qid, cid, cs)
     * for every candidate met in any of the 13 probed buckets. Pair-
     * unique by construction (each candidate lives in exactly one
@@ -126,6 +113,16 @@ object Similarity {
         Parity.r6(expr("dot_product(qe, ce)") / (col("qnrm") * col("cnrm"))).as("cs"))
   }
 
+  /** Multi-probe LSH + exact rerank — the production recall lever:
+    * each query probes its own 12-bit hyperplane bucket AND all 12
+    * Hamming-distance-1 neighbors (13 probes), candidates from any
+    * probe get EXACT cosine scores, global top-3 per query. Widens
+    * recall over single-bucket LSH (a near-neighbor differing on one
+    * hyperplane side is no longer lost) at 13× the bucket fan-out —
+    * still bucket-local equi-joins, never all-pairs. The probe list
+    * lives on the bounded query side (|Q|×13 rows, broadcast); each
+    * candidate has exactly one bucket, so probe buckets being distinct
+    * means no (qid, cid) pair can duplicate. */
   private def simAnnMultiprobe(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(col("cs").desc, col("cid"))
     multiprobeScored(spark, dir)
@@ -181,6 +178,9 @@ object Similarity {
           Parity.r6(lit(2) * prec * rec / (prec + rec))).as("f1"))
   }
 
+  /** ANN via random-hyperplane LSH: 12-bit sign signature → bucket;
+    * candidates meet queries only within their bucket (join on bucket
+    * id — no all-pairs). Approximate ⇒ no oracle. */
   private def simAnnLsh(spark: SparkSession, dir: String): DataFrame = {
     val ps = planes(12, 64)
     val bucket = ps.zipWithIndex.map { case (p, i) =>
@@ -451,28 +451,6 @@ object Similarity {
       .orderBy(col("vec_id"))
   }
 
-  /** IVF-PQ with asymmetric-distance (ADC) search — the composition
-    * that makes billion-vector ANN fit a cluster: the coarse quantizer
-    * (SAME train-once store as [[simAnnIvf]]) routes each vector to a
-    * cell, the cell RESIDUAL v − c is product-quantized to 4 codes
-    * (per-subspace codebooks on residuals — tighter than raw-vector PQ
-    * because residual energy ≪ vector energy), and a query scores
-    * candidates WITHOUT touching float vectors: dot(q,v) ≈ dot(q,c) +
-    * Σⱼ dot(qⱼ, codewordⱼ[codeⱼ]) — the per-query lookup table (ADC)
-    * of |Q|·m·k partial dots, broadcast. The top-10 ADC shortlist per
-    * query is then reranked EXACTLY against the float vectors (only
-    * |Q|·10 rows move), standard Jégou et al. IVFADC.
-    *
-    * Scale: candidates meet queries only inside their cell (keyed
-    * equi-join on cell + code keys); the scored relation is codes, not
-    * vectors — 4 small ints per candidate instead of 64 floats, the
-    * 128× bandwidth cut that is the point of PQ. Both quantizers come
-    * from write-once stores: query cost is encode + probe, never
-    * training. Since round 11 both quantizers train with the quantized
-    * Lloyd, so coarse routing, residual codebooks, ADC scoring (with
-    * 1e-6-quantized partial sums) and the exact rerank are ALL
-    * re-derived by the DuckDB oracle bit-for-bit; the recall contract
-    * vs the exact top-k additionally lives in InvariantSpec. */
   /** Shared IVF-PQ quantizer stack — coarse assignment, residual
     * codebooks, PQ code relation — factored (round 17) so the
     * nprobe>1 probe variant shares the exact trained quantizers with
@@ -581,6 +559,28 @@ object Similarity {
       .select(col("qid"), col("rnk"), col("cid"), col("cs"))
   }
 
+  /** IVF-PQ with asymmetric-distance (ADC) search — the composition
+    * that makes billion-vector ANN fit a cluster: the coarse quantizer
+    * (SAME train-once store as [[simAnnIvf]]) routes each vector to a
+    * cell, the cell RESIDUAL v − c is product-quantized to 4 codes
+    * (per-subspace codebooks on residuals — tighter than raw-vector PQ
+    * because residual energy ≪ vector energy), and a query scores
+    * candidates WITHOUT touching float vectors: dot(q,v) ≈ dot(q,c) +
+    * Σⱼ dot(qⱼ, codewordⱼ[codeⱼ]) — the per-query lookup table (ADC)
+    * of |Q|·m·k partial dots, broadcast. The top-10 ADC shortlist per
+    * query is then reranked EXACTLY against the float vectors (only
+    * |Q|·10 rows move), standard Jégou et al. IVFADC.
+    *
+    * Scale: candidates meet queries only inside their cell (keyed
+    * equi-join on cell + code keys); the scored relation is codes, not
+    * vectors — 4 small ints per candidate instead of 64 floats, the
+    * 128× bandwidth cut that is the point of PQ. Both quantizers come
+    * from write-once stores: query cost is encode + probe, never
+    * training. Since round 11 both quantizers train with the quantized
+    * Lloyd, so coarse routing, residual codebooks, ADC scoring (with
+    * 1e-6-quantized partial sums) and the exact rerank are ALL
+    * re-derived by the DuckDB oracle bit-for-bit; the recall contract
+    * vs the exact top-k additionally lives in InvariantSpec. */
   private def simAnnIvfPq(spark: SparkSession, dir: String): DataFrame =
     ivfPqRanked(spark, dir, ivfPqShortlist(spark, dir))
       .orderBy(col("qid"), col("rnk"))
@@ -683,15 +683,6 @@ object Similarity {
     adc.withColumn("arnk", row_number().over(wA))
       .filter(col("arnk") <= 20).select(col("qid"), col("cid"))
   }
-
-  /** Harness hook for the nprobe recall/cost sweep (round 18, VERDICT
-    * task 3; `graft.IvfPqSweep`): the eval confusion fold over the
-    * multi-probe shortlist at an arbitrary nprobe — not registered,
-    * exists so the knob can be chosen from a measured curve instead of
-    * two points. */
-  private[graft] def ivfPqSweepPoint(spark: SparkSession, dir: String,
-      nprobe: Int): DataFrame =
-    ivfPqEvalOn(spark, dir, ivfPqShortlistNprobe(spark, dir, nprobe))
 
   private def simAnnIvfPqNprobe(spark: SparkSession, dir: String): DataFrame =
     ivfPqRanked(spark, dir, ivfPqShortlistNprobe(spark, dir, 3))
@@ -879,35 +870,6 @@ object Similarity {
     r1.unionByName(r2).unionByName(r3).orderBy(col("qid"), col("rnk"))
   }
 
-  /** Cross-encoder-style SCORE-FUSION reranker apply (round 15,
-    * VERDICT task 8) — the sibling of [[simMaxsimRerank]] on the other
-    * axis: instead of a finer similarity, fuse HETEROGENEOUS signals —
-    * the ANN similarity, a lexical BM25 score (k1=1.2, b=0.75,
-    * corpus-trained df/avgdl), and a freshness prior — through a small
-    * learned per-language weight table into one ranking, emitting the
-    * PER-FEATURE CONTRIBUTIONS next to the fused score (the
-    * explainability contract a production reranker ships with).
-    *
-    * The production shape end-to-end: (1) the ANN leg supplies an
-    * 8-candidate shortlist per bounded query (broadcast query side,
-    * same as the MaxSim/MMR reranks — at fleet scale this is the
-    * simAnnMultiprobe output); (2) the lexical leg TRAINS on the
-    * corpus (one token-explode pass for tf/df/doc-length — the
-    * text_tfidf cost class, map-side-combinable) but EVALUATES only on
-    * shortlist pairs: query terms join candidate term-frequencies on
-    * (cid, term), so the BM25 work is |shortlist|×|q-terms|-bounded,
-    * never corpus×corpus; (3) the weight table is |langs| rows —
-    * broadcast — and the fused score is one projection. BM25 is
-    * squashed to bm/(1+bm) ∈ [0,1) so the three features share scale.
-    * The "learned" weights here are a deterministic md5 fixture per
-    * language (the classifier tier's teacher-fixture discipline):
-    * what's under test is the fusion plan, not a training loop.
-    *
-    * Float parity: ann/contribution terms are r6-quantized, so every
-    * downstream sum is a sum of 1e-6 multiples (re-snaps exactly under
-    * the final r6); ln(idf) follows the text_tfidf precedent; all
-    * fractional constants are CAST AS DOUBLE in the oracle (DuckDB
-    * DECIMAL-literal trap); ties break on cid. */
   /** Write-once LEXICAL INDEX for the BM25 rerank leg (round 16,
     * r15 VERDICT task 5): tf / doc-length / document-frequency / corpus
     * scalars are corpus state, not per-query state — at fleet scale the
@@ -944,8 +906,38 @@ object Similarity {
       read(spark, s"$path/df"), read(spark, s"$path/stats"))
   }
 
-  /** Score-fusion rerank for an arbitrary bounded query side — the
-    * shared core of the registered `sim_rerank_fuse` (qid < 10) and the
+  /** Cross-encoder-style SCORE-FUSION reranker apply (round 15,
+    * VERDICT task 8) — the sibling of [[simMaxsimRerank]] on the other
+    * axis: instead of a finer similarity, fuse HETEROGENEOUS signals —
+    * the ANN similarity, a lexical BM25 score (k1=1.2, b=0.75,
+    * corpus-trained df/avgdl), and a freshness prior — through a small
+    * learned per-language weight table into one ranking, emitting the
+    * PER-FEATURE CONTRIBUTIONS next to the fused score (the
+    * explainability contract a production reranker ships with).
+    *
+    * The production shape end-to-end: (1) the ANN leg supplies an
+    * 8-candidate shortlist per bounded query (broadcast query side,
+    * same as the MaxSim/MMR reranks — at fleet scale this is the
+    * simAnnMultiprobe output); (2) the lexical leg TRAINS on the
+    * corpus (one token-explode pass for tf/df/doc-length — the
+    * text_tfidf cost class, map-side-combinable) but EVALUATES only on
+    * shortlist pairs: query terms join candidate term-frequencies on
+    * (cid, term), so the BM25 work is |shortlist|×|q-terms|-bounded,
+    * never corpus×corpus; (3) the weight table is |langs| rows —
+    * broadcast — and the fused score is one projection. BM25 is
+    * squashed to bm/(1+bm) ∈ [0,1) so the three features share scale.
+    * The "learned" weights here are a deterministic md5 fixture per
+    * language (the classifier tier's teacher-fixture discipline):
+    * what's under test is the fusion plan, not a training loop.
+    *
+    * Float parity: ann/contribution terms are r6-quantized, so every
+    * downstream sum is a sum of 1e-6 multiples (re-snaps exactly under
+    * the final r6); ln(idf) follows the text_tfidf precedent; all
+    * fractional constants are CAST AS DOUBLE in the oracle (DuckDB
+    * DECIMAL-literal trap); ties break on cid.
+    *
+    * This is the core for an arbitrary bounded query side, shared by
+    * the registered `sim_rerank_fuse` (qid < 10) and the
     * [[graft.streaming.StreamingOps.rerankFuseIngest]] twin (qids
     * arrive in micro-batches). `q` must carry (qid, qe, qnrm) and be
     * small enough to broadcast — the rerank contract (a shortlist

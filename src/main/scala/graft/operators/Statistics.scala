@@ -1251,7 +1251,7 @@ object Statistics {
     // MATERIALIZATION TRIED AND MEASURED (round 12): the five phases
     // below re-consume this 4-column projection ~6 times, so the
     // obvious move is to materialize it once. Measured warm at sf0.1
-    // (QSmoke, 3 runs): plain re-scans 2.8-3.0 s; localCheckpoint
+    // (3 runs): plain re-scans 2.8-3.0 s; localCheckpoint
     // 3.6-4.1 s; fanout+localCheckpoint 4.3-4.9 s; Dataset .cache()
     // 3.7-4.3 s — every replay variant LOSES to re-reading the
     // vectorized, column-pruned parquet locally, because the wall time

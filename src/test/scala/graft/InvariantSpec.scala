@@ -1453,13 +1453,14 @@ class InvariantSpec extends AnyFunSuite {
     // losslessness — is what makes the family complete at sf100. The
     // string oracles prove no true pair is lost; nothing proves a
     // future prefix/filter edit doesn't silently reopen the candidate
-    // flood. Pin the measured ratios with 2× headroom (PpStats,
+    // flood. Pin the measured ratios with 2× headroom (measured
     // round 15): sf0.01 jaccard 25/25 = 1.0, containment 51/50 = 1.02;
     // sf0.1 jaccard 12.4:1, containment 6.1:1 (SCALING.md round-14
     // table, stable across sf0.1 and sf1). The data is deterministic,
     // so a ceiling breach is a real candidate-stage loosening, never
     // noise — if a deliberate re-plan changes the tradeoff, re-measure
-    // via PpStats and move the ceiling WITH a PLANS.md note.
+    // with this test's info line and move the ceiling WITH a PLANS.md
+    // note.
     val ceilings = Seq(
       // (dir, jaccard ceiling, containment ceiling)
       ("/root/testdata/sf0.01", 3.0, 3.0),
@@ -1478,10 +1479,10 @@ class InvariantSpec extends AnyFunSuite {
       assert(jacTrue > 0 && conTrue > 0, s"$dir: no true pairs — vacuous")
       assert(jacRatio <= jacCeil,
         f"$dir jaccard candidate:true $jacRatio%.2f exceeds $jacCeil — " +
-          "the prefix candidate stage has loosened (re-measure via graft.PpStats)")
+          "the prefix candidate stage has loosened (re-measure with this test's info line)")
       assert(conRatio <= conCeil,
         f"$dir containment candidate:true $conRatio%.2f exceeds $conCeil — " +
-          "the extended-prefix/positional stage has loosened (re-measure via graft.PpStats)")
+          "the extended-prefix/positional stage has loosened (re-measure with this test's info line)")
     }
   }
 

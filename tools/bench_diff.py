@@ -105,6 +105,16 @@ def main():
         if side:
             print(f"{name}: {', '.join(sorted(side))}")
 
+    # Each failed query with its cause: Bench records "errors" (query ->
+    # "ExceptionClass: message", from the first failed timed run); older
+    # records have none and list the name alone.
+    for side, lab in ((old, labels[1]), (new, labels[0])):
+        if side.get("failed"):
+            errors = side.get("errors", {})
+            print(f"failed on {lab}:")
+            for k in side["failed"]:
+                print(f"  {k}" + (f"  ({errors[k]})" if k in errors else ""))
+
     # Per-run spread (round 11): Bench records every raw run per query
     # in "runs"; a round-over-round delta inside the union of the two
     # sides' observed spreads is contention, not a regression, and is

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main directly on the compiled classes — no sbt launcher,
 # no sbt target lock (two sbt processes serialize on it, which blocks
-# iteration whenever a long ScaleData/ScaleBench run is in flight).
+# iteration whenever a long ScaleData or `Bench --scale` run is in flight).
 # Mirrors build.sbt's forked-run JVM flags (JDK17 add-opens, UTC, no
 # UI, SPARK_DRIVER_MEM heap). Compile first: sbt -batch compile.
 # Usage: tools/run_main.sh <mainClass> [args...]
