@@ -127,13 +127,12 @@ object HttpJsonSource {
 final case class ChunkedDownload(
     url: String,
     totalBytes: Long,
-    chunkBytes: Long = 100L * 1024 * 1024, // CHUNK_SIZE, http.rs:14
+    chunkBytes: Long = graft.sources.HttpChunkSource.DefaultChunkBytes,
     fetchRange: (String, Long, Long) => Array[Byte]) {
 
   import ChunkedDownload.Part
 
-  def ranges: Seq[(Long, Long)] =
-    (0L until totalBytes by chunkBytes).map(s => (s, math.min(s + chunkBytes, totalBytes) - 1))
+  def ranges: Seq[(Long, Long)] = graft.sources.HttpChunkSource.ranges(totalBytes, chunkBytes)
 
   /** Fetch every chunk across the cluster and write it as
     * `outDir/part-<start, zero-padded>` directly from the executor that

@@ -74,22 +74,6 @@ object Aggregates {
       .orderBy(col("event_type"))
   }
 
-  /** KMV (k-minimum-values / bottom-k) distinct-count sketch — the
-    * DETERMINISTIC member of the sketch family: hash every key with
-    * md5 to a uniform [0,1) value, keep the k smallest per group, and
-    * estimate distinct = (k−1)/h_k. Because the hash is md5 (not an
-    * engine-native seed-dependent function), the sketch content — and
-    * therefore the ESTIMATE ITSELF — is bit-reproducible on any
-    * engine, so unlike HLL this sketch is oracle-checkable: DuckDB
-    * recomputes the identical bottom-k and the identical estimate.
-    * That determinism is what makes KMV summaries safe to persist and
-    * diff across engine migrations (the HLL family can't be byte-
-    * compared across implementations). k=8 fits the smallest fixture
-    * (15 distinct users/type at sf0.001) — the mechanism, not the
-    * accuracy, is the contract; exact count sits beside the estimate.
-    *
-    * Scale: one distinct-pairs shuffle, then a per-group bottom-k
-    * window (state k rows per group); the estimate never moves rows. */
   /** KMV SET ALGEBRA (Beyer et al., SIGMOD'07 "On synopses for
     * distinct-value estimation under multiset operations"): bottom-k
     * sketches support union/intersection/Jaccard WITHOUT revisiting
@@ -141,6 +125,22 @@ object Aggregates {
         * (lit((k - 1).toDouble) / col("hk"))).as("est_intersect"))
   }
 
+  /** KMV (k-minimum-values / bottom-k) distinct-count sketch — the
+    * DETERMINISTIC member of the sketch family: hash every key with
+    * md5 to a uniform [0,1) value, keep the k smallest per group, and
+    * estimate distinct = (k−1)/h_k. Because the hash is md5 (not an
+    * engine-native seed-dependent function), the sketch content — and
+    * therefore the ESTIMATE ITSELF — is bit-reproducible on any
+    * engine, so unlike HLL this sketch is oracle-checkable: DuckDB
+    * recomputes the identical bottom-k and the identical estimate.
+    * That determinism is what makes KMV summaries safe to persist and
+    * diff across engine migrations (the HLL family can't be byte-
+    * compared across implementations). k=8 fits the smallest fixture
+    * (15 distinct users/type at sf0.001) — the mechanism, not the
+    * accuracy, is the contract; exact count sits beside the estimate.
+    *
+    * Scale: one distinct-pairs shuffle, then a per-group bottom-k
+    * window (state k rows per group); the estimate never moves rows. */
   private def aggKmvDistinct(spark: SparkSession, dir: String): DataFrame = {
     val k = 8
     import graft.Tables.events

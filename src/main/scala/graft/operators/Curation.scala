@@ -189,10 +189,6 @@ object Curation {
         Parity.r6(col("top10_rows") / col("n_rows")).as("top10_share"))
   }
 
-  /** Column-quality profile: null and distinct counts for every audited
-    * column in ONE pass over the table (a single aggregate row,
-    * unpivoted to long form) — the schema-drift tripwire that runs
-    * before a training read trusts 100 TB of upstream output. */
   /** Deterministic EPOCH SHUFFLE + worker sharding — the "globally
     * shuffle the corpus, split it across N dataloader workers" step
     * every distributed training run needs, without RNG state: the
@@ -256,6 +252,10 @@ object Curation {
       .orderBy(col("bin"))
   }
 
+  /** Column-quality profile: null and distinct counts for every audited
+    * column in ONE pass over the table (a single aggregate row,
+    * unpivoted to long form) — the schema-drift tripwire that runs
+    * before a training read trusts 100 TB of upstream output. */
   private def profileNulls(spark: SparkSession, dir: String): DataFrame = {
     val cols = Seq("o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
     val aggs = cols.flatMap { c =>
@@ -416,33 +416,6 @@ object Curation {
       .select(col("rnk"), col("doc_id"), col("n_tokens"), col("q"))
   }
 
-  /** DSIR-shaped data selection (Xie et al. 2023, "Data Selection for
-    * Language Models via Importance Resampling"): score every raw
-    * document by how target-like its HASHED N-GRAM profile is, then
-    * keep the top slice — the published recipe for choosing
-    * pretraining data that matches a target distribution without
-    * training a model. Features are word unigrams + bigrams hashed
-    * into B = 512 buckets (the md5 idiom — reproducible across
-    * engines/runs); the target distribution is the `lang = 'en'`
-    * slice standing in for a curated target corpus.
-    *
-    * EXACTNESS over log-linearity: literal DSIR weights are
-    * Σ n_b·(ln p_t[b] − ln p_r[b]); `ln` is the one primitive with no
-    * cross-engine bit guarantee (JVM Math.log intrinsics may differ
-    * from libm by an ulp, enough to flip a quantization floor). This
-    * variant scores with Laplace-smoothed RELATIVE-FREQUENCY
-    * differences instead: per bucket
-    * λ_q = q9((n_t+1)/(D_t+B)) − q9((n_r+1)/(D_r+B)) (one exact double
-    * division each, quantized to 1e-9 BIGINTs), and a document scores
-    * Σ n_b·λ_q — an exact integer sum, so the whole ranking is
-    * bit-deterministic and fully oracle-checked. Same monotone
-    * "up-weight buckets the target over-uses" structure; documented
-    * as the log-free variant.
-    *
-    * Scale: features collapse to a 512-row bucket relation (map-side
-    * combinable counts); λ broadcasts; the per-doc score is one
-    * grouped exact-int sum — no shuffle beyond the feature hash-agg,
-    * no model, no driver state beyond the 512-row λ. */
   /** The hashed n-gram feature stream behind [[corpusDsirSelect]] —
     * one (doc_id, lang, bucket) row per unigram/bigram occurrence. */
   private def dsirFeats(spark: SparkSession, dir: String): DataFrame = {
@@ -498,6 +471,33 @@ object Curation {
       .select(col("doc_id"), col("lang"), col("n_feats"),
         (col("score_q").cast("double") / lit(1000000000.0)).as("score"))
 
+  /** DSIR-shaped data selection (Xie et al. 2023, "Data Selection for
+    * Language Models via Importance Resampling"): score every raw
+    * document by how target-like its HASHED N-GRAM profile is, then
+    * keep the top slice — the published recipe for choosing
+    * pretraining data that matches a target distribution without
+    * training a model. Features are word unigrams + bigrams hashed
+    * into B = 512 buckets (the md5 idiom — reproducible across
+    * engines/runs); the target distribution is the `lang = 'en'`
+    * slice standing in for a curated target corpus.
+    *
+    * EXACTNESS over log-linearity: literal DSIR weights are
+    * Σ n_b·(ln p_t[b] − ln p_r[b]); `ln` is the one primitive with no
+    * cross-engine bit guarantee (JVM Math.log intrinsics may differ
+    * from libm by an ulp, enough to flip a quantization floor). This
+    * variant scores with Laplace-smoothed RELATIVE-FREQUENCY
+    * differences instead: per bucket
+    * λ_q = q9((n_t+1)/(D_t+B)) − q9((n_r+1)/(D_r+B)) (one exact double
+    * division each, quantized to 1e-9 BIGINTs), and a document scores
+    * Σ n_b·λ_q — an exact integer sum, so the whole ranking is
+    * bit-deterministic and fully oracle-checked. Same monotone
+    * "up-weight buckets the target over-uses" structure; documented
+    * as the log-free variant.
+    *
+    * Scale: features collapse to a 512-row bucket relation (map-side
+    * combinable counts); λ broadcasts; the per-doc score is one
+    * grouped exact-int sum — no shuffle beyond the feature hash-agg,
+    * no model, no driver state beyond the 512-row λ. */
   private def corpusDsirSelect(spark: SparkSession, dir: String): DataFrame =
     dsirFeatsScored(spark, dir)
       .orderBy(col("score").desc, col("doc_id"))

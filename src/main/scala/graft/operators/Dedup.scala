@@ -106,6 +106,12 @@ object Dedup {
         bandKey(3).as("band3"))
       .orderBy(col("doc_id"))
 
+  /** LSH band keys of a signature frame — shared by the batch
+    * incremental path and the streaming ingest (StreamingOps). */
+  private[graft] def bandsOf(sig: DataFrame): DataFrame = sig.select(col("doc_id"),
+    posexplode(array((0 until NumBands).map(bandKey): _*))
+      .as(Seq("band_idx", "band")))
+
   /** INCREMENTAL dedup against a PERSISTED LSH index — the production
     * shape at 100 TB, where re-running detection over the full corpus
     * per ingest is off the table: the historical band index (band_idx,
@@ -119,12 +125,6 @@ object Dedup {
     * is doc_id mod 5 (deterministic at every SF); both joins and the
     * md5 signatures are bit-reproducible, so the full incremental
     * candidate set is oracle-checked. */
-  /** LSH band keys of a signature frame — shared by the batch
-    * incremental path and the streaming ingest (StreamingOps). */
-  private[graft] def bandsOf(sig: DataFrame): DataFrame = sig.select(col("doc_id"),
-    posexplode(array((0 until NumBands).map(bandKey): _*))
-      .as(Seq("band_idx", "band")))
-
   private def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val idxBase = graft.Caches.once(spark, "mhindex_v1", dir, Seq("documents"))(
       bandsOf(signatureOf(fanout(documents(spark, dir))
@@ -172,16 +172,6 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** 64-bit SimHash over token hash bits via the custom `simhash_agg`
-    * TypedImperativeAggregate (one tight loop per row — see
-    * graft.functions.SimHashAgg for why not 64 sum(when(...))
-    * columns). Since round 11 the token hash is the md5 60-bit idiom
-    * (top 4 fingerprint bits deterministically 0) instead of
-    * Spark-native xxhash64, so the whole fingerprint — votes, sign
-    * pack, pigeonhole blocks — is re-derivable in DuckDB and both
-    * queries carry full oracles; locality is unchanged (it comes from
-    * token overlap, not the hash family — re-proven by the planted
-    * pigeonhole contract). */
   /** Unordered fingerprint core — the pairs self-join consumes this
     * (a sort below a self-join is two wasted range exchanges); the
     * standalone query adds the presentation sort. */
@@ -193,6 +183,16 @@ object Dedup {
       .agg(expr("simhash_agg(h)").as("simhash"))
   }
 
+  /** 64-bit SimHash over token hash bits via the custom `simhash_agg`
+    * TypedImperativeAggregate (one tight loop per row — see
+    * graft.functions.SimHashAgg for why not 64 sum(when(...))
+    * columns). Since round 11 the token hash is the md5 60-bit idiom
+    * (top 4 fingerprint bits deterministically 0) instead of
+    * Spark-native xxhash64, so the whole fingerprint — votes, sign
+    * pack, pigeonhole blocks — is re-derivable in DuckDB and both
+    * queries carry full oracles; locality is unchanged (it comes from
+    * token overlap, not the hash family — re-proven by the planted
+    * pigeonhole contract). */
   private def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
     dedupSimhashCore(spark, dir).orderBy(col("doc_id"))
 
@@ -611,27 +611,6 @@ object Dedup {
       .orderBy(col("noun"))
   }
 
-  /** Prefix-filtered set-similarity self-join — the PPJoin-family
-    * optimization over the plain inverted index ([[dedupNgramJaccard]]
-    * indexes EVERY shingle): order each document's distinct shingles
-    * by ascending global frequency (rarest first) and index only the
-    * first n − ⌈t·n⌉ + 1 of them. Two sets with Jaccard ≥ t must
-    * share at least one PREFIX element (pigeonhole on the overlap
-    * bound ⌈t/(1+t)·(na+nb)⌉), so the candidate join touches a small
-    * rare-shingle slice of the index — the frequent shingles that
-    * make inverted-index buckets quadratic never enter the join.
-    *
-    * Three keyed shuffles (shingle frequency, per-doc prefix window,
-    * candidate verify), Σ bucket² only over RARE-shingle buckets.
-    * Verification counts common shingles with two keyed equi-joins
-    * and one division ⇒ bitwise cross-engine, oracle-checked. */
-  /** The write-once content-keyed (doc_id, shingle) relation shared by
-    * the set-similarity joins: materialized once so the many consumers
-    * (frequency, prefix window, verify doc-sets) never re-run the
-    * interpreted shingle lambdas (measured 8.8 s → 2.6 s at sf0.1 when
-    * first checkpointed; the parquet cache also amortizes ACROSS
-    * invocations). On a cluster this IS the persisted shingle table
-    * every set-similarity pipeline keeps beside the corpus. */
   /** The cached (doc_id, shingle-STRING) relation before the xxhash64
     * id projection — factored out (round 16) for [[textDedupEval]],
     * whose candidate-stage COUNTS are exposed to the oracle and so must
@@ -641,6 +620,13 @@ object Dedup {
   private[graft] def shingleTokRaw(spark: SparkSession, dir: String): DataFrame =
     read(spark, shingleTokStore(spark, dir))
 
+  /** The write-once content-keyed (doc_id, shingle) relation shared by
+    * the set-similarity joins: materialized once so the many consumers
+    * (frequency, prefix window, verify doc-sets) never re-run the
+    * interpreted shingle lambdas (measured 8.8 s → 2.6 s at sf0.1 when
+    * first checkpointed; the parquet cache also amortizes ACROSS
+    * invocations). On a cluster this IS the persisted shingle table
+    * every set-similarity pipeline keeps beside the corpus. */
   private def shingleTokStore(spark: SparkSession, dir: String): String =
     graft.Caches.once(spark, "jacshingle_v1", dir, Seq("documents"))(
       fanout(documents(spark, dir))
@@ -768,6 +754,20 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
   }
 
+  /** Prefix-filtered set-similarity self-join — the PPJoin-family
+    * optimization over the plain inverted index ([[dedupNgramJaccard]]
+    * indexes EVERY shingle): order each document's distinct shingles
+    * by ascending global frequency (rarest first) and index only the
+    * first n − ⌈t·n⌉ + 1 of them. Two sets with Jaccard ≥ t must
+    * share at least one PREFIX element (pigeonhole on the overlap
+    * bound ⌈t/(1+t)·(na+nb)⌉), so the candidate join touches a small
+    * rare-shingle slice of the index — the frequent shingles that
+    * make inverted-index buckets quadratic never enter the join.
+    *
+    * Three keyed shuffles (shingle frequency, per-doc prefix window,
+    * candidate verify), Σ bucket² only over RARE-shingle buckets.
+    * Verification counts common shingles with two keyed equi-joins
+    * and one division ⇒ bitwise cross-engine, oracle-checked. */
   private def dedupJaccardPrefix(spark: SparkSession, dir: String): DataFrame = {
     val t = 0.5
     val tok = shingleTok(spark, dir)
@@ -1518,17 +1518,6 @@ object Dedup {
       dedupSpanApply)
   )
 
-  /** Cross-document repeated-span detection (the span-level
-    * complement to whole-doc MinHash): hash every 16-token window at
-    * stride 8 and report hashes seen in >1 document — the
-    * "deduplicate repeated substrings in training data" primitive
-    * (boilerplate headers, license blocks, templated text).
-    *
-    * Scale: explode emits tokens/stride rows per doc (linear in corpus
-    * tokens, same asymptotics as the MinHash shingle explode), then
-    * one hash-keyed shuffle with map-side DISTINCT; no all-pairs
-    * anywhere. A 32-bit span space at 100 T tokens would saturate —
-    * md5 (128-bit) keeps collisions below 1e-18. */
   /** Maximal cross-document repeated spans — the Lee et al.
     * "Deduplicating Training Data Makes Language Models Better"
     * semantic at window granularity, and the removal manifest it
@@ -1614,6 +1603,17 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
+  /** Cross-document repeated-span detection (the span-level
+    * complement to whole-doc MinHash): hash every 16-token window at
+    * stride 8 and report hashes seen in >1 document — the
+    * "deduplicate repeated substrings in training data" primitive
+    * (boilerplate headers, license blocks, templated text).
+    *
+    * Scale: explode emits tokens/stride rows per doc (linear in corpus
+    * tokens, same asymptotics as the MinHash shingle explode), then
+    * one hash-keyed shuffle with map-side DISTINCT; no all-pairs
+    * anywhere. A 32-bit span space at 100 T tokens would saturate —
+    * md5 (128-bit) keeps collisions below 1e-18. */
   private def dedupSpanNgrams(spark: SparkSession, dir: String): DataFrame = {
     val toks = split(col("text"), " ")
     documents(spark, dir)

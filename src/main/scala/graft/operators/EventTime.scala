@@ -206,14 +206,6 @@ object EventTime {
       col("seq").rlike("s.*p").as("converted"))
   }
 
-  /** Z-score anomaly flagging: per-type mean/stddev (one tiny aggregate
-    * — 5 groups), broadcast back onto the stream, events beyond 2σ
-    * surface with their score. The shape of every metrics-pipeline
-    * outlier monitor; the per-type stats stay one row per type at any
-    * corpus size, so the enrich join always broadcasts. Float caveat:
-    * mean/σ are order-sensitive double sums, rounded (Parity) exactly
-    * like agg_stats — residual ulps can't flip a rounded digit at these
-    * magnitudes, and the 2σ cut sits far from any value's boundary. */
   /** Autocorrelation function of the daily value series at lags 1–7 —
     * the seasonality diagnostic (a weekly cycle shows as an ACF spike
     * at lag 7) that tells a pipeline whether yesterday predicts today
@@ -613,6 +605,14 @@ object EventTime {
       .orderBy(col("activity").desc)
   }
 
+  /** Z-score anomaly flagging: per-type mean/stddev (one tiny aggregate
+    * — 5 groups), broadcast back onto the stream, events beyond 2σ
+    * surface with their score. The shape of every metrics-pipeline
+    * outlier monitor; the per-type stats stay one row per type at any
+    * corpus size, so the enrich join always broadcasts. Float caveat:
+    * mean/σ are order-sensitive double sums, rounded (Parity) exactly
+    * like agg_stats — residual ulps can't flip a rounded digit at these
+    * magnitudes, and the 2σ cut sits far from any value's boundary. */
   private def eventsAnomaly(spark: SparkSession, dir: String): DataFrame = {
     val stats = events(spark, dir)
       .groupBy(col("event_type"))
@@ -768,20 +768,6 @@ object EventTime {
       .orderBy(col("day"))
   }
 
-  /** EWMA (α = ½) over per-type daily event counts — trend smoothing
-    * with a BIT-EXACT cross-engine guarantee and no rounding formula:
-    * with the α = ½ decay every weight is a power of two, so the
-    * rewrite s_t = (Σ_{i≤t} xᵢ·2^{idxᵢ}) / 2^{idx_t+1} stays in exact
-    * binary arithmetic end-to-end — xᵢ·2^{idx} is an exact integer
-    * double (counts ≤ 2¹³, span ≤ 2⁵ days ⇒ < 2⁵³), the frame sum of
-    * exact integers is exact in ANY order, and the final scale divides
-    * by a power of two (exponent shift). Day gaps decay correctly for
-    * free: weights depend on the day INDEX, which is equivalent to
-    * zero-filling missing days.
-    *
-    * Scale: one shuffle on event_type; both windows (min-day, running
-    * sum) share that partitioning; series state is one row per
-    * (type, day). */
   /** Holt double-exponential smoothing (level + linear trend,
     * α = β = ½) per event type over the daily count series, with a
     * 7-day-ahead forecast — the next step up from [[timeseriesEwma]]
@@ -895,6 +881,20 @@ object EventTime {
       .orderBy(col("event_type"))
   }
 
+  /** EWMA (α = ½) over per-type daily event counts — trend smoothing
+    * with a BIT-EXACT cross-engine guarantee and no rounding formula:
+    * with the α = ½ decay every weight is a power of two, so the
+    * rewrite s_t = (Σ_{i≤t} xᵢ·2^{idxᵢ}) / 2^{idx_t+1} stays in exact
+    * binary arithmetic end-to-end — xᵢ·2^{idx} is an exact integer
+    * double (counts ≤ 2¹³, span ≤ 2⁵ days ⇒ < 2⁵³), the frame sum of
+    * exact integers is exact in ANY order, and the final scale divides
+    * by a power of two (exponent shift). Day gaps decay correctly for
+    * free: weights depend on the day INDEX, which is equivalent to
+    * zero-filling missing days.
+    *
+    * Scale: one shuffle on event_type; both windows (min-day, running
+    * sum) share that partitioning; series state is one row per
+    * (type, day). */
   private def timeseriesEwma(spark: SparkSession, dir: String): DataFrame = {
     val wType = Window.partitionBy(col("event_type"))
     val wCum = Window.partitionBy(col("event_type")).orderBy(col("idx"))

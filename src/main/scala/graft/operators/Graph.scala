@@ -118,19 +118,23 @@ object Graph {
   private def edgesMaterialized(spark: SparkSession, dir: String): DataFrame = {
     val base = bipartiteEdgesStore(spark, dir)
     val e = read(spark, base)
-    // SPARK_GRAFT_GRAPH_CKPT pins the branch for scale A/Bs (round 17,
-    // the fanout-gate precedent): the decade-3 α conflated data growth
-    // with the two SFs taking OPPOSITE branches here, so the ladder
-    // needs a same-plan-both-points run. "on"/"off" force it; unset
-    // keeps the plan-conditional default (canonical-SF gate runs never
-    // set it, so impl fingerprints are unaffected).
-    val ckpt = sys.env.get("SPARK_GRAFT_GRAPH_CKPT") match {
+    if (checkpointGraph(base)) e.localCheckpoint() else e
+  }
+
+  /** The graph-relation branch: localCheckpoint below 4 GB under `dir`,
+    * else keep (or persist) the relation on disk. SPARK_GRAFT_GRAPH_CKPT
+    * pins the branch for scale A/Bs (round 17, the fanout-gate
+    * precedent): the decade-3 α conflated data growth with the two SFs
+    * taking OPPOSITE branches, so the ladder needs a
+    * same-plan-both-points run. "on"/"off" force it; unset keeps the
+    * plan-conditional default (canonical-SF gate runs never set it, so
+    * impl fingerprints are unaffected). */
+  private def checkpointGraph(dir: String): Boolean =
+    sys.env.get("SPARK_GRAFT_GRAPH_CKPT") match {
       case Some("on")  => true
       case Some("off") => false
-      case _           => graft.GraftSession.dirBytes(base) < (4L << 30)
+      case _           => graft.GraftSession.dirBytes(dir) < (4L << 30)
     }
-    if (ckpt) e.localCheckpoint() else e
-  }
 
   /** One PageRank iteration: dst-keyed contribution aggregation
     * (map-side partial sums), then the damped update over all nodes.
@@ -231,25 +235,6 @@ object Graph {
       .orderBy(col("side"), col("degree"))
   }
 
-  /** Triangle counting + local clustering coefficient on the part
-    * CO-PURCHASE graph (parts sharing an order — the bipartite graph
-    * above is triangle-free by construction, so this derives the
-    * classic one-mode projection market-basket graph instead). A
-    * deterministic md5 order-sample (keep 1/4) bounds the projection
-    * the way a real pipeline bounds a dense co-occurrence graph.
-    *
-    * Algorithm: DEGREE-ORIENTED wedge join (Chiba–Nishizeki / the
-    * standard distributed formulation): orient every undirected edge
-    * from its lower (degree, id) endpoint to the higher; wedges are the
-    * self-join of oriented edges on their source with canonically
-    * ordered tips; a wedge closes iff its tip pair is itself an
-    * oriented edge. Orientation caps out-degree at O(√m) on ANY graph,
-    * so wedge count is Σ outdeg² ≤ m^1.5 — never the Σ deg² of the
-    * naive form where one hub explodes the join. All three hops are
-    * keyed equi-joins (shuffle on node / tip pair); no windows, no
-    * cartesian. Per-node counts credit each triangle to its 3 corners
-    * via a 3-way union + hash-agg. Everything is exact integer work +
-    * one rounded division ⇒ oracle-checked. */
   /** PLAN-CONDITIONAL materialization for shared graph relations
     * (round 16, after two diagnosed sf100 failures): localCheckpoint
     * stores row-oriented blocks ON-HEAP first — at sf100 the
@@ -270,8 +255,7 @@ object Graph {
     * (the GC bomb) AND cap the lineage each consumer re-runs at one
     * parquet scan. On a cluster these ARE the persisted co-purchase /
     * oriented-edge tables a graph pipeline keeps beside the facts.
-    * Honors the same SPARK_GRAFT_GRAPH_CKPT pin as edgesMaterialized
-    * so decade ladders can run one branch at both points. Shared by
+    * The branch is [[checkpointGraph]]'s. Shared by
     * [[graphTriangles]] and [[graphKcore]] (round 18).
     *
     * Gate coverage: the publish mechanism is the one every other store
@@ -280,15 +264,9 @@ object Graph {
     * localCheckpoint side — so bump the kind's `_vN` with any change
     * to the relation it names. */
   private def matGraphRel(spark: SparkSession, dir: String, kind: String)(
-      df: => DataFrame): DataFrame = {
-    val ckpt = sys.env.get("SPARK_GRAFT_GRAPH_CKPT") match {
-      case Some("on")  => true
-      case Some("off") => false
-      case _           => graft.GraftSession.dirBytes(dir) < (4L << 30)
-    }
-    if (ckpt) df.localCheckpoint()
+      df: => DataFrame): DataFrame =
+    if (checkpointGraph(dir)) df.localCheckpoint()
     else read(spark, graft.Caches.once(spark, kind, dir, Seq("lineitem"))(df.write.parquet(_)))
-  }
 
   /** The deterministically order-SAMPLED part co-purchase projection
     * (u < v part pairs sharing an order, 1/4 of orders kept by md5) —
@@ -308,6 +286,25 @@ object Graph {
         .select(col("a.pk").as("u"), col("b.pk").as("v")).distinct())
   }
 
+  /** Triangle counting + local clustering coefficient on the part
+    * CO-PURCHASE graph (parts sharing an order — the bipartite graph
+    * above is triangle-free by construction, so this derives the
+    * classic one-mode projection market-basket graph instead). A
+    * deterministic md5 order-sample (keep 1/4) bounds the projection
+    * the way a real pipeline bounds a dense co-occurrence graph.
+    *
+    * Algorithm: DEGREE-ORIENTED wedge join (Chiba–Nishizeki / the
+    * standard distributed formulation): orient every undirected edge
+    * from its lower (degree, id) endpoint to the higher; wedges are the
+    * self-join of oriented edges on their source with canonically
+    * ordered tips; a wedge closes iff its tip pair is itself an
+    * oriented edge. Orientation caps out-degree at O(√m) on ANY graph,
+    * so wedge count is Σ outdeg² ≤ m^1.5 — never the Σ deg² of the
+    * naive form where one hub explodes the join. All three hops are
+    * keyed equi-joins (shuffle on node / tip pair); no windows, no
+    * cartesian. Per-node counts credit each triangle to its 3 corners
+    * via a 3-way union + hash-agg. Everything is exact integer work +
+    * one rounded division ⇒ oracle-checked. */
   private def graphTriangles(spark: SparkSession, dir: String): DataFrame = {
     def mat(df: => DataFrame, kind: String): DataFrame =
       matGraphRel(spark, dir, kind)(df)

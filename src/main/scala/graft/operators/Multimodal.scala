@@ -784,6 +784,18 @@ object Multimodal {
       .orderBy(col("vec_id"))
   }
 
+  /** Unordered fingerprint core — shared by the standalone query
+    * (which adds the presentation sort) and the pairs join (which must
+    * NOT inherit it: a sort below a self-join drags two full range
+    * exchanges of every fingerprint into the plan for nothing). */
+  private def mmSimhashCore(spark: SparkSession, dir: String): DataFrame = {
+    documents(spark, dir)
+      .select(col("doc_id"), col("text").cast(BinaryType).as("payload"))
+      .select(col("doc_id"), explode(expr("rolling_hash(payload, 4)")).as("h"))
+      .groupBy(col("doc_id"))
+      .agg(expr("simhash_agg(h)").as("simhash"))
+  }
+
   /** Codec-free PERCEPTUAL fingerprint of the binary payload: 64-bit
     * SimHash over the payload's byte-level 4-gram rolling hashes — the
     * near-dup signature for media blobs that exact hashing (dedup_exact
@@ -810,18 +822,6 @@ object Multimodal {
     * never byte shingles. Spark-only hash bits ⇒ no oracle; the
     * pigeonhole recovery guarantee is planted-fixture-tested
     * (InvariantSpec). */
-  /** Unordered fingerprint core — shared by the standalone query
-    * (which adds the presentation sort) and the pairs join (which must
-    * NOT inherit it: a sort below a self-join drags two full range
-    * exchanges of every fingerprint into the plan for nothing). */
-  private def mmSimhashCore(spark: SparkSession, dir: String): DataFrame = {
-    documents(spark, dir)
-      .select(col("doc_id"), col("text").cast(BinaryType).as("payload"))
-      .select(col("doc_id"), explode(expr("rolling_hash(payload, 4)")).as("h"))
-      .groupBy(col("doc_id"))
-      .agg(expr("simhash_agg(h)").as("simhash"))
-  }
-
   private def mmSimhash(spark: SparkSession, dir: String): DataFrame =
     mmSimhashCore(spark, dir).orderBy(col("doc_id"))
 
@@ -941,6 +941,26 @@ object Multimodal {
     bos.toByteArray
   }
 
+  /** The deterministic media corpus behind [[mmPhashPairs]], factored
+    * out (round 17) so the streaming twin's parity spec feeds the
+    * IDENTICAL payload stream: text bytes rendered to PNG, every 97th
+    * doc planting a brightness-shifted BMP re-encode (doc_id + 10⁹). */
+  private[graft] def phashMedia(spark: SparkSession, dir: String): Dataset[MediaRow] = {
+    import spark.implicits._
+    documents(spark, dir)
+      .select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions { rows =>
+        rows.flatMap { case (id, text) =>
+          val bytes = Option(text).getOrElse("").getBytes("UTF-8")
+          val base = MediaRow(id, encodeImage(renderTile(bytes), "png"))
+          if (id % 97 == 0)
+            Seq(base, MediaRow(id + 1000000000L,
+              encodeImage(renderTile(bytes, shift = 16), "bmp")))
+          else Seq(base)
+        }
+      }
+  }
+
   /** Perceptual near-dup PAIRS over the REAL image path (round 16,
     * r15 VERDICT task 4) — the corpus-scale pairing [[phashImages]]'
     * scaladoc promised: payloads → pHash → the SAME signature-level
@@ -962,26 +982,6 @@ object Multimodal {
     * measured α 0.07 at decade 3 on that family. The DCT is float ⇒
     * no_oracle by design (the simhash precedent); the banding stage is
     * the oracle-checked machinery it shares with mm_simhash_pairs. */
-  /** The deterministic media corpus behind [[mmPhashPairs]], factored
-    * out (round 17) so the streaming twin's parity spec feeds the
-    * IDENTICAL payload stream: text bytes rendered to PNG, every 97th
-    * doc planting a brightness-shifted BMP re-encode (doc_id + 10⁹). */
-  private[graft] def phashMedia(spark: SparkSession, dir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    documents(spark, dir)
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, text) =>
-          val bytes = Option(text).getOrElse("").getBytes("UTF-8")
-          val base = MediaRow(id, encodeImage(renderTile(bytes), "png"))
-          if (id % 97 == 0)
-            Seq(base, MediaRow(id + 1000000000L,
-              encodeImage(renderTile(bytes, shift = 16), "bmp")))
-          else Seq(base)
-        }
-      }
-  }
-
   private def mmPhashPairs(spark: SparkSession, dir: String): DataFrame = {
     val media = phashMedia(spark, dir)
     // materialized for the five references inside the banding join —

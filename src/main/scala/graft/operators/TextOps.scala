@@ -874,6 +874,13 @@ object TextOps {
       .orderBy(col("bin"))
   }
 
+  /** The greenlist membership bit for one adjacent-token pair — shared
+    * by [[textWatermarkDetect]] and PipelineSpec's "screen" verb so the
+    * declarative pipeline screen and the audit query key identically. */
+  private[graft] def isGreenPair(b: Column): Column =
+    conv(substring(md5(concat(lit("wm:"), b)), 1, 4), 16, 10)
+      .cast(LongType) % 2 === 0
+
   /** Statistical watermark detection (Kirchenbauer-style greenlist
     * test) — the provenance screen a training-data pipeline runs to
     * keep synthetic text out of a human-text corpus: a watermarking
@@ -891,13 +898,6 @@ object TextOps {
     * Scale: completely stateless per row — the pair walk is an array
     * fold (filter+size) inside codegen, no explode, no shuffle; the
     * only shuffle is the output sort. */
-  /** The greenlist membership bit for one adjacent-token pair — shared
-    * by [[textWatermarkDetect]] and PipelineSpec's "screen" verb so the
-    * declarative pipeline screen and the audit query key identically. */
-  private[graft] def isGreenPair(b: Column): Column =
-    conv(substring(md5(concat(lit("wm:"), b)), 1, 4), 16, 10)
-      .cast(LongType) % 2 === 0
-
   private def textWatermarkDetect(spark: SparkSession, dir: String): DataFrame = {
     val bg = transform(sequence(lit(1), size(col("tk")) - 1),
       i => concat_ws(" ", slice(col("tk"), i, lit(2))))
@@ -1020,15 +1020,14 @@ object TextOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Oracle re-derivation of the perceptron trajectory: featurize +
-    * teacher labels, then one (margin → misclassified-update → new
-    * weights) CTE block per training step. All-BIGINT, so the chain is
-    * bit-exact regardless of either engine's aggregation order. */
-  /** DuckDB mirror of [[fitClassifier]]'s sequential fold: ONE
-    * recursive CTE whose working row is (step, w) with w the 64-weight
-    * vector as a BIGINT list — step s processes sample doc (s mod n)+1
-    * in the same (md5(doc_id), doc_id) order, updating w iff the doc
-    * is misclassified. The margin via list_inner_product is computed
+  /** DuckDB mirror of [[fitClassifier]]'s sequential fold — the oracle
+    * re-derivation of the perceptron trajectory: featurize + teacher
+    * labels, then ONE recursive CTE whose working row is (step, w)
+    * with w the 64-weight vector as a BIGINT list — step s processes
+    * sample doc (s mod n)+1 in the same (md5(doc_id), doc_id) order,
+    * updating w iff the doc is misclassified. All-BIGINT, so the chain
+    * is bit-exact regardless of either engine's aggregation order. The
+    * margin via list_inner_product is computed
     * in doubles but every value is an exact small integer (< 2^53), so
     * the <= 0 test is exact. MATERIALIZED hints stop DuckDB from
     * re-tokenizing the corpus on every recursive step. The 20 / 500
@@ -1980,22 +1979,6 @@ object TextOps {
         |ORDER BY c.doc_a, c.doc_b""".stripMargin), textWinnowingVerified)
   )
 
-  /** WINNOWING fingerprints (Schleimer–Wilkerson–Aiken, the MOSS
-    * algorithm): hash every k-gram (k=5), then keep the MINIMUM hash
-    * of each w-length window (w=4) of consecutive k-gram positions —
-    * the classic guarantee is that any shared token run of length
-    * ≥ w+k−1 between two documents shares at least one fingerprint,
-    * while storage drops to ~2/(w+1) of the k-gram count. This is the
-    * position-robust fingerprint selection plagiarism/overlap
-    * detection uses where full k-gram inventories (dedup_span_ngrams)
-    * are too big to keep. md5 hashing keeps the selection
-    * bit-reproducible, so the per-doc manifest is oracle-checked.
-    *
-    * Scale: explode is linear in corpus tokens; the window min is a
-    * doc-partitioned frame (ROWS w−1 FOLLOWING) on the same doc-keyed
-    * shuffle as the position sort; fingerprints then hash-agg per doc
-    * map-side. Cross-doc matching joins fingerprint sets exactly like
-    * the span/shingle indexes — never pairwise text. */
   /** Curriculum-learning phase assignment: quantized difficulty
     * (mean word length, r2-bucketed) → exact quartile boundaries →
     * phase 1..4, easiest first — the "order training data easy→hard"
@@ -2063,6 +2046,22 @@ object TextOps {
       .filter(col("pos") <= col("n_kgrams") - winnowW)
   }
 
+  /** WINNOWING fingerprints (Schleimer–Wilkerson–Aiken, the MOSS
+    * algorithm): hash every k-gram (k=5), then keep the MINIMUM hash
+    * of each w-length window (w=4) of consecutive k-gram positions —
+    * the classic guarantee is that any shared token run of length
+    * ≥ w+k−1 between two documents shares at least one fingerprint,
+    * while storage drops to ~2/(w+1) of the k-gram count. This is the
+    * position-robust fingerprint selection plagiarism/overlap
+    * detection uses where full k-gram inventories (dedup_span_ngrams)
+    * are too big to keep. md5 hashing keeps the selection
+    * bit-reproducible, so the per-doc manifest is oracle-checked.
+    *
+    * Scale: explode is linear in corpus tokens; the window min is a
+    * doc-partitioned frame (ROWS w−1 FOLLOWING) on the same doc-keyed
+    * shuffle as the position sort; fingerprints then hash-agg per doc
+    * map-side. Cross-doc matching joins fingerprint sets exactly like
+    * the span/shingle indexes — never pairwise text. */
   private def textWinnowing(spark: SparkSession, dir: String): DataFrame =
     winnowSelections(spark, dir)
       .groupBy(col("doc_id"))

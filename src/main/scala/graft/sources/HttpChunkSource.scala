@@ -45,6 +45,14 @@ object HttpChunkSource {
     StructField("end", LongType, nullable = false),
     StructField("content", BinaryType, nullable = false)))
 
+  /** The default range size: CHUNK_SIZE, http.rs:14. */
+  val DefaultChunkBytes: Long = 100L * 1024 * 1024
+
+  /** The inclusive byte ranges (start, end) that split `totalBytes`
+    * into `chunkBytes` pieces, the last one short. */
+  def ranges(totalBytes: Long, chunkBytes: Long): Seq[(Long, Long)] =
+    (0L until totalBytes by chunkBytes).map(s => (s, math.min(s + chunkBytes, totalBytes) - 1))
+
   /** (url, startByte, endByte) => bytes. Registry keyed by the
     * `fetcher` option; executors resolve lazily (registration must
     * happen on each JVM — trivially true in local mode and in tests). */
@@ -72,7 +80,7 @@ private class HttpChunkTable(options: CaseInsensitiveStringMap)
       options.get("url"),
       options.get("totalBytes").toLong,
       Option(options.get("chunkBytes")).map(_.toLong)
-        .getOrElse(100L * 1024 * 1024), // CHUNK_SIZE, http.rs:14
+        .getOrElse(HttpChunkSource.DefaultChunkBytes),
       Option(options.get("fetcher")).getOrElse("http"))
 }
 
@@ -85,10 +93,8 @@ private class HttpChunkScan(url: String, totalBytes: Long, chunkBytes: Long,
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] =
-    (0L until totalBytes by chunkBytes).map { s =>
-      HttpChunkRange(url, s, math.min(s + chunkBytes, totalBytes) - 1, fetcher)
-        : InputPartition
-    }.toArray
+    HttpChunkSource.ranges(totalBytes, chunkBytes)
+      .map { case (s, e) => HttpChunkRange(url, s, e, fetcher): InputPartition }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     (partition: InputPartition) => new PartitionReader[InternalRow] {

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
 import scala.collection.mutable
 
@@ -234,17 +234,51 @@ object StreamingOps {
       .toDF("event_type", "items", "counts")
   }
 
-  /** Idempotent micro-batch parquet sink via foreachBatch: each batch
-    * lands in an epoch-addressed subdirectory, so a replayed batch (the
-    * at-least-once failure mode) OVERWRITES its own previous attempt
-    * instead of appending duplicates — exactly-once at the directory
-    * level without a transactional table format. `foreachBatch` is also
-    * the escape hatch for sinks Structured Streaming lacks natively
-    * (JDBC, the graft Sink registry). */
-  def sinkEpochParquet(df: DataFrame, outDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-      batch.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
+  /** The one epoch-addressed ingest path: [[sinkEpochParquet]] and
+    * every ingest twin are a `body` run by this `foreachBatch`. Per
+    * micro-batch N, in order: snapshot the persistent-RDD set; read
+    * the index history once — the `indexDir` epochs STRICTLY EARLIER
+    * than N ([[historyEpochs]]), None when there are none or no index;
+    * `body(batch, history)` returns the verdicts and the epoch's index
+    * contribution; overwrite `outDir/epoch=N`, then `indexDir/epoch=N`
+    * (outputs before index); then — after both writes, and on any
+    * failure — unpersist every RDD persisted during the epoch.
+    *
+    * A replayed batch (the at-least-once failure mode) overwrites its
+    * own previous attempt instead of appending duplicates: exactly-once
+    * at the directory level without a transactional table format.
+    * The release diffs the persistent-RDD set, so it covers ANY RDD
+    * persisted on the same SparkContext while the epoch runs — the
+    * body's `localCheckpoint()`s, which a long-running stream makes
+    * afresh every micro-batch (accumulated, they are the round-13
+    * Bench leak class, 8× inflation), and a concurrent caller's
+    * persists alike — while caches that predate the epoch are kept. */
+  private[graft] def epochIngest(src: DataFrame, outDir: String, indexDir: Option[String])(
+      body: (DataFrame, Option[DataFrame]) => (DataFrame, Option[DataFrame]))
+      : DataStreamWriter[Row] =
+    src.writeStream.foreachBatch { (batch: Dataset[Row], epochId: Long) =>
+      val spark = batch.sparkSession
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      def at(dir: String) = s"$dir/epoch=$epochId"
+      try {
+        val hist = indexDir.map(historyEpochs(spark, _, epochId)).filter(_.nonEmpty)
+          .map(ps => graft.Tables.read(spark, ps: _*))
+        val (out, index) = body(batch, hist)
+        out.write.mode("overwrite").parquet(at(outDir))
+        for (dir <- indexDir; df <- index) df.write.mode("overwrite").parquet(at(dir))
+      } finally
+        sc.getPersistentRDDs.foreach { case (id, r) =>
+          if (!before(id)) r.unpersist(blocking = false)
+        }
     }
+
+  /** Idempotent micro-batch parquet sink: each batch lands in its own
+    * epoch-addressed subdirectory ([[epochIngest]]). `foreachBatch` is
+    * also the escape hatch for sinks Structured Streaming lacks
+    * natively (JDBC, the graft Sink registry). */
+  def sinkEpochParquet(df: DataFrame, outDir: String): DataStreamWriter[Row] =
+    epochIngest(df, outDir, None)((batch, _) => (batch, None))
 
   /** CONTINUOUS near-dedup ingest — the streaming form of
     * `dedup_incremental` (operators/Dedup.scala), i.e. the shape a
@@ -276,16 +310,13 @@ object StreamingOps {
     * like any ingest table (`scale_compaction`).
     */
   def dedupIngest(docs: DataFrame, indexDir: String, outDir: String,
-      threshold: Double = 0.5): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-      val spark = batch.sparkSession
-      val stable = batch.toDF().localCheckpoint()
+      threshold: Double = 0.5): DataStreamWriter[Row] =
+    epochIngest(docs, outDir, Some(indexDir)) { (batch, hist) =>
+      val stable = batch.localCheckpoint()
       val bands = graft.operators.Dedup.bandsOf(
         graft.operators.Dedup.signatureOf(stable)).localCheckpoint()
-      val histEpochs = historyEpochs(spark, indexDir, epochId)
-      val vsHist = if (histEpochs.isEmpty) None else Some {
-        val hist = graft.Tables.read(spark, histEpochs.toIndexedSeq: _*)
-        bands.as("n").join(hist.as("h"),
+      val vsHist = hist.map { h =>
+        bands.as("n").join(h.as("h"),
             col("n.band_idx") === col("h.band_idx") && col("n.band") === col("h.band"))
           .select(col("h.doc_id").as("doc_a"), col("n.doc_id").as("doc_b"),
             lit("history").as("origin"), lit(false).as("verified"),
@@ -296,9 +327,7 @@ object StreamingOps {
       val vsBatch = graft.operators.Dedup.verifiedPairsOf(stable, threshold)
         .select(col("doc_a"), col("doc_b"), lit("batch").as("origin"),
           lit(true).as("verified"), col("jac"))
-      vsHist.map(_.unionByName(vsBatch)).getOrElse(vsBatch)
-        .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-      bands.write.mode("overwrite").parquet(s"$indexDir/epoch=$epochId")
+      (vsHist.map(_.unionByName(vsBatch)).getOrElse(vsBatch), Some(bands))
     }
 
   /** CONTAINMENT-SCREEN-ON-INGEST — the streaming twin of the batch
@@ -343,13 +372,12 @@ object StreamingOps {
     * the batch op's exact schema; union over an id-ordered replay's
     * epochs equals the batch output exactly (StreamBatchParitySpec). */
   def containmentIngest(docs: DataFrame, indexDir: String, outDir: String,
-      threshold: Double = 0.8): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
+      threshold: Double = 0.8): DataStreamWriter[Row] =
+    epochIngest(docs, outDir, Some(indexDir)) { (batch, hist) =>
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.types.{DoubleType, LongType}
-      val spark = batch.sparkSession
       val t = threshold
-      val stable = batch.toDF().localCheckpoint()
+      val stable = batch.localCheckpoint()
       val wDoc = Window.partitionBy(col("doc_id"))
       val wOrd = Window.partitionBy(col("doc_id")).orderBy(col("tk"))
       val cur = graft.operators.Dedup.shingleRows(stable)
@@ -358,9 +386,6 @@ object StreamingOps {
         .withColumn("pref",
           col("rn") <= col("n") - ceil(lit(t) * col("n")) + lit(2))
         .localCheckpoint() // consumed by 2 probes + verify + index sink
-      val histEpochs = historyEpochs(spark, indexDir, epochId)
-      val hist = if (histEpochs.isEmpty) None
-        else Some(graft.Tables.read(spark, histEpochs.toIndexedSeq: _*))
 
       // the batch op's candidate stage, parameterized by which side
       // is the probing SUBSET — identical prunes, identical columns
@@ -393,7 +418,7 @@ object StreamingOps {
         .groupBy(col("doc_id"))
         .agg(collect_set(col("tk")).as("set"), max(col("n")).as("n"))
       val cont = col("inter_size").cast(DoubleType) / col("na").cast(DoubleType)
-      cand
+      val verdicts = cand
         .join(sets.select(col("doc_id").as("doc_sub"), col("set").as("sa"),
           col("n").as("na")), "doc_sub")
         .join(sets.select(col("doc_id").as("doc_sup"), col("set").as("sb")), "doc_sup")
@@ -402,8 +427,7 @@ object StreamingOps {
         .filter(cont >= t)
         .select(col("doc_sub"), col("doc_sup"), col("inter_size"),
           cont.as("containment"))
-        .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-      cur.write.mode("overwrite").parquet(s"$indexDir/epoch=$epochId")
+      (verdicts, Some(cur))
     }
 
   /** Semantic-dedup-on-ingest — the streaming twin of
@@ -416,11 +440,9 @@ object StreamingOps {
     * EVERY ingested vector, not only kept ones — the batch rule drops
     * against any lower-id neighbor regardless of that neighbor's own
     * verdict, so parity demands the identical comparison set. Both
-    * the verdict stream and the index contribution are
-    * epoch-addressed (a replayed batch overwrites, never
-    * double-inserts — the [[sinkEpochParquet]] exactly-once
-    * discipline). With id-ordered arrival the verdict stream equals
-    * the batch `dedup_semantic` output EXACTLY
+    * outputs are epoch-addressed ([[epochIngest]]: a replayed batch
+    * overwrites, never double-inserts). With id-ordered arrival the
+    * verdict stream equals the batch `dedup_semantic` output EXACTLY
     * (StreamBatchParitySpec); out-of-order arrival degrades
     * gracefully to "first-seen wins", the honest streaming semantics.
     *
@@ -429,47 +451,42 @@ object StreamingOps {
     * over ingestion; the model is k×dim literals, no driver state. */
   def semanticDedupIngest(vecs: DataFrame, cents: Seq[(Long, Seq[Double])],
       indexDir: String, outDir: String, tau: Double = 0.375):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
+      DataStreamWriter[Row] =
+    epochIngest(vecs, outDir, Some(indexDir)) { (batch, hist) =>
       import graft.operators.Similarity.{assign, dotLambda, unkeyed}
-      val cur = assign(embeddingVecs(batch.toDF()), unkeyed(cents))
+      val cur = assign(embeddingVecs(batch), unkeyed(cents))
         .select(col("vec_id"), col("e"), col("cid").as("cell"))
         .withColumn("nrm", sqrt(dotLambda(col("e"), col("e"))))
         .localCheckpoint()
-      cellVerdictTail(cur, indexDir, outDir, epochId, tau)
+      cellVerdictTail(cur, hist, tau)
     }
 
-  /** Shared cell-keyed compare/keep/index tail of the semantic ingest
-    * twins: `cur` is the routed micro-batch (vec_id, e, cell, nrm),
-    * already localCheckpoint()ed. Compares against persisted
-    * cell-mates + lower-id batch-mates, writes the epoch-addressed
-    * verdicts and the epoch's index contribution. */
-  private def cellVerdictTail(cur: DataFrame, indexDir: String,
-      outDir: String, epochId: Long, tau: Double): Unit = {
+  /** Shared cell-keyed compare/keep tail of the semantic ingest twins:
+    * `cur` is the routed micro-batch (vec_id, e, cell, nrm), already
+    * localCheckpoint()ed, and `hist` the persisted cell-mates of
+    * earlier epochs. Compares against those + lower-id batch-mates and
+    * returns the verdicts and the epoch's index contribution. */
+  private def cellVerdictTail(cur: DataFrame, hist: Option[DataFrame],
+      tau: Double): (DataFrame, Option[DataFrame]) = {
     import graft.operators.Similarity.dotLambda
-    val spark = cur.sparkSession
-    val histEpochs = historyEpochs(spark, indexDir, epochId)
     def cs(a: String, b: String) =
       graft.Parity.r6(dotLambda(col(s"$a.e"), col(s"$b.e")) /
         (col(s"$a.nrm") * col(s"$b.nrm")))
     val vsBatch = cur.as("a").join(cur.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(col("b.vec_id").as("bid"), cs("a", "b").as("cs"))
-    val cands = if (histEpochs.isEmpty) vsBatch else {
-      val hist = graft.Tables.read(spark, histEpochs.toIndexedSeq: _*)
+    val cands = hist.fold(vsBatch) { h =>
       vsBatch.unionByName(
-        cur.as("n").join(hist.as("h"),
+        cur.as("n").join(h.as("h"),
             col("n.cell") === col("h.cell") && col("h.vec_id") < col("n.vec_id"))
           .select(col("n.vec_id").as("bid"), cs("h", "n").as("cs")))
     }
     val nn = cands.groupBy(col("bid")).agg(max(col("cs")).as("nn_sim"))
-    cur.select(col("vec_id"), col("cell"))
+    val verdicts = cur.select(col("vec_id"), col("cell"))
       .join(nn, col("vec_id") === col("bid"), "left")
       .select(col("vec_id"), col("cell"), col("nn_sim"),
         (col("nn_sim").isNull || col("nn_sim") < tau).as("keep"))
-      .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-    cur.select(col("vec_id"), col("e"), col("cell"), col("nrm"))
-      .write.mode("overwrite").parquet(s"$indexDir/epoch=$epochId")
+    (verdicts, Some(cur.select(col("vec_id"), col("e"), col("cell"), col("nrm"))))
   }
 
   /** Hierarchical semantic-dedup-on-ingest — the streaming twin of
@@ -502,19 +519,19 @@ object StreamingOps {
       supers: Seq[(Long, Seq[Double])],
       members: Seq[(Long, Long, Seq[Double])], m: Int,
       indexDir: String, outDir: String, tau: Double = 0.375):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      DataStreamWriter[Row] = {
     require(supers.nonEmpty && members.nonEmpty,
       "semanticDedupCoarseIngest needs a trained model: supers and members must be non-empty")
-    vecs.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
+    epochIngest(vecs, outDir, Some(indexDir)) { (batch, hist) =>
       import graft.operators.Similarity.{assign, dotLambda, unkeyed}
-      val routed = assign(embeddingVecs(batch.toDF()), unkeyed(supers))
+      val routed = assign(embeddingVecs(batch), unkeyed(supers))
         .select(col("vec_id"), col("e"), col("cid").as("sid"))
       val cur = assign(routed, members, Some("sid"))
         .select(col("vec_id"), col("e"),
           (col("sid") * lit(m.toLong) + col("cid")).as("cell"))
         .withColumn("nrm", sqrt(dotLambda(col("e"), col("e"))))
         .localCheckpoint()
-      cellVerdictTail(cur, indexDir, outDir, epochId, tau)
+      cellVerdictTail(cur, hist, tau)
     }
   }
 
@@ -589,26 +606,12 @@ object StreamingOps {
     * set exactly (StreamBatchParitySpec). Epoch-addressed overwrite ⇒
     * at-least-once replay safe. */
   def rerankFuseIngest(queries: DataFrame, dir: String,
-      outDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    queries.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
-      val spark = batch.sparkSession
-      // The checkpoint is load-bearing (ids feeds `short`, which the
-      // fusion plan references twice) but its blocks must not outlive
-      // the epoch: accumulated localCheckpoint garbage is the round-13
-      // Bench leak class (8× inflation), and a long-running stream
-      // re-materializes a fresh one every micro-batch. Diff the
-      // persistent-RDD set rather than unpersisting everything — a
-      // concurrent batch query's caches are not ours to drop.
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val ids = batch.toDF().select(col("qid")).distinct().localCheckpoint()
-      try
-        graft.operators.Similarity.rerankFuseForIds(spark, dir, ids)
-          .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-      finally
-        sc.getPersistentRDDs.foreach { case (id, r) =>
-          if (!before(id)) r.unpersist(blocking = false)
-        }
+      outDir: String): DataStreamWriter[Row] =
+    epochIngest(queries, outDir, None) { (batch, _) =>
+      // load-bearing: ids feeds `short`, which the fusion plan
+      // references twice; released with the epoch
+      val ids = batch.select(col("qid")).distinct().localCheckpoint()
+      (graft.operators.Similarity.rerankFuseForIds(batch.sparkSession, dir, ids), None)
     }
 
   /** Perceptual near-dup pairing on ingest — the streaming twin of
@@ -645,63 +648,51 @@ object StreamingOps {
     * replay's epochs equals the batch `mm_phash_pairs` pair set
     * exactly (StreamBatchParitySpec). */
   def phashPairsIngest(media: DataFrame, indexDir: String, outDir: String,
-      ball: Int = 3): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      ball: Int = 3): DataStreamWriter[Row] = {
     require(ball <= 3, s"4x16-bit bands only guarantee recall for ball <= 3, got $ball")
-    media.writeStream.foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epochId: Long) =>
+    epochIngest(media, outDir, Some(indexDir)) { (batch, hist) =>
       import org.apache.spark.sql.types.LongType
       val spark = batch.sparkSession
       import spark.implicits._
-      val sc0 = spark.sparkContext
-      val before = sc0.getPersistentRDDs.keySet
-      try {
-        // one decode pass per batch; checkpointed — the signature
-        // relation feeds the band probe, both expansions, the same-sig
-        // tier, and the index sink
-        val cur = graft.operators.Multimodal
-          .phashImages(batch.toDF()
-            .select(col("doc_id"), col("payload"))
-            .as[graft.operators.Multimodal.MediaRow])
-          .filter(col("ok"))
-          .select(col("doc_id"), col("phash").as("simhash"))
-          .toDF().localCheckpoint()
-        val histEpochs = historyEpochs(spark, indexDir, epochId)
-        val hist = if (histEpochs.isEmpty) None
-          else Some(graft.Tables.read(spark, histEpochs.toIndexedSeq: _*))
-        val all = hist.map(cur.unionByName(_)).getOrElse(cur)
-        def blocks(s: DataFrame): DataFrame = s.select(col("simhash")).distinct()
-          .select(col("simhash"),
-            posexplode(array((0 until 4).map(b =>
-              shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(lit(0xffffL))): _*))
-              .as(Seq("block_idx", "block")))
-        val sigPairs = blocks(cur).as("a").join(blocks(all).as("b"),
-            col("a.block_idx") === col("b.block_idx") &&
-              col("a.block") === col("b.block") &&
-              col("a.simhash") =!= col("b.simhash"))
-          .select(col("a.simhash").as("sc"), col("b.simhash").as("so"))
-          .filter(bit_count(col("sc").bitwiseXOR(col("so"))) <= ball)
-          .distinct()
-        val cross = sigPairs
-          .join(cur.as("dc"), col("sc") === col("dc.simhash"))
-          .join(all.as("dd"), col("so") === col("dd.simhash"))
-          .select(
-            least(col("dc.doc_id"), col("dd.doc_id")).as("doc_a"),
-            greatest(col("dc.doc_id"), col("dd.doc_id")).as("doc_b"),
-            bit_count(col("sc").bitwiseXOR(col("so"))).cast(LongType).as("hamming"))
-          .distinct()
-        val same = cur.as("x").join(all.as("y"),
-            col("x.simhash") === col("y.simhash") &&
-              col("x.doc_id") =!= col("y.doc_id"))
-          .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
-            greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"),
-            lit(0L).as("hamming"))
-          .distinct()
-        cross.unionByName(same)
-          .write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
-        cur.write.mode("overwrite").parquet(s"$indexDir/epoch=$epochId")
-      } finally
-        sc0.getPersistentRDDs.foreach { case (id, r) =>
-          if (!before(id)) r.unpersist(blocking = false)
-        }
+      // one decode pass per batch; checkpointed — the signature
+      // relation feeds the band probe, both expansions, the same-sig
+      // tier, and the index sink
+      val cur = graft.operators.Multimodal
+        .phashImages(batch
+          .select(col("doc_id"), col("payload"))
+          .as[graft.operators.Multimodal.MediaRow])
+        .filter(col("ok"))
+        .select(col("doc_id"), col("phash").as("simhash"))
+        .toDF().localCheckpoint()
+      val all = hist.map(cur.unionByName(_)).getOrElse(cur)
+      def blocks(s: DataFrame): DataFrame = s.select(col("simhash")).distinct()
+        .select(col("simhash"),
+          posexplode(array((0 until 4).map(b =>
+            shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(lit(0xffffL))): _*))
+            .as(Seq("block_idx", "block")))
+      val sigPairs = blocks(cur).as("a").join(blocks(all).as("b"),
+          col("a.block_idx") === col("b.block_idx") &&
+            col("a.block") === col("b.block") &&
+            col("a.simhash") =!= col("b.simhash"))
+        .select(col("a.simhash").as("sc"), col("b.simhash").as("so"))
+        .filter(bit_count(col("sc").bitwiseXOR(col("so"))) <= ball)
+        .distinct()
+      val cross = sigPairs
+        .join(cur.as("dc"), col("sc") === col("dc.simhash"))
+        .join(all.as("dd"), col("so") === col("dd.simhash"))
+        .select(
+          least(col("dc.doc_id"), col("dd.doc_id")).as("doc_a"),
+          greatest(col("dc.doc_id"), col("dd.doc_id")).as("doc_b"),
+          bit_count(col("sc").bitwiseXOR(col("so"))).cast(LongType).as("hamming"))
+        .distinct()
+      val same = cur.as("x").join(all.as("y"),
+          col("x.simhash") === col("y.simhash") &&
+            col("x.doc_id") =!= col("y.doc_id"))
+        .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
+          greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"),
+          lit(0L).as("hamming"))
+        .distinct()
+      (cross.unionByName(same), Some(cur))
     }
   }
 

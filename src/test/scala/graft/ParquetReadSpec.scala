@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * inferred once, later reads of the unchanged files start no Spark
   * job and analyze to the same plan as a plain read, and a changed
   * file set or reader conf is never served a stale schema. Its source
-  * scan also pins the one store publish path, [[Caches.once]]. */
+  * scans also pin the one store publish path, [[Caches.once]], and the
+  * one epoch ingest path, `StreamingOps.epochIngest`. */
 class ParquetReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -24,6 +25,21 @@ class ParquetReadSpec extends AnyFunSuite {
 
   private def analyzed(df: DataFrame): String =
     PlanShapes.normalize(df.queryExecution.analyzed.toString)
+
+  /** (path under src/main/scala, contents) of every main source file. */
+  private lazy val sources: Seq[(String, String)] = {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    files(root).filter(_.getName.endsWith(".scala")).map { f =>
+      root.toPath.relativize(f.toPath).toString ->
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    }
+  }
+
+  private def hits(re: scala.util.matching.Regex): Seq[String] =
+    sources.flatMap { case (name, src) => re.findAllIn(src).map(m => s"$name: $m").toSeq }
 
   test("a second read of an unchanged table starts no Spark job and plans like a plain read") {
     for (name <- Tables.names) {
@@ -95,19 +111,27 @@ class ParquetReadSpec extends AnyFunSuite {
     val parquetRead = """\.read(\s*\.\w+\([^()]*\))*\s*\.parquet\(""".r
     // the idioms of hand-rolled publishing that Caches.once replaces
     val publish = """renameTo\(|"_SUCCESS"|"_DONE"|createTempFile|BuildLock""".r
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
-    def files(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val sources = files(root).filter(_.getName.endsWith(".scala")).map { f =>
-      root.toPath.relativize(f.toPath).toString ->
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    }
-    def hits(re: scala.util.matching.Regex): Seq[String] =
-      sources.flatMap { case (name, src) => re.findAllIn(src).map(m => s"$name: $m").toSeq }
     // the helper's inferring read and its declared-schema read
     assert(hits(parquetRead).map(_.takeWhile(_ != ':')).sorted ==
       Seq("graft/Tables.scala", "graft/Tables.scala"), hits(parquetRead))
     assert(hits(publish).filterNot(_.startsWith("graft/Caches.scala:")).isEmpty, hits(publish))
+  }
+
+  test("src/main has one epoch ingest path and no scaladoc block stacked on another") {
+    // StreamingOps.epochIngest is the only foreachBatch, the only
+    // history read and the only checkpoint-release diff
+    val ingest = Seq("graft/streaming/StreamingOps.scala")
+    for (re <- Seq("""\.foreachBatch\b""".r, """(?<!def )\bhistoryEpochs\(""".r))
+      assert(hits(re).map(_.takeWhile(_ != ':')) == ingest, hits(re))
+    val release = hits("""getPersistentRDDs""".r).filter(_.startsWith(ingest.head))
+    assert(release.size == 2, release)
+    // a `/**` right after a `*/` documents nothing: the first block is orphaned
+    val stacked = sources.flatMap { case (name, src) =>
+      src.linesIterator.sliding(2).zipWithIndex.collect {
+        case (Seq(a, b), i) if a.trim.endsWith("*/") && b.trim.startsWith("/**") =>
+          s"$name:${i + 2}"
+      }
+    }
+    assert(stacked.isEmpty, s"scaladoc blocks stacked on another: $stacked")
   }
 }

@@ -895,4 +895,77 @@ class StreamBatchParitySpec extends AnyFunSuite {
     // previously-published epochs
     assert(names(3L) == Set("epoch=0", "epoch=1", "epoch=2"))
   }
+
+  test("ingest twins release every RDD they persist during the stream") {
+    // Each epoch's localCheckpoints are released by the epoch ingest
+    // path once both outputs are written: a long-running stream must
+    // not accumulate checkpoint blocks until a driver GC happens to
+    // let the ContextCleaner collect them.
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sc = spark2.sqlContext
+    val ctx = spark2.sparkContext
+    val base = s"${System.getProperty("java.io.tmpdir")}/" +
+      s"graft_stream_release_${System.nanoTime()}"
+    val docs = Tables.documents(spark2, TestSpark.sf)
+      .select(col("doc_id"), col("text")).collect()
+      .map(r => DocRow(r.getLong(0), r.getString(1))).sortBy(_.doc_id).take(60).toSeq
+    val vecs = Tables.embeddings(spark2, TestSpark.sf)
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => VecRow(r.getLong(0), r.getSeq[Float](1).toSeq))
+      .sortBy(_.vec_id).take(60).toSeq
+    val cents = vecs.take(4).zipWithIndex
+      .map { case (v, i) => (i.toLong, v.embedding.map(_.toDouble)) }
+    val before = ctx.getPersistentRDDs.keySet
+    def twoEpochs[T: org.apache.spark.sql.Encoder](name: String, rows: Seq[T])(
+        twin: (org.apache.spark.sql.DataFrame, String, String) =>
+          org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]): Unit = {
+      val ms = MemoryStream[T]
+      val q = twin(ms.toDF(), s"$base/$name/idx", s"$base/$name/out")
+        .option("checkpointLocation", s"$base/$name/ckpt").start()
+      val (a, b) = rows.splitAt(rows.size / 2)
+      Seq(a, b).foreach { chunk => ms.addData(chunk: _*); q.processAllAvailable() }
+      q.stop()
+      val epochs = new java.io.File(s"$base/$name/idx").listFiles()
+        .count(_.getName.startsWith("epoch="))
+      assert(epochs == 2, s"$name wrote $epochs index epochs, expected 2")
+    }
+    twoEpochs("dedup", docs)(StreamingOps.dedupIngest(_, _, _))
+    twoEpochs("containment", docs)(StreamingOps.containmentIngest(_, _, _))
+    twoEpochs("semantic", vecs)(StreamingOps.semanticDedupIngest(_, cents, _, _))
+    val left = ctx.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"RDDs persisted during the stream are still persisted: $left")
+  }
+
+  test("a failing epoch body propagates, releases its checkpoint and writes no epoch") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sc = spark2.sqlContext
+    val ctx = spark2.sparkContext
+    val base = s"${System.getProperty("java.io.tmpdir")}/" +
+      s"graft_stream_fail_${System.nanoTime()}"
+    val before = ctx.getPersistentRDDs.keySet
+    val persisted = new java.util.concurrent.atomic.AtomicReference(Set.empty[Int])
+    val ms = MemoryStream[DocRow]
+    val q = StreamingOps.epochIngest(ms.toDF(), s"$base/out", Some(s"$base/idx")) { (batch, _) =>
+      batch.localCheckpoint()
+      persisted.set((ctx.getPersistentRDDs.keySet -- before).toSet)
+      throw new IllegalStateException("injected body failure")
+    }.option("checkpointLocation", s"$base/ckpt").start()
+    ms.addData(DocRow(1L, "a b c"), DocRow(2L, "d e f"))
+    val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.processAllAvailable()
+    }
+    q.stop()
+    assert(Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains("injected body failure"))),
+      s"query failed for the wrong reason: $failed")
+    assert(persisted.get.nonEmpty, "the body's checkpoint was never persisted")
+    val left = ctx.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"the failed epoch's checkpoint is still persisted: $left")
+    Seq("out", "idx").foreach { d =>
+      val f = new java.io.File(s"$base/$d")
+      assert(!f.exists || !f.list().exists(_.startsWith("epoch=")), s"$d has an epoch dir")
+    }
+  }
 }
