@@ -108,9 +108,11 @@ object Bench {
     * timed runs, negative where a run failed; `compiles` and `classes`
     * are the whole-stage-codegen compile and generated-class deltas of
     * the throwaway followed by each timed run; `error` is the cause of
-    * the first failed timed run. */
+    * the first failed timed run; `branches` are the [[Materialize]]
+    * decisions its builds took, `site:small|large` sorted by site. */
   final case class Timing(name: String, throwaway: Double, runs: Seq[Double],
-      compiles: Seq[Long], classes: Seq[Long], error: Option[String]) {
+      compiles: Seq[Long], classes: Seq[Long], error: Option[String],
+      branches: Seq[String]) {
     /** The min of the successful timed runs: one flaky success still
       * yields a time. Negative only when every timed run failed. */
     def best: Double = {
@@ -152,7 +154,8 @@ object Bench {
     // a warm run with compiles > 0 evicted its own classes.
     def counts = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
       CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount)
-    case class Run(secs: Double, compiles: Long, classes: Long, error: Option[String])
+    case class Run(secs: Double, compiles: Long, classes: Long, error: Option[String],
+        branches: Seq[String])
     def once(): Run = {
       val (c0, k0) = counts
       val t0 = System.nanoTime()
@@ -160,10 +163,11 @@ object Bench {
         try { q().write.format("noop").mode("overwrite").save(); None }
         catch { case e: Throwable => Some(cause(e)) }
       val secs = (System.nanoTime() - t0) / 1e9
+      val branches = Materialize.drain().map { case (site, b) => s"$site:${b.name}" }
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       drainScratch(spark, name)
       val (c1, k1) = counts
-      Run(if (error.isEmpty) secs else -secs, c1 - c0, k1 - k0, error)
+      Run(if (error.isEmpty) secs else -secs, c1 - c0, k1 - k0, error, branches)
     }
     val w = once()
     val (a, b) = (once(), once())
@@ -173,11 +177,11 @@ object Bench {
     val timed = if (noisy || (a.secs < 0) != (b.secs < 0)) Seq(a, b, once()) else Seq(a, b)
     val all = w +: timed
     Timing(name, w.secs, timed.map(_.secs), all.map(_.compiles), all.map(_.classes),
-      timed.flatMap(_.error).headOption)
+      timed.flatMap(_.error).headOption, all.flatMap(_.branches).distinct.sorted)
   }
 
   /** `ExceptionClass: first line of the message`. */
-  private def cause(e: Throwable): String =
+  private[graft] def cause(e: Throwable): String =
     e.getClass.getName + ": " +
       Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
 
@@ -274,8 +278,10 @@ object Bench {
     * ("queries"), every timed run ("runs" — bench_diff reads their
     * spread so a delta inside it is never flagged), the throwaway
     * ("warm", kept out of "runs" because it is systematically cold),
-    * the codegen compiles of throwaway and timed runs ("compiles"), and
-    * for failed queries the cause ("errors").
+    * the codegen compiles of throwaway and timed runs ("compiles"),
+    * for failed queries the cause ("errors"), and for queries whose
+    * build took a [[Materialize]] branch the branches
+    * ("branches", `site:small|large,…`).
     *
     * The compact line exists because the driver captures only the
     * ~2000-char TAIL of stdout: its map holds the 40 slowest queries
@@ -290,6 +296,8 @@ object Bench {
     val failed = ts.filter(_.failed)
     val failedJson = failed.map(t => jsonStr(t.name)).sorted.mkString("[", ",", "]")
     val errors = lines(failed.map(t => t.name -> jsonStr(t.error.getOrElse(""))))
+    val branches = lines(ts.filter(_.branches.nonEmpty)
+      .map(t => t.name -> jsonStr(t.branches.mkString(","))))
     def perQuery(v: Timing => String) = lines(ts.map(t => t.name -> v(t)))
     val full =
       s"""{
@@ -308,7 +316,8 @@ object Bench {
          |  "queries": ${perQuery(t => fmt(t.best))},
          |  "runs": ${perQuery(_.runs.map(fmt).mkString("[", ", ", "]"))},
          |  "warm": ${perQuery(t => fmt(t.throwaway))},
-         |  "compiles": ${perQuery(_.compiles.mkString("[", ", ", "]"))}
+         |  "compiles": ${perQuery(_.compiles.mkString("[", ", ", "]"))},
+         |  "branches": $branches
          |}""".stripMargin
     val slowest40 = ts.sortBy(t => -math.abs(t.best)).take(40).sortBy(_.name)
       .map(t => jsonStr(t.name) + ":" + fmt(t.best)).mkString("{", ",", "}")

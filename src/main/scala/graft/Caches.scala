@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * negative, and — sharpest — a cache keyed only by the path silently
   * reuses STALE partials when the dir's contents change (an incremental
   * aggregate merged from a stale base is wrong with no error). The key
-  * here digests the canonical path PLUS each source table's file
+  * here digests the qualified path PLUS each source table's file
   * inventory (name, length, mtime), so any content change re-keys the
   * cache and re-materializes.
   *
@@ -36,28 +36,35 @@ import org.apache.spark.sql.SparkSession
   * that keeps repeated Verify/Bench runs amortized AND correct.
   */
 object Caches {
-  private def digest(kind: String, srcDir: String, tables: Seq[String]): String = {
+  /** Digests `kind`, the qualified source path and each table's file
+    * inventory, all through the Hadoop `FileSystem` of the qualified
+    * path, so a `file:` URI or a remote source digests its real files. */
+  private def digest(spark: SparkSession, kind: String, srcDir: String, tables: Seq[String]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    def feed(s: String): Unit = { md.update(s.getBytes("UTF-8")); md.update(0.toByte) }
-    val canon = new java.io.File(srcDir).getCanonicalPath
-    feed(kind); feed(canon)
+    def feed(s: String): Unit = { md.update(s.getBytes(UTF_8)); md.update(0.toByte) }
+    val src = new Path(srcDir)
+    val fs = fsOf(spark, src)
+    val root = fs.makeQualified(src)
+    feed(kind); feed(root.toString)
     for (t <- tables.sorted) {
-      val f = new java.io.File(canon, s"$t.parquet")
+      val p = new Path(root, s"$t.parquet")
       feed(t)
-      val files = if (f.isDirectory) f.listFiles().sortBy(_.getName).toSeq else Seq(f)
-      for (p <- files) { feed(p.getName); feed(p.length.toString); feed(p.lastModified.toString) }
+      val files = if (fs.exists(p)) fs.listStatus(p).sortBy(_.getPath.getName).toSeq else Nil
+      for (f <- files) {
+        feed(f.getPath.getName); feed(f.getLen.toString); feed(f.getModificationTime.toString)
+      }
     }
     md.digest().map("%02x".format(_)).mkString.take(16)
   }
 
   /** A per-(kind, source-content) directory under the JVM tmpdir. */
-  def dir(kind: String, srcDir: String, tables: Seq[String]): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_cache/${kind}_${digest(kind, srcDir, tables)}"
+  def dir(spark: SparkSession, kind: String, srcDir: String, tables: Seq[String]): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_cache/${kind}_${digest(spark, kind, srcDir, tables)}"
 
   /** A catalog-safe suffix for session-registered table names keyed the
     * same way (bucketed tables must re-register per source content). */
-  def tableSuffix(kind: String, srcDir: String, tables: Seq[String]): String =
-    digest(kind, srcDir, tables)
+  def tableSuffix(spark: SparkSession, kind: String, srcDir: String, tables: Seq[String]): String =
+    digest(spark, kind, srcDir, tables)
 
   private val buildLocks = new ConcurrentHashMap[String, Object]()
 
@@ -76,7 +83,7 @@ object Caches {
       build: String => Unit): String = {
     require(kind.matches(".*_v\\d+$"),
       s"store kind '$kind' must end in a logic-version tag (_vN)")
-    val dst = dir(kind, srcDir, tables)
+    val dst = dir(spark, kind, srcDir, tables)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(dst).getFileSystem(conf)
     val path = fs.makeQualified(new Path(dst))

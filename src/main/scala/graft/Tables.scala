@@ -130,34 +130,25 @@ object Tables {
 
   /** Fan-out for CPU-heavy per-row operators (hashing, vector math): a
     * small parquet arrives as one split, which would pin the whole
-    * computation to a single core. At lake scale the file-split planner
-    * provides this parallelism naturally — and there the repartition is
-    * NOT free insurance but a pure tax: a round-robin shuffle of the
-    * full payload (document text included, since pruning can't drop
-    * the columns the operator needs) plus Spark's
-    * sort-before-repartition pass over every row. Measured at sf100
-    * (decade 3, round 13): the unconditional repartition cost
-    * corpus_dsir_select two full-text shuffles per run. So fan out
-    * ONLY when the planned scan has fewer splits than cores; results
-    * are partition-layout-independent by design (every oracle is a
-    * hash compare over sorted output), so the branch is
-    * plan-conditional, never semantic.
+    * computation to a single core, so the Small side of
+    * [[Materialize.splits]] repartitions to the cores. At lake scale the
+    * file-split planner provides this parallelism, and the unconditional
+    * repartition cost corpus_dsir_select two full-text shuffles per run
+    * at sf100 (decade 3, round 13). Results are
+    * partition-layout-independent by design (every oracle is a hash
+    * compare over sorted output; `BranchParitySpec` runs both sides).
     *
-    * Gate caveat (adjudicated round 14): `df.rdd.getNumPartitions`
-    * forces physical planning (split enumeration, no job) at
+    * Gate caveat (adjudicated round 14): the split count is planned at
     * construction time, so the ANALYZED plan the impl gate fingerprints
-    * depends on this branch. The fingerprint is stable because the
-    * canonical gate fixture (sf0.001, ~6 k rows, a few KB per file) is
-    * single-split at any `maxPartitionBytes`/core count a gate machine
-    * could have — splits(1) < cores(≥2) always takes the repartition
-    * branch. A future canonical fixture MUST stay below the split
-    * threshold (one row-group, < maxPartitionBytes), else ImplGateSpec
-    * trips spuriously on machines with different layouts — the
-    * constraint is also pinned in CLAUDE.md's regeneration playbook. */
-  def fanout(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= p) df else df.repartition(p)
-  }
+    * depends on this branch. A future canonical fixture MUST stay below
+    * the split threshold (one row-group, < maxPartitionBytes), else
+    * ImplGateSpec trips spuriously on machines with different layouts —
+    * the constraint is also pinned in CLAUDE.md's regeneration
+    * playbook. */
+  def fanout(df: DataFrame): DataFrame =
+    if (Materialize.splits("fanout", df) == Materialize.Small)
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    else df
 }
 
 /** One oracle-checked operator: `name` keys `SparkEntry.queries`;

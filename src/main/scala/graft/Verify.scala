@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * errors.json, the cause of each query that failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -10,13 +11,17 @@ object Verify {
     val only = args.drop(2).toSet
     val spark = GraftSession.forRun(GraftSession.runCpus, sfDir)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    // query -> cause of its failure, written as errors.json so the
+    // oracle check can say why a query has no output
+    val errors = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> Bench.cause(e))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -35,6 +40,8 @@ object Verify {
       .filter { case (k, _) => only.isEmpty || only(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/errors.json"),
+      errors.toSeq.sorted.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     // Scala-side fingerprints (see PlanShapes.implHash): lets the gate
     // detect QueryDef fn edits that leave the oracle SQL untouched.
     // Always computed against the canonical SF so sweeps at any SF

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Parity, QueryDef, Tables}
+import graft.{Materialize, Parity, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -651,24 +651,14 @@ object Dedup {
     // [[shingleIdSets]] tripwire margin. The string-based oracles are
     // the deterministic cross-check at the gate SFs.
     //
-    // Checkpoint SMALL caches so the four consumers share one
-    // in-memory read (measured 8.8 → 2.6 s at sf0.1). PLAN-CONDITIONAL
-    // (the fanout precedent): a localCheckpoint re-stores the relation
-    // as row-oriented serialized blocks — at sf100 that block store is
-    // itself a disk eater — so past the threshold consumers pay the
-    // compressed columnar re-scans, the cluster-honest posture for a
-    // persisted shingle table. The canonical-fixture SF is far below
-    // the branch point, so the impl fingerprint is unaffected (same
-    // caveat as Tables.fanout).
+    // Checkpoint a Small store so the four consumers share one
+    // in-memory read (measured 8.8 → 2.6 s at sf0.1); a Large one is
+    // re-scanned as compressed parquet (see Materialize).
     val cached = raw
       .select(col("doc_id"), xxhash64(col("tk")).as("tk"))
-    // Hadoop FS probe (round-15 advisor): getContentSummary is
-    // null-safe where a recursive listFiles() walk is not, and it
-    // works on HDFS/S3A cache dirs like the rest of the path
-    // discovery since round 12. 0-on-error ⇒ checkpoint, the
-    // small-cache default.
-    val cacheBytes = graft.GraftSession.dirBytes(tokBase)
-    if (cacheBytes < (8L << 30)) cached.localCheckpoint() else cached
+    if (Materialize.bytes(spark, "shingleTok", tokBase, Materialize.TokenStoreLimit) ==
+        Materialize.Small) cached.localCheckpoint()
+    else cached
   }
 
   /** Per-doc shingle sets for the verify joins, as xxhash64 IDS rather

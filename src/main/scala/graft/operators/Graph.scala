@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Parity, QueryDef, Tables}
+import graft.{Materialize, Parity, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -107,34 +107,15 @@ object Graph {
 
   /** The shared edge relation, materialized for multi-consumer
     * operators (pagerank's 3 iterations, communities' 2, the recursive
-    * frontier). PLAN-CONDITIONAL localCheckpoint, the shingleTok
-    * precedent: a checkpoint re-stores the relation as row-oriented
-    * serialized blocks — ~3-4× the compressed columnar footprint, and
-    * at sf100 (~1.1 B edges) that block store is itself the disk eater
-    * that ENOSPC'd round 14 — so past the threshold consumers pay the
-    * compressed parquet re-scans instead, the cluster-honest posture
-    * for a persisted edge table. Canonical-SF caches are far below the
-    * branch point, so impl fingerprints are unaffected. */
+    * frontier): checkpointed when the edge store is Small, else its
+    * compressed parquet is re-scanned ([[Materialize]]). */
   private def edgesMaterialized(spark: SparkSession, dir: String): DataFrame = {
     val base = bipartiteEdgesStore(spark, dir)
     val e = read(spark, base)
-    if (checkpointGraph(base)) e.localCheckpoint() else e
+    if (Materialize.bytes(spark, "edges", base, Materialize.GraphLimit) == Materialize.Small)
+      e.localCheckpoint()
+    else e
   }
-
-  /** The graph-relation branch: localCheckpoint below 4 GB under `dir`,
-    * else keep (or persist) the relation on disk. SPARK_GRAFT_GRAPH_CKPT
-    * pins the branch for scale A/Bs (round 17, the fanout-gate
-    * precedent): the decade-3 α conflated data growth with the two SFs
-    * taking OPPOSITE branches, so the ladder needs a
-    * same-plan-both-points run. "on"/"off" force it; unset keeps the
-    * plan-conditional default (canonical-SF gate runs never set it, so
-    * impl fingerprints are unaffected). */
-  private def checkpointGraph(dir: String): Boolean =
-    sys.env.get("SPARK_GRAFT_GRAPH_CKPT") match {
-      case Some("on")  => true
-      case Some("off") => false
-      case _           => graft.GraftSession.dirBytes(dir) < (4L << 30)
-    }
 
   /** One PageRank iteration: dst-keyed contribution aggregation
     * (map-side partial sums), then the damped update over all nodes.
@@ -235,37 +216,24 @@ object Graph {
       .orderBy(col("side"), col("degree"))
   }
 
-  /** PLAN-CONDITIONAL materialization for shared graph relations
-    * (round 16, after two diagnosed sf100 failures): localCheckpoint
-    * stores row-oriented blocks ON-HEAP first — at sf100 the
-    * ~200 M-pair projection + oriented list filled the old-gen until
-    * a full-GC pause exceeded the 120 s heartbeat timeout,
-    * HeartbeatReceiver removed the (local-mode!) executor, and the
-    * context shut itself down — the same disease as the r14
-    * edge-checkpoint ENOSPC wearing a GC mask. Same branch rule as
-    * [[edgesMaterialized]]/shingleTok: materialize below the
-    * threshold (every gate/canonical SF ⇒ fingerprints unaffected).
-    * Round 17 (r16 VERDICT task 2): past the threshold the shared
-    * relations are no longer just re-derived (that shape ENOSPC'd at
-    * sf100 — re-deriving the projection lineage materialized more
-    * CONCURRENT shuffle stages than the box's scratch holds) but
-    * PERSISTED as write-once content-addressed parquet through
-    * [[graft.Caches.once]], whose `_vN` contract `kind` follows.
-    * Disk-backed columnar blocks replace the on-heap row block store
-    * (the GC bomb) AND cap the lineage each consumer re-runs at one
-    * parquet scan. On a cluster these ARE the persisted co-purchase /
-    * oriented-edge tables a graph pipeline keeps beside the facts.
-    * The branch is [[checkpointGraph]]'s. Shared by
-    * [[graphTriangles]] and [[graphKcore]] (round 18).
-    *
-    * Gate coverage: the publish mechanism is the one every other store
-    * uses, so the gate exercises it; the persisted BUILDS of these
-    * graph relations are not — the canonical-SF oracle gate takes the
-    * localCheckpoint side — so bump the kind's `_vN` with any change
-    * to the relation it names. */
+  /** A shared graph relation derived from `dir`'s lineitem, materialized
+    * once for its consumers ([[Materialize]]): checkpointed when `dir` is
+    * Small, else PERSISTED as write-once content-addressed parquet
+    * through [[graft.Caches.once]], whose `_vN` contract `kind` follows.
+    * The Large side does not fall back to re-deriving the relation
+    * (round 17, r16 VERDICT task 2): at sf100 re-deriving the projection
+    * lineage under each consumer ran more CONCURRENT shuffle stages than
+    * the box's scratch holds and hit ENOSPC, while one persisted copy
+    * caps each consumer's lineage at one parquet scan. On a cluster these
+    * ARE the persisted co-purchase / oriented-edge tables a graph
+    * pipeline keeps beside the facts. Shared by [[graphTriangles]],
+    * [[graphKcore]] and [[graphCopurchaseLift]] (round 18);
+    * `BranchParitySpec` runs both sides. Bump the kind's `_vN` with any
+    * change to the relation it names. */
   private def matGraphRel(spark: SparkSession, dir: String, kind: String)(
       df: => DataFrame): DataFrame =
-    if (checkpointGraph(dir)) df.localCheckpoint()
+    if (Materialize.bytes(spark, "matGraphRel", dir, Materialize.GraphLimit) == Materialize.Small)
+      df.localCheckpoint()
     else read(spark, graft.Caches.once(spark, kind, dir, Seq("lineitem"))(df.write.parquet(_)))
 
   /** The deterministically order-SAMPLED part co-purchase projection
@@ -306,8 +274,6 @@ object Graph {
     * via a 3-way union + hash-agg. Everything is exact integer work +
     * one rounded division ⇒ oracle-checked. */
   private def graphTriangles(spark: SparkSession, dir: String): DataFrame = {
-    def mat(df: => DataFrame, kind: String): DataFrame =
-      matGraphRel(spark, dir, kind)(df)
     val pairs = copurchasePairs(spark, dir)
     val deg = pairs.select(col("u").as("node"))
       .unionByName(pairs.select(col("v").as("node")))
@@ -320,11 +286,10 @@ object Graph {
     // materialize the oriented edge list ONCE: three consumers (both
     // wedge sides + the closure probe) would each re-run the
     // sample → self-join → distinct → degree-join lineage otherwise
-    // (plan-conditional — see `mat` above)
-    val oriented = mat(withDeg.select(
+    val oriented = matGraphRel(spark, dir, "trioriented_v1")(withDeg.select(
       when(uLower, col("u")).otherwise(col("v")).as("src"),
       when(uLower, col("v")).otherwise(col("u")).as("dst"),
-      when(uLower, col("dv")).otherwise(col("du")).as("ddst")), "trioriented_v1")
+      when(uLower, col("dv")).otherwise(col("du")).as("ddst")))
     val wedges = oriented.as("x").join(oriented.as("y"),
         col("x.src") === col("y.src") &&
           (col("x.ddst") < col("y.ddst") ||
@@ -372,25 +337,25 @@ object Graph {
     // round 1's induced subgraph is the full graph, so the first
     // restriction joins are the identity — start from the plain
     // degree count + threshold, and unroll the general round twice.
-    // PLAN-CONDITIONAL per-round checkpoint (round 19): the round body
-    // references `live` TWICE (the a-side and b-side induced-subgraph
+    // Per-round checkpoint on the Large side only (round 19): the round
+    // body references `live` TWICE (the a-side and b-side induced-subgraph
     // restrictions), and Spark has no DAG-level CSE, so the lazy form
     // re-derives round r−1's whole lineage under BOTH join legs —
     // subtree count DOUBLING per unrolled round (the lazy plan carries
-    // round-0's degree agg four times; 222 plan lines). Below the
-    // matGraphRel threshold the duplicated legs pipeline in parallel
-    // on idle cores and the checkpoint barrier measurably LOSES
+    // round-0's degree agg four times; 222 plan lines). On the Small
+    // side the duplicated legs pipeline in parallel on idle cores and
+    // the checkpoint barrier measurably LOSES
     // (adjacent A/B at sf0.1/32, equal canaries 12.6 s: lazy 2.99 s
     // warm-min vs checkpointed 3.29 — the graphPagerank/
     // verifiedPairsOf lesson), so bench/gate SFs stay lazy and impl
-    // fingerprints are unaffected. Past the threshold the duplicated
+    // fingerprints are unaffected. On the Large side the duplicated
     // work is 3 extra O(|E|) restriction joins per round over an
     // adjacency that no longer fits page cache — there the O(|V|)
     // (node, deg) survivor checkpoint (tiny at any SF) caps each
     // round's lineage at one pass, the cluster-honest posture.
-    val ckptRounds = graft.GraftSession.dirBytes(dir) >= (4L << 30)
+    val branch = Materialize.bytes(spark, "kcore", dir, Materialize.GraphLimit)
     def matLive(df: DataFrame): DataFrame =
-      if (ckptRounds) df.localCheckpoint() else df
+      if (branch == Materialize.Large) df.localCheckpoint() else df
     var live = matLive(adj.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= 2))
@@ -485,9 +450,7 @@ object Graph {
     // Materialized once (round 18): the sampled-distinct basket
     // projection previously re-ran its scan → md5 filter → distinct
     // lineage FOUR times (order count, item counts, both self-join
-    // legs). Same matGraphRel branch discipline as copurchasePairs —
-    // localCheckpoint at gate/bench SFs, write-once parquet past the
-    // threshold. Output unchanged; the count() barrier now reads the
+    // legs). Output unchanged; the count() barrier now reads the
     // materialized rows instead of re-deriving them.
     val li = matGraphRel(spark, dir, "liftli_v1")(lineitem(spark, dir)
       .filter(conv(substring(md5(concat(lit("tri:"), col("l_orderkey").cast("string"))),

@@ -43,8 +43,8 @@ object ScalePatterns {
     * every subsequent join (the standard layout for a 100 TB fact
     * store). The test suite asserts the exchange-free plan. */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val key = graft.Caches.tableSuffix("bucketed", dir, Seq("lineitem", "orders"))
-    val wh = graft.Caches.dir("bucketed", dir, Seq("lineitem", "orders"))
+    val key = graft.Caches.tableSuffix(spark, "bucketed", dir, Seq("lineitem", "orders"))
+    val wh = graft.Caches.dir(spark, "bucketed", dir, Seq("lineitem", "orders"))
     val li = s"graft_li_bucketed_$key"
     val od = s"graft_od_bucketed_$key"
     if (!spark.catalog.tableExists(li)) {

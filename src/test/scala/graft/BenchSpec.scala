@@ -65,4 +65,12 @@ class BenchSpec extends AnyFunSuite {
       assert(c.get("n_queries").asInt == 2 && c.get("failed").get(0).asText == "b_bad")
     } finally Locale.setDefault(saved)
   }
+
+  test("the record names the materialization branch each query's build took") {
+    // a 4-split range on local[4] is Large by split count
+    val ts = Seq(time("a_plain")(rows()), time("b_fanned")(Tables.fanout(rows())))
+    assert(ts.map(_.branches) == Seq(Nil, Seq("fanout:large")))
+    val r = new ObjectMapper().readTree(Bench.record(spark, TestSpark.sf, 1.5, 1.25, 1.125, ts)._1)
+    assert(r.get("branches").size == 1 && r.get("branches").get("b_fanned").asText == "fanout:large")
+  }
 }

@@ -528,7 +528,7 @@ class InvariantSpec extends AnyFunSuite {
     q("sim_ann_ivf").write.format("noop").mode("overwrite").save()
     // the store kind carries k, iters and the algorithm version (_v6)
     val f = new java.io.File(
-      Caches.dir("ivfcent_k10_i2_v6", sf, Seq("embeddings")), "centroids.csv")
+      Caches.dir(spark, "ivfcent_k10_i2_v6", sf, Seq("embeddings")), "centroids.csv")
     assert(f.exists(), "first invocation must publish the centroid store")
     val published = f.lastModified()
     q("sim_ann_ivf").write.format("noop").mode("overwrite").save()
@@ -969,7 +969,7 @@ class InvariantSpec extends AnyFunSuite {
       val f = new java.io.File(d)
       if (!f.isDirectory) 0 else f.listFiles().count(_.getName.endsWith(".parquet"))
     }
-    val base = Caches.dir("compact_v1", sf, Seq("orders"))
+    val base = Caches.dir(spark, "compact_v1", sf, Seq("orders"))
     val frag = parquetFiles(s"$base/fragmented")
     val packed = parquetFiles(s"$base/compacted")
     assert(frag == 64, s"fragmented layout should have 64 shards, got $frag")
@@ -1534,5 +1534,62 @@ class InvariantSpec extends AnyFunSuite {
         s"doc $id: permuted tile landed INSIDE ball 3 (hamming $h) — " +
           "the pairing would emit a structural non-dup")
     }
+  }
+
+  test("approx distinct counts lie within 3 sigma of their rsd 0.02 of the exact counts") {
+    val exact = Tables.lineitem(spark, sf).groupBy("l_returnflag")
+      .agg(countDistinct("l_partkey").as("parts"), countDistinct("l_orderkey").as("orders"))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val est = q("agg_approx_distinct").collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(est.keySet == exact.keySet)
+    for ((flag, (parts, orders)) <- exact; (e, n) <- Seq(est(flag)._1 -> parts, est(flag)._2 -> orders))
+      assert(math.abs(e - n) <= 3 * 0.02 * n, s"flag $flag: estimate $e vs exact $n")
+  }
+
+  test("the Bernoulli sample holds 0.1 n rows within 4 sigma, each a lineitem row") {
+    val li = Tables.lineitem(spark, sf)
+    val n = li.count().toDouble
+    val df = q("sample_bernoulli")
+    val k = df.count()
+    assert(math.abs(k - 0.1 * n) <= 4 * math.sqrt(n * 0.1 * 0.9), s"$k rows sampled of $n")
+    assert(df.join(li, Seq("l_orderkey", "l_linenumber", "l_quantity"), "left_anti").isEmpty)
+  }
+
+  test("each stratum's sample size lies within 4 sigma of its fraction of the stratum") {
+    val frac = Map("BUILDING" -> 0.2, "AUTOMOBILE" -> 0.5, "MACHINERY" -> 0.5,
+      "FURNITURE" -> 0.8, "HOUSEHOLD" -> 0.8)
+    val strata = Tables.customer(spark, sf).groupBy("c_mktsegment").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val got = q("sample_stratified").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got.keySet.subsetOf(strata.keySet))
+    for ((seg, n) <- strata) {
+      val (f, k) = (frac(seg), got.getOrElse(seg, 0L))
+      assert(math.abs(k - f * n) <= 4 * math.sqrt(n * f * (1 - f)), s"$seg: $k sampled of $n")
+    }
+  }
+
+  test("decode stub: its schema, one row per document, the same rows on two runs") {
+    val df = q("mm_decode_stub")
+    assert(df.schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+      "doc_id" -> "bigint", "n_bytes" -> "bigint", "width" -> "int", "height" -> "int",
+      "n_frames" -> "int", "format" -> "string"))
+    val rows = df.collect().toSeq
+    val docs = Tables.documents(spark, sf).select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(rows.map(_.getLong(0)).sorted == docs)
+    assert(q("mm_decode_stub").collect().toSeq == rows)
+  }
+
+  test("frame sample: its schema, every 5th frame of each image clip, the same rows on two runs") {
+    val df = q("mm_frame_sample")
+    assert(df.schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+      "doc_id" -> "bigint", "n_frames" -> "int", "frame_idx" -> "int", "frame_key" -> "string"))
+    val rows = df.collect().toSeq
+    val clips = q("mm_decode_stub").filter(col("format") === "img").collect()
+      .map(r => r.getLong(0) -> r.getInt(4)).toMap
+    val frames = rows.groupBy(_.getLong(0)).map { case (d, rs) => d -> rs.map(_.getInt(2)).sorted }
+    assert(frames == clips.map { case (d, n) => d -> (0 until n by 5) })
+    assert(rows.forall(r => r.getString(3) == s"${r.getLong(0)}:${r.getInt(2)}"))
+    assert(q("mm_frame_sample").collect().toSeq == rows)
   }
 }

@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * inferred once, later reads of the unchanged files start no Spark
   * job and analyze to the same plan as a plain read, and a changed
   * file set or reader conf is never served a stale schema. Its source
-  * scans also pin the one store publish path, [[Caches.once]], and the
-  * one epoch ingest path, `StreamingOps.epochIngest`. */
+  * scans also pin the one store publish path, [[Caches.once]], the
+  * one epoch ingest path, `StreamingOps.epochIngest`, and the one
+  * materialization policy, [[Materialize]]. */
 class ParquetReadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -26,12 +27,13 @@ class ParquetReadSpec extends AnyFunSuite {
   private def analyzed(df: DataFrame): String =
     PlanShapes.normalize(df.queryExecution.analyzed.toString)
 
+  private def files(d: java.io.File): Seq[java.io.File] =
+    d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+
   /** (path under src/main/scala, contents) of every main source file. */
   private lazy val sources: Seq[(String, String)] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repo root: ${root.getAbsolutePath}")
-    def files(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
     files(root).filter(_.getName.endsWith(".scala")).map { f =>
       root.toPath.relativize(f.toPath).toString ->
         new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
@@ -115,6 +117,20 @@ class ParquetReadSpec extends AnyFunSuite {
     assert(hits(parquetRead).map(_.takeWhile(_ != ':')).sorted ==
       Seq("graft/Tables.scala", "graft/Tables.scala"), hits(parquetRead))
     assert(hits(publish).filterNot(_.startsWith("graft/Caches.scala:")).isEmpty, hits(publish))
+  }
+
+  test("src/main has one materialization policy") {
+    // graft.Materialize is the only code that reads a size to pick a branch
+    val probe = """\bdirBytes\(|getNumPartitions|<< 30""".r
+    val ops = hits(probe).filter(_.startsWith("graft/operators/"))
+    assert(ops.isEmpty, ops)
+    val tables = hits("getNumPartitions".r).filter(_.startsWith("graft/Tables.scala"))
+    assert(tables.isEmpty, tables)
+    // the branch pin is the session conf spark.graft.branch, not an env var
+    val oldPin = "SPARK_GRAFT_GRAPH" + "_CKPT"
+    val pinned = files(new java.io.File("src"))
+      .filter(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains(oldPin))
+    assert(pinned.isEmpty, pinned)
   }
 
   test("src/main has one epoch ingest path and no scaladoc block stacked on another") {

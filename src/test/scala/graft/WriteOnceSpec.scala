@@ -16,16 +16,16 @@ class WriteOnceSpec extends AnyFunSuite {
     * store and any temp of it are deleted afterwards. */
   private def withStore(kind: String)(f: (String, String) => Unit): Unit = {
     val src = java.nio.file.Files.createTempDirectory("graft_write_once").toString
-    try f(src, Caches.dir(kind, src, Nil))
+    try f(src, Caches.dir(spark, kind, src, Nil))
     finally entries(kind, src).foreach(n => fs.delete(new Path(parent(kind, src), n), true))
   }
 
   private def fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def parent(kind: String, src: String): Path = new Path(Caches.dir(kind, src, Nil)).getParent
+  private def parent(kind: String, src: String): Path = new Path(Caches.dir(spark, kind, src, Nil)).getParent
 
   /** Names under graft_cache that belong to this store: itself or a temp. */
   private def entries(kind: String, src: String): Seq[String] = {
-    val name = new Path(Caches.dir(kind, src, Nil)).getName
+    val name = new Path(Caches.dir(spark, kind, src, Nil)).getName
     val dir = parent(kind, src)
     if (!fs.exists(dir)) Nil
     else fs.listStatus(dir).map(_.getPath.getName).filter(_.contains(name)).sorted.toSeq
@@ -109,6 +109,21 @@ class WriteOnceSpec extends AnyFunSuite {
       assert(builds.get() == 1)
       assert(counts.toArray.toSeq == Seq(100L, 100L))
     }
+  }
+
+  test("a file: URI source digests its real files: a touched table re-keys the store") {
+    val src = java.nio.file.Files.createTempDirectory("graft_write_once_uri")
+    try {
+      java.nio.file.Files.copy(java.nio.file.Paths.get(TestSpark.sf, "orders.parquet"),
+        src.resolve("orders.parquet"))
+      val uri = "file:" + src
+      def key(dir: String) = Caches.dir(spark, "wo_uri_v1", dir, Seq("orders"))
+      val before = key(uri)
+      assert(key(src.toString) == before, "a plain path and its file: URI name one store")
+      val table = new Path(src.toString, "orders.parquet")
+      fs.setTimes(table, fs.getFileStatus(table).getModificationTime + 60000L, -1L)
+      assert(key(uri) != before, "a changed table must re-key the store")
+    } finally fs.delete(new Path(src.toString), true)
   }
 
   test("a kind without a _vN logic-version tag is rejected") {

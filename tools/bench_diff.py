@@ -115,6 +115,17 @@ def main():
             for k in side["failed"]:
                 print(f"  {k}" + (f"  ({errors[k]})" if k in errors else ""))
 
+    # Materialization branches (graft.Materialize): a query whose build
+    # took another branch ran another plan, so its time moved for that
+    # reason. Records older than the "branches" map name none.
+    bn, bo = new.get("branches"), old.get("branches")
+    if bn is not None and bo is not None:
+        moved = sorted(k for k in set(qn) & set(qo) if bn.get(k) != bo.get(k))
+        if moved:
+            print("branches changed:")
+            for k in moved:
+                print(f"  {k}: {bo.get(k, '-')} -> {bn.get(k, '-')}")
+
     # Per-run spread (round 11): Bench records every raw run per query
     # in "runs"; a round-over-round delta inside the union of the two
     # sides' observed spreads is contention, not a regression, and is

@@ -69,6 +69,12 @@ def cell_eq(a, b):
         return a == b
     return a == b
 
+# query -> "ExceptionClass: message" for each query whose Verify run
+# failed; older Verify output has no errors.json
+errors = {}
+if os.path.exists(f"{OUT}/errors.json"):
+    errors = json.load(open(f"{OUT}/errors.json"))
+
 gate = {}
 if os.path.exists(GATE_LOG):
     gate = json.load(open(GATE_LOG))
@@ -79,7 +85,8 @@ for name, sql in sorted(oracle.items()):
     if not os.path.isdir(os.path.join(OUT, name)):
         # output never dumped (stale/partial verify dir) — not a
         # comparison failure: leave any recorded gate pass untouched
-        print(f"SKIP {name}: no output at {OUT}/{name}")
+        cause = f" ({errors[name]})" if name in errors else ""
+        print(f"SKIP {name}: no output at {OUT}/{name}{cause}")
         nskip += 1
         continue
     try:
